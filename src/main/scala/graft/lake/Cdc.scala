@@ -15,16 +15,32 @@ import org.apache.spark.sql.DataFrame
   * them so downstream pipelines consume incremental changes instead of
   * re-diffing snapshots.
   *
-  * Scale design: change files are written by executors in the same job
-  * shape as data files, sized by the changed-row count — a point UPDATE
-  * on a 100 TB table emits a few KB of CDC, never a table scan. Plain
-  * appends/overwrites write NO change files; their changes are derived
-  * from add/remove actions at read time (Delta does the same).
+  * Scale design: change files are written by executors, sized by the
+  * changed-row count — a point UPDATE on a 100 TB table emits a few KB
+  * of CDC, never a table scan. Plain appends/overwrites write NO change
+  * files; their changes are derived from add/remove actions at read time
+  * (Delta does the same).
+  *
+  * Routing (Delta's `__is_cdc` partition): a DV-path MERGE writes its
+  * change rows in the SAME job as its new data rows. One generator over
+  * the merge join emits both, tagged by the hidden [[KIND_COL]], and
+  * [[LakeTable.stageFilesAndChanges]] partitions the write on it first:
+  * files of the `true` partition move to `_change_data/` as CdcFiles,
+  * the rest are the commit's AddFiles. Change files keep one on-disk
+  * shape whichever way they were written — table columns plus an
+  * in-file `_change_type` — so every reader, old logs included, reads
+  * them unchanged. Routed data files carry an all-null `_change_type`
+  * that every scan ignores (each reads with the explicit table schema).
+  * Layouts whose dirs would strip table columns out of change files
+  * (identity partitions, buckets) and the other DML paths write change
+  * rows in a separate job through [[stage]].
   */
 object Cdc {
 
   val CDC_DIR = "_change_data"
   val CHANGE_TYPE = "_change_type"
+  /** hidden routing column of a merge write: true on change rows */
+  val KIND_COL = "__is_cdc"
   val PROP = "graft.enableChangeDataFeed"
 
   val INSERT = "insert"

@@ -1159,38 +1159,25 @@ final class LakeTable private (
     // path bitmaps exactly these, and multi-match ambiguity is detected
     // on them without generating row ids.
     //
-    // FUSED single pass (r14, VERDICT r13 #4): on the DV path without a
-    // change feed, the claims aggregation rides the new-rows WRITE job
-    // as an observed metric (Dataset.observe + MergeClaimsAgg), so the
-    // join is computed exactly once with NO cache — instead of
-    // cache-materialize (pass 1: claims aggregation) + cache re-read
-    // (pass 2: new-rows projection). Observed metrics are exactly-once
-    // per partition (the scheduler accepts only the first successful
-    // completion), and CollectMetrics is a pushdown barrier, so the
-    // keep-filter above it cannot drop rows from the claims. The CDC
-    // path keeps the cache: its per-clause change images re-read the
-    // join several times; the CoW path keeps it for the same reason
-    // (ambiguity probe + full rewrite).
-    val fuseClaims = useDvs && !cdfEnabled(snap)
+    // DV path: ONE uncached pass. The claims aggregation rides the
+    // staging WRITE job as an observed metric (Dataset.observe +
+    // [[MergeClaimsAgg]]), so the join is computed exactly once. Partials
+    // are keyed by partition id, so a retried map stage cannot
+    // double-count, and CollectMetrics is a pushdown barrier, so the
+    // filters above it cannot drop rows from the claims. On a change-feed
+    // table the same write also carries the change rows ([[mergeRows]]):
+    // stageFiles routes them to `_change_data/` by a hidden kind column.
+    // Identity-partitioned and bucketed tables, whose layout would strip
+    // columns out of change files, write the change rows in a second
+    // uncached pass over the join. The copy-on-write path caches the
+    // join: its ambiguity probe, rewrite and change rows each read it.
+    val cdf = cdfEnabled(snap)
     val tRows = readFilesInternal(snap, touched, withMeta = true)
       .withColumn("__tgt", lit(true))
     val sRows = src.withColumn("__src", lit(true))
     val joinedBase = tRows.alias("t").join(sRows.alias("s"), condition, "full_outer")
-    val joined = if (fuseClaims) joinedBase else joinedBase.cache()
+    val joined = if (useDvs) joinedBase else joinedBase.cache()
     try {
-      def assemble(assigns: Map[String, Column], fromSource: Boolean): Seq[Column] =
-        tgtSchema.fields.map { f =>
-          val c = assigns.get(f.name) match {
-            case Some(v) => v
-            case None =>
-              if (fromSource) {
-                srcByLower.get(f.name.toLowerCase)
-                  .map(c => col(s"s.$c")).getOrElse(lit(null))
-              } else col(s"t.${f.name}")
-          }
-          c.cast(f.dataType).as(f.name)
-        }.toSeq
-
       // SQL cascade: tag each row with the index of the first clause whose
       // condition holds (-1 = none)
       def actionExpr(clauses: Seq[MergeClause]): Column =
@@ -1199,56 +1186,49 @@ final class LakeTable private (
             when(coalesceFalse(c.condition.getOrElse(lit(true))), lit(i))
               .otherwise(acc)
           }
-      def tag(rows: DataFrame, clauses: Seq[MergeClause]): DataFrame =
-        rows.withColumn("__action", actionExpr(clauses))
 
       def starAssigns: Map[String, Column] =
         tgtSchema.fieldNames.toSeq.flatMap(f =>
           srcByLower.get(f.toLowerCase).map(c => f -> col(s"s.$c"))).toMap
 
-      /** ALL new row versions in ONE pass over the cached join: each row
-        * is tagged with its group (0 matched / 1 by-source / 2 not
-        * matched) and first-applicable clause index, kept iff that pair
-        * emits (update → post-image, insert → source projection, CoW also
-        * keeps unclaimed target rows as-is), and projected per field with
-        * one CASE chain over the emitting pairs. The per-clause
-        * filter+union shape scanned the cache once per clause; this scans
-        * it once per MERGE — per-commit cost at 100 TB tracks the join,
-        * not the clause count. (VERDICT r2 #7)
-        */
-      def newRowsOnePass(includeKept: Boolean,
-          base: DataFrame = joined): Option[DataFrame] = {
-        case class Emit(g: Int, i: Int, assigns: Map[String, Column],
-          fromSource: Boolean)
-        def emitsOf(g: Int, clauses: Seq[MergeClause]): Seq[Emit] =
-          clauses.zipWithIndex.collect {
-            case (MergeClause.Update(_, as), i) =>
-              Emit(g, i, if (as.isEmpty) starAssigns else as, fromSource = false)
-            case (MergeClause.Insert(_, as), i) =>
-              Emit(g, i, as, fromSource = true)
-          }
-        // unclaimed (action -1) matched/by-source rows survive a rewrite;
-        // unclaimed source-only rows are dropped in every mode
-        val emits = emitsOf(0, matchedClauses) ++
-          emitsOf(1, notMatchedBySourceClauses) ++
-          emitsOf(2, notMatchedClauses) ++
-          (if (includeKept)
-            Seq(Emit(0, -1, Map.empty, fromSource = false),
-              Emit(1, -1, Map.empty, fromSource = false))
-          else Seq.empty)
-        if (emits.isEmpty) return None
-        val isMatched = col("t.__tgt").isNotNull && col("s.__src").isNotNull
-        val isTgtOnly = col("t.__tgt").isNotNull && col("s.__src").isNull
-        val tagged = base
-          .withColumn("__g", when(isMatched, 0).when(isTgtOnly, 1).otherwise(2))
-          .withColumn("__a",
-            when(isMatched, actionExpr(matchedClauses))
-              .when(isTgtOnly, actionExpr(notMatchedBySourceClauses))
-              .otherwise(actionExpr(notMatchedClauses)))
-        val keep = emits.map(e => col("__g") === e.g && col("__a") === e.i)
-          .reduce(_ || _)
-        val fields = tgtSchema.fields.map { f =>
-          emits.foldRight(lit(null).cast(f.dataType)) { (e, acc) =>
+      // each join row's group (0 matched / 1 by-source / 2 not matched)
+      // and the first applicable clause within it
+      val isMatched = col("t.__tgt").isNotNull && col("s.__src").isNotNull
+      val isTgtOnly = col("t.__tgt").isNotNull && col("s.__src").isNull
+      val actionOf = when(isMatched, actionExpr(matchedClauses))
+        .when(isTgtOnly, actionExpr(notMatchedBySourceClauses))
+        .otherwise(actionExpr(notMatchedClauses))
+      def tagged(base: DataFrame): DataFrame = base
+        .withColumn("__g", when(isMatched, 0).when(isTgtOnly, 1).otherwise(2))
+        .withColumn("__a", actionOf)
+
+      /** A (group, clause) pair that emits a new row version: update →
+        * post-image, insert → source projection; clause -1 keeps an
+        * unclaimed target row as-is (copy-on-write only). */
+      case class Emit(g: Int, i: Int, assigns: Map[String, Column],
+          fromSource: Boolean) {
+        def fires: Column = col("__g") === g && col("__a") === i
+      }
+      def emitsOf(g: Int, clauses: Seq[MergeClause]): Seq[Emit] =
+        clauses.zipWithIndex.collect {
+          case (MergeClause.Update(_, as), i) =>
+            Emit(g, i, if (as.isEmpty) starAssigns else as, fromSource = false)
+          case (MergeClause.Insert(_, as), i) =>
+            Emit(g, i, as, fromSource = true)
+        }
+      val emits = emitsOf(0, matchedClauses) ++
+        emitsOf(1, notMatchedBySourceClauses) ++ emitsOf(2, notMatchedClauses)
+      val keptEmits =
+        Seq(Emit(0, -1, Map.empty, fromSource = false),
+          Emit(1, -1, Map.empty, fromSource = false))
+
+      /** Per target field, ONE CASE chain over the emitting pairs. The
+        * per-clause filter+union shape scanned the join once per clause;
+        * this reads it once per MERGE — per-commit cost at 100 TB tracks
+        * the join, not the clause count. (VERDICT r2 #7) */
+      def newFields(es: Seq[Emit]): Seq[Column] =
+        tgtSchema.fields.map { f =>
+          es.foldRight(lit(null).cast(f.dataType)) { (e, acc) =>
             val v = e.assigns.get(f.name) match {
               case Some(c) => c
               case None =>
@@ -1257,150 +1237,52 @@ final class LakeTable private (
                     .map(c => col(s"s.$c")).getOrElse(lit(null))
                 else col(s"t.${f.name}")
             }
-            when(col("__g") === e.g && col("__a") === e.i, v.cast(f.dataType))
-              .otherwise(acc)
+            when(e.fires, v.cast(f.dataType)).otherwise(acc)
           }.as(f.name)
         }.toSeq
-        Some(tagged.where(keep).select(fields: _*))
+
+      /** The new row versions of `es`, or None if no pair emits. */
+      def newRows(es: Seq[Emit], base: DataFrame): Option[DataFrame] =
+        if (es.isEmpty) None
+        else Some(tagged(base).where(es.map(_.fires).reduce(_ || _))
+          .select(newFields(es): _*))
+
+      /** New row versions AND change rows from ONE generator over the
+        * join: per join row up to three structs — the new row version,
+        * the old image (`update_preimage` / `delete`) and the new image
+        * (`update_postimage` / `insert`) — flattened by `inline`. A union
+        * of per-clause filtered branches would re-run the join, and
+        * re-apply an observed metric, once per branch. Columns: the table
+        * columns, `_change_type` (null on data rows) and the hidden
+        * [[Cdc.KIND_COL]] (true on change rows). */
+      def mergeRows(base: DataFrame): DataFrame = {
+        val names = tgtSchema.fieldNames.toSeq.zipWithIndex
+        val flat = tagged(base).select((Seq(
+          emits.map(_.fires).reduceOption(_ || _).getOrElse(lit(false)).as("__new"),
+          (col("__g") < 2 && col("__a") >= 0).as("__old"),
+          (col("__g") === 2).as("__ins")) ++
+          newFields(emits).zip(names).map { case (c, (_, i)) => c.as(s"__n$i") } ++
+          names.map { case (n, i) => col(s"t.$n").as(s"__o$i") }): _*)
+        def image(present: String, prefix: String, changeType: Column,
+            isChange: Boolean): Column =
+          when(col(present), struct(names.map { case (n, i) => col(s"$prefix$i").as(n) } ++
+            Seq(changeType.as(Cdc.CHANGE_TYPE), lit(isChange).as(Cdc.KIND_COL)): _*))
+        flat.select(inline(filter(array(
+          image("__new", "__n", lit(null).cast(StringType), isChange = false),
+          image("__old", "__o",
+            when(col("__new"), lit(Cdc.UPDATE_PRE)).otherwise(lit(Cdc.DELETE)),
+            isChange = true),
+          image("__new", "__n",
+            when(col("__ins"), lit(Cdc.INSERT)).otherwise(lit(Cdc.UPDATE_POST)),
+            isChange = true)), _.isNotNull)))
       }
-
-      val matchedRows = joined.where(col("t.__tgt").isNotNull && col("s.__src").isNotNull)
-      val targetOnly = joined.where(col("t.__tgt").isNotNull && col("s.__src").isNull)
-      val sourceOnly = joined.where(col("t.__tgt").isNull && col("s.__src").isNotNull)
-
-      val matchedT = tag(matchedRows, matchedClauses)
-      val bySrcT = tag(targetOnly, notMatchedBySourceClauses)
-      val srcT = tag(sourceOnly, notMatchedClauses)
-
-      // DV path: ONE pass decides BOTH multi-match ambiguity and the
-      // claimed old row versions (the bitmap input). The claim bitmaps
-      // are built ON EXECUTORS ([[MergeClaimsAgg]] fused / [[DvAgg]]
-      // unfused) and the driver receives one (file, bitmap blob,
-      // maxMatches) record per affected FILE — never a row per claimed
-      // target row. The CoW path never collects claims to the driver,
-      // so it keeps a short-circuit ambiguity probe instead.
-      val matchedCol = col("t.__tgt").isNotNull && col("s.__src").isNotNull
-      val tgtOnlyCol = col("t.__tgt").isNotNull && col("s.__src").isNull
-      def claimsCols = Seq(
-        coalesce(col("t.__dv_path"), lit("")),
-        coalesce(col("t.__dv_idx"), lit(-1L)),
-        matchedCol,
-        when(matchedCol, actionExpr(matchedClauses))
-          .when(tgtOnlyCol, actionExpr(notMatchedBySourceClauses))
-          .otherwise(lit(-1)))
-      // fused path only: the new-rows AddFiles, staged by the same job
-      // that observed the claims (on the ambiguity error path below the
-      // staged files stay uncommitted — vacuum-reapable orphans, the
-      // same as any failed commit)
-      var fusedAppendedAdds: Option[Seq[AddFile]] = None
-      val claimsByPath: Map[String, MergeFileClaims] =
-        if (!useDvs) Map.empty
-        else if (fuseClaims) {
-          // only register the observation when some clause actually
-          // emits rows (update/insert) — otherwise the observed plan
-          // never executes and the registered listener would leak
-          val hasEmits = (matchedClauses ++ notMatchedBySourceClauses ++
-            notMatchedClauses).exists {
-            case _: MergeClause.Update | _: MergeClause.Insert => true
-            case _ => false
-          }
-          val blob: Array[Byte] = if (hasEmits) {
-            val obs = new org.apache.spark.sql.Observation()
-            val observed = joined.observe(obs,
-              MergeClaimsAgg.claims(claimsCols: _*).as("__claims"))
-            // the single pass: write new rows, claims fall out as the
-            // observed metric. The plan contains the merge join, so
-            // stageFiles never rebinds it away from the session the
-            // observation listens on.
-            fusedAppendedAdds = Some(LakeTable.stageFiles(spark, path,
-              newRowsOnePass(includeKept = false, base = observed).get,
-              tgtSchema, snap.metaData.partitionColumns,
-              Bucketing.specOf(snap.metaData), Constraints.of(snap.metaData),
-              snap.metaData.properties))
-            obs.get("__claims").asInstanceOf[Array[Byte]]
-          } else // delete-only clauses: one dedicated uncached pass
-            joined.agg(MergeClaimsAgg.claims(claimsCols: _*).as("__claims"))
-              .head().getAs[Array[Byte]](0)
-          val m = MergeClaimsAgg.decode(blob)
-          DmlMetrics.lastIdentityRowsCollected.set(m.size.toLong)
-          m
-        } else {
-          val rows = joined.where(col("t.__tgt").isNotNull)
-            .select(col("t.__dv_path").as("__p"), col("t.__dv_idx").as("__i"),
-              col("s.__src").isNotNull.as("__m"),
-              when(col("s.__src").isNotNull, actionExpr(matchedClauses))
-                .otherwise(actionExpr(notMatchedBySourceClauses)).as("__a"))
-            .groupBy("__p", "__i")
-            .agg(count(when(col("__m"), lit(1))).as("__matches"),
-              max(col("__a")).as("__act"))
-            .where(col("__matches") > 1 || col("__act") >= 0)
-            .groupBy("__p")
-            .agg(DvAgg.bitmap(
-                when(col("__act") >= 0, col("__i")).otherwise(lit(-1L))).as("__bm"),
-              max(col("__matches")).as("__mm"),
-              max(when(col("__matches") > 1, col("__i"))).as("__mmIdx"))
-            .collect()
-          DmlMetrics.lastIdentityRowsCollected.set(rows.length.toLong)
-          rows.map(r => r.getAs[String]("__p") -> MergeFileClaims(
-            r.getAs[Array[Byte]]("__bm"), r.getAs[Long]("__mm"),
-            if (r.isNullAt(3)) -1L else r.getLong(3))).toMap
-        }
-      if (useDvs) {
-        if (matchedClauses.nonEmpty) {
-          claimsByPath.find(_._2.maxMatches > 1).foreach { case (p, c) =>
-            throw new IllegalArgumentException(
-              "merge: a target row matches multiple source rows (e.g. row " +
-                s"${c.maxMatchesIdx} of $p " +
-                s"matched ${c.maxMatches} times); make the " +
-                "condition more specific")
-          }
-        }
-      } else if (matchedClauses.nonEmpty) {
-        val dupes = joined.where(col("t.__tgt").isNotNull && col("s.__src").isNotNull)
-          .groupBy(col("t.__dv_path"), col("t.__dv_idx"))
-          .count().where(col("count") > 1).limit(1).count()
-        require(dupes == 0L,
-          "merge: a target row matches multiple source rows; make the condition more specific")
-      }
-
-      val newRows: Option[DataFrame] =
-        if (fuseClaims) None // fused: already staged with the claims pass
-        else newRowsOnePass(includeKept = false)
-
-      /** Change-data rows for one tagged frame: update clauses emit a
-        * pre/post image pair, deletes the old row, inserts the new one. */
-      def cdcFor(tagged: DataFrame, clauses: Seq[MergeClause]): Seq[DataFrame] =
-        clauses.zipWithIndex.flatMap {
-          case (MergeClause.Update(_, as), i) =>
-            val effective =
-              if (as.isEmpty)
-                tgtSchema.fieldNames.toSeq.flatMap(f =>
-                  srcByLower.get(f.toLowerCase).map(c => f -> col(s"s.$c"))).toMap
-              else as
-            val hit = tagged.where(col("__action") === i)
-            Seq(hit.select(assemble(Map.empty, fromSource = false): _*)
-                .withColumn(Cdc.CHANGE_TYPE, lit(Cdc.UPDATE_PRE)),
-              hit.select(assemble(effective, fromSource = false): _*)
-                .withColumn(Cdc.CHANGE_TYPE, lit(Cdc.UPDATE_POST)))
-          case (_: MergeClause.Delete, i) =>
-            Seq(tagged.where(col("__action") === i)
-              .select(assemble(Map.empty, fromSource = false): _*)
-              .withColumn(Cdc.CHANGE_TYPE, lit(Cdc.DELETE)))
-          case (MergeClause.Insert(_, as), i) =>
-            Seq(tagged.where(col("__action") === i)
-              .select(assemble(as, fromSource = true): _*)
-              .withColumn(Cdc.CHANGE_TYPE, lit(Cdc.INSERT)))
-        }
-
-      val cdcActions: Seq[Action] =
-        if (!cdfEnabled(snap)) Seq.empty
-        else {
-          val pieces = cdcFor(matchedT, matchedClauses) ++
-            cdcFor(bySrcT, notMatchedBySourceClauses) ++
-            cdcFor(srcT, notMatchedClauses)
-          if (pieces.isEmpty) Seq.empty
-          else Cdc.stage(path, pieces.reduce(_ unionByName _)).map(Action.of)
-        }
+      /** Only the change rows of [[mergeRows]], in change-file shape:
+        * table columns (with their field ids, as routed change files
+        * carry them) plus `_change_type`. */
+      def changeRows(base: DataFrame): DataFrame =
+        mergeRows(base).where(col(Cdc.KIND_COL)).select(
+          tgtSchema.fields.map(f => col(f.name).as(f.name, f.metadata)).toSeq :+
+            col(Cdc.CHANGE_TYPE): _*)
 
       val propsActions: Seq[Action] =
         if (propsDelta.isEmpty) Seq.empty
@@ -1408,10 +1290,19 @@ final class LakeTable private (
           properties = snap.metaData.properties ++ propsDelta)))
 
       if (!useDvs) {
-        // classic copy-on-write: rewrite every candidate file (kept rows
-        // included — always a Some, since includeKept adds emits)
-        val result = newRowsOnePass(includeKept = true).get
-        rewrite(snap, touched, result, "MERGE",
+        // classic copy-on-write over the cached join: a short-circuit
+        // ambiguity probe, then rewrite every candidate file (kept rows
+        // included, so the rewrite frame always exists)
+        if (matchedClauses.nonEmpty) {
+          val dupes = joined.where(isMatched)
+            .groupBy(col("t.__dv_path"), col("t.__dv_idx"))
+            .count().where(col("count") > 1).limit(1).count()
+          require(dupes == 0L,
+            "merge: a target row matches multiple source rows; make the condition more specific")
+        }
+        val cdcActions =
+          if (cdf) Cdc.stage(path, changeRows(joined)).map(Action.of) else Seq.empty
+        rewrite(snap, touched, newRows(emits ++ keptEmits, joined).get, "MERGE",
           Map("condition" -> condition.toString),
           extra = cdcActions ++ propsActions,
           constraints = Constraints.of(snap.metaData))
@@ -1419,9 +1310,60 @@ final class LakeTable private (
       }
 
       // ---- deletion-vector path ----------------------------------------
+      // The claim bitmaps are built ON EXECUTORS and the driver receives
+      // one (file, bitmap blob, maxMatches) record per affected FILE —
+      // never a row per claimed target row. Files staged by an ambiguous
+      // merge stay uncommitted (vacuum-reapable orphans, like any failed
+      // commit).
+      val claimsCol = MergeClaimsAgg.claims(
+        coalesce(col("t.__dv_path"), lit("")), coalesce(col("t.__dv_idx"), lit(-1L)),
+        isMatched, actionOf).as("__claims")
+      val routeChanges = cdf && Bucketing.specOf(snap.metaData).isEmpty &&
+        !PartitionTransforms.parseAll(snap.metaData.partitionColumns)
+          .exists(_.isInstanceOf[PartitionTransforms.Identity])
+      def stage(df: DataFrame, withChanges: Boolean) =
+        LakeTable.stageFilesAndChanges(spark, path, df, tgtSchema,
+          snap.metaData.partitionColumns, Bucketing.specOf(snap.metaData),
+          Constraints.of(snap.metaData), snap.metaData.properties, withChanges)
+      val (claimsBlob, appendedAdds, cdcFiles) =
+        if (emits.isEmpty && !cdf) {
+          // delete-only clauses and no change feed: nothing to write, so
+          // the claims take one dedicated uncached aggregation pass
+          (joined.agg(claimsCol).head().getAs[Array[Byte]](0),
+            Seq.empty[AddFile], Seq.empty[CdcFile])
+        } else {
+          // the single pass: stage the new rows (and change rows), claims
+          // fall out as the observed metric. Every branch below runs a
+          // write over `observed`, so the observation always completes;
+          // the plan contains the merge join, so stageFiles never rebinds
+          // it away from the session the observation listens on.
+          val obs = new org.apache.spark.sql.Observation()
+          val observed = joined.observe(obs, claimsCol)
+          val (adds, cdcs) =
+            if (routeChanges) stage(mergeRows(observed), withChanges = true)
+            else {
+              val adds = newRows(emits, observed)
+                .map(stage(_, withChanges = false)._1).getOrElse(Seq.empty)
+              (adds, if (!cdf) Seq.empty
+                else Cdc.stage(path, changeRows(if (emits.isEmpty) observed else joined)))
+            }
+          (obs.get("__claims").asInstanceOf[Array[Byte]], adds, cdcs)
+        }
+      val claimsByPath = MergeClaimsAgg.decode(claimsBlob)
+      DmlMetrics.lastIdentityRowsCollected.set(claimsByPath.size.toLong)
+      if (matchedClauses.nonEmpty) {
+        claimsByPath.find(_._2.maxMatches > 1).foreach { case (p, c) =>
+          throw new IllegalArgumentException(
+            "merge: a target row matches multiple source rows (e.g. row " +
+              s"${c.maxMatchesIdx} of $p " +
+              s"matched ${c.maxMatches} times); make the " +
+              "condition more specific")
+        }
+      }
+
       // claimed old row versions: every matched/by-source row a clause
       // applied to (update → superseded, delete → gone) — already
-      // aggregated into per-file bitmaps by the identity job above
+      // aggregated into per-file bitmaps by the claims pass above
       val byAbs = touched.map(f => absPath(f) -> f.path).toMap
       val claimedByFile: Map[String, org.roaringbitmap.longlong.Roaring64Bitmap] =
         claimsByPath.flatMap { case (p, c) =>
@@ -1468,18 +1410,11 @@ final class LakeTable private (
             props = snap.metaData.properties)
         }
 
-      val appendedAdds: Seq[AddFile] = fusedAppendedAdds.getOrElse(newRows
-        .map(nr => LakeTable.stageFiles(spark, path, nr,
-          tgtSchema, snap.metaData.partitionColumns,
-          Bucketing.specOf(snap.metaData), Constraints.of(snap.metaData),
-          snap.metaData.properties))
-        .getOrElse(Seq.empty))
-
       val outputRows = appendedAdds.flatMap(_.stats.map(_.numRecords)).sum
       val removes = (fullMatch ++ dvTargets ++ rewriteTargets)
         .map(f => Action.of(RemoveFile(f.path, now, f.partitionValues)))
       val adds = (dvAdds ++ rewriteAdds ++ appendedAdds).map(Action.of)
-      val actions = propsActions ++ removes ++ adds ++ cdcActions :+
+      val actions = propsActions ++ removes ++ adds ++ cdcFiles.map(Action.of) :+
         Action.of(CommitInfo(now, "MERGE",
           Map("condition" -> condition.toString,
             "deletionVectors" -> dvTargets.size.toString,
@@ -1489,7 +1424,7 @@ final class LakeTable private (
           numOutputRows = outputRows))
       commitWithRetry(snap.version, actions, rebaseable = false)
     } finally {
-      joined.unpersist()
+      if (!useDvs) joined.unpersist()
       // release a materialized non-deterministic source promptly (an
       // exception before this try leaves it to Spark's ContextCleaner,
       // which unpersists the unreferenced checkpoint RDD on GC)
@@ -2984,7 +2919,31 @@ object LakeTable {
       partitionCols: Seq[String],
       bucketSpec: Option[Bucketing.Spec] = None,
       constraints: Map[String, String] = Map.empty,
-      props: Map[String, String] = Map.empty): Seq[AddFile] = {
+      props: Map[String, String] = Map.empty): Seq[AddFile] =
+    stageFilesAndChanges(spark, tablePath, df0, schema, partitionCols,
+      bucketSpec, constraints, props, withChanges = false)._1
+
+  /** [[stageFiles]] that can also stage change rows in the SAME write
+    * (Delta's `__is_cdc` routing). With `withChanges`, `df0` carries
+    * `_change_type` and the hidden [[Cdc.KIND_COL]] besides the table
+    * columns; the kind column leads the partitionBy order, files of its
+    * `true` partition move to `_change_data/` and return as CdcFiles
+    * (zero-row parts dropped, as [[Cdc.stage]] does), the rest return
+    * as AddFiles. Data files then carry an all-null `_change_type`,
+    * which every scan ignores: each reads with the explicit table
+    * schema. Only for layouts whose dirs strip no table column: no
+    * identity partitions, no buckets.
+    */
+  private[lake] def stageFilesAndChanges(
+      spark: SparkSession,
+      tablePath: String,
+      df0: DataFrame,
+      schema: StructType,
+      partitionCols: Seq[String],
+      bucketSpec: Option[Bucketing.Spec],
+      constraints: Map[String, String],
+      props: Map[String, String],
+      withChanges: Boolean): (Seq[AddFile], Seq[CdcFile]) = {
     // CHECK enforcement rides the write plan itself — new-row paths pass
     // the table's constraints; pure reorganizations (compact, rebucket,
     // survivor rewrites) skip the re-validation of already-valid rows
@@ -3012,10 +2971,13 @@ object LakeTable {
       case PartitionTransforms.Identity(c) => c
       case t: PartitionTransforms.Transform => t.dirName
     }
+    // (change rows get a null dir value: they all leave for the flat
+    // `_change_data/`, one file per write task)
     val df2t = pFields.foldLeft(df2) {
       case (d, t: PartitionTransforms.Transform) =>
+        val dir = PartitionTransforms.column(t, schema(t.col).dataType)
         d.withColumn(t.dirName,
-          PartitionTransforms.column(t, schema(t.col).dataType))
+          if (withChanges) when(!col(Cdc.KIND_COL), dir) else dir)
       case (d, _) => d
     }
     // bucketed layout: route rows into `__bucket=K/` staging dirs by the
@@ -3028,6 +2990,10 @@ object LakeTable {
           layoutCols :+ Bucketing.BUCKET_DIR_COL)
       case None => (df2t, layoutCols)
     }
+    require(!withChanges || bucketSpec.isEmpty &&
+      pFields.forall(_.isInstanceOf[PartitionTransforms.Transform]),
+      "change rows cannot share a write with identity partitions or buckets")
+    val routedCols = if (withChanges) Cdc.KIND_COL +: writeCols else writeCols
     // AQE only ever improves exchanges it may re-plan: join/aggregate/
     // window shuffles (skew split, strategy switch) and
     // partition-count-free repartitions (coalescing). A staging plan
@@ -3067,7 +3033,7 @@ object LakeTable {
     // own. Oversized tasks overflow their hash buffer and fall back to
     // the classic read-side build per file.
     val bloomFields = BloomIndex.indexedFields(props, dataSchema)
-    val fuseBloom = bloomFields.nonEmpty && writeCols.isEmpty &&
+    val fuseBloom = bloomFields.nonEmpty && routedCols.isEmpty &&
       bucketSpec.isEmpty && spark.sessionState.conf.maxRecordsPerFile <= 0 &&
       !spark.conf.getOption("spark.graft.bloom.fused").exists(
         _.trim.equalsIgnoreCase("false"))
@@ -3087,21 +3053,34 @@ object LakeTable {
     }
     val writer = writeDf.write.mode("overwrite")
     graft.util.Prof(s"stage.write $tablePath") {
-      (if (writeCols.nonEmpty) writer.partitionBy(writeCols: _*) else writer)
+      (if (routedCols.nonEmpty) writer.partitionBy(routedCols: _*) else writer)
         .parquet(staging.toString)
     }
 
     val root = Paths.get(tablePath)
     val moved = scala.collection.mutable.ArrayBuffer[(String, Path)]()
+    val changed = scala.collection.mutable.ArrayBuffer[Path]()
     def walk(dir: Path): Unit =
       graft.util.Fs.listDir(dir).foreach { p =>
         if (Files.isDirectory(p)) walk(p)
         else if (p.getFileName.toString.endsWith(".parquet")) {
-          val rel = staging.relativize(p).toString
-          val dest = root.resolve(rel)
-          Files.createDirectories(dest.getParent)
-          Files.move(p, dest)
-          moved += rel -> dest
+          val staged = staging.relativize(p).toString
+          if (withChanges && staged.startsWith(s"${Cdc.KIND_COL}=true/")) {
+            // `cdc-` names (Delta's) keep them apart from the same job's
+            // data parts, which share the task's part-file names
+            val dest = root.resolve(Cdc.CDC_DIR)
+              .resolve(p.getFileName.toString.replaceFirst("^part-", "cdc-"))
+            Files.createDirectories(dest.getParent)
+            Files.move(p, dest)
+            changed += dest
+          } else {
+            val rel =
+              if (withChanges) staged.substring(staged.indexOf('/') + 1) else staged
+            val dest = root.resolve(rel)
+            Files.createDirectories(dest.getParent)
+            Files.move(p, dest)
+            moved += rel -> dest
+          }
         }
       }
     walk(staging)
@@ -3114,27 +3093,35 @@ object LakeTable {
     }
     rmdir(staging)
 
-    if (moved.isEmpty) {
+    if (moved.isEmpty && changed.isEmpty) {
       // drain the observation so its listener unregisters
       bloomObs.foreach(o => try o.get catch {
         case scala.util.control.NonFatal(_) => ()
       })
-      return Seq.empty
+      return (Seq.empty, Seq.empty)
     }
-    val statsMap = graft.util.Prof(s"stage.stats ${moved.size}f") {
-      Stats.collectFromFooters(spark, dataSchema, moved.map(_._2.toString).toSeq)
+    val statsMap = graft.util.Prof(s"stage.stats ${moved.size + changed.size}f") {
+      Stats.collectFromFooters(spark, dataSchema,
+        (moved.map(_._2) ++ changed).map(_.toString).toSeq)
     }
+    def statsOf(abs: Path) = statsMap.get(abs.toAbsolutePath.normalize.toString)
+    val cdcs = changed.flatMap { p =>
+      if (statsOf(p).exists(_.numRecords > 0))
+        Some(CdcFile(s"${Cdc.CDC_DIR}/${p.getFileName}", Files.size(p)))
+      else { Files.deleteIfExists(p); None }
+    }.toSeq
     val adds = moved.map { case (rel, abs) =>
       val pv = parsePartitionValues(rel)
       AddFile(rel, pv - Bucketing.BUCKET_DIR_COL, Files.size(abs),
-        Files.getLastModifiedTime(abs).toMillis,
-        statsMap.get(abs.toAbsolutePath.normalize.toString),
+        Files.getLastModifiedTime(abs).toMillis, statsOf(abs),
         bucket = pv.get(Bucketing.BUCKET_DIR_COL).flatMap(_.toIntOption))
     }.toSeq
     // per-file bloom index sidecars (no-op unless graft.bloom.columns);
     // rides AFTER stats so sizing uses exact per-file row counts, and
     // best-effort — a failed index build never fails the data write
-    graft.util.Prof(s"stage.bloom ${adds.size}f") {
+    // (the fused build never runs beside change rows: the kind column
+    // makes the write partitioned)
+    val indexed = if (adds.isEmpty) adds else graft.util.Prof(s"stage.bloom ${adds.size}f") {
       bloomObs match {
         case Some(o) =>
           try BloomIndex.attachFused(spark, tablePath, dataSchema, adds, props,
@@ -3150,5 +3137,6 @@ object LakeTable {
           BloomIndex.attachBestEffort(spark, tablePath, dataSchema, adds, props)
       }
     }
+    (indexed, cdcs)
   }
 }

@@ -13,10 +13,9 @@ import org.roaringbitmap.longlong.Roaring64Bitmap
   * Shape contract (the 100 TB guard): everything held per file is a
   * compressed Roaring bitmap or a map that only has entries for
   * GENUINELY duplicated identities (the error path) — never raw matched
-  * rows. The driver receives one blob per touched file, exactly like
-  * the unfused groupBy-per-file job this replaces, plus the `seen`
-  * bitmaps (≈ the claims bitmaps in size) that cross-partition
-  * duplicate detection needs.
+  * rows. The driver receives one blob per touched file and partition:
+  * the claims plus the `seen` bitmaps (≈ the claims bitmaps in size)
+  * that cross-partition duplicate detection needs.
   */
 final class MergeClaimsFileBuf extends Serializable {
   @transient var claims: Roaring64Bitmap = new Roaring64Bitmap()
@@ -109,43 +108,85 @@ final class MergeClaimsFileBuf extends Serializable {
   }
 }
 
+/** The aggregation buffer: one partial per PARTITION, keyed by the
+  * TaskContext partition id whose rows built it, each holding that
+  * partition's per-file claim state. A stage retry (the metric can sit
+  * in a shuffle-map stage, e.g. below a bucketed write's exchange)
+  * re-sends an identical partial under the same key; [[MergeClaimsAgg
+  * .merge]] keeps the first, so the retry cannot double-count a match
+  * into a false ambiguity error. The same pattern as FusedBloomAgg.
+  */
 final class MergeClaimsBuffer extends Serializable {
-  @transient var files: java.util.LinkedHashMap[String, MergeClaimsFileBuf] =
-    new java.util.LinkedHashMap()
+  @transient var parts: java.util.HashMap[Integer,
+    java.util.LinkedHashMap[String, MergeClaimsFileBuf]] = new java.util.HashMap()
+  /** the partial this buffer's reduce() feeds: one task, one key */
+  @transient private var current: java.util.LinkedHashMap[String, MergeClaimsFileBuf] = _
 
   def fileBuf(path: String): MergeClaimsFileBuf = {
-    var f = files.get(path)
-    if (f == null) { f = new MergeClaimsFileBuf(); files.put(path, f) }
+    if (current == null) {
+      // rows reduced outside a task (driver-side evaluation, unit tests)
+      // key by a buffer-unique negative id: distinct buffers stay
+      // distinct partials
+      val tc = org.apache.spark.TaskContext.get()
+      val key = if (tc != null) tc.partitionId() else MergeClaimsBuffer.offTaskKey()
+      current = new java.util.LinkedHashMap()
+      parts.put(key, current)
+    }
+    var f = current.get(path)
+    if (f == null) { f = new MergeClaimsFileBuf(); current.put(path, f) }
     f
   }
 
+  /** every partition's claim state, combined per file */
+  def files: java.util.LinkedHashMap[String, MergeClaimsFileBuf] = {
+    val out = new java.util.LinkedHashMap[String, MergeClaimsFileBuf]()
+    parts.values().forEach(_.forEach { (path, f) =>
+      var acc = out.get(path)
+      if (acc == null) { acc = new MergeClaimsFileBuf(); out.put(path, acc) }
+      acc.mergeFrom(f)
+    })
+    out
+  }
+
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.writeInt(if (files == null) 0 else files.size())
-    if (files != null) {
-      val it = files.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        out.writeUTF(e.getKey)
-        out.writeObject(e.getValue)
+    out.writeInt(if (parts == null) 0 else parts.size())
+    if (parts != null) parts.forEach { (key, files) =>
+      out.writeInt(key.intValue())
+      out.writeInt(files.size())
+      files.forEach { (path, f) =>
+        out.writeUTF(path)
+        out.writeObject(f)
       }
     }
   }
 
   private def readObject(in: java.io.ObjectInputStream): Unit = {
-    val n = in.readInt()
-    files = new java.util.LinkedHashMap()
-    var i = 0
-    while (i < n) {
-      val k = in.readUTF()
-      files.put(k, in.readObject().asInstanceOf[MergeClaimsFileBuf])
-      i += 1
+    parts = new java.util.HashMap()
+    val nParts = in.readInt()
+    var k = 0
+    while (k < nParts) {
+      val key = in.readInt()
+      val files = new java.util.LinkedHashMap[String, MergeClaimsFileBuf]()
+      val n = in.readInt()
+      var i = 0
+      while (i < n) {
+        val path = in.readUTF()
+        files.put(path, in.readObject().asInstanceOf[MergeClaimsFileBuf])
+        i += 1
+      }
+      parts.put(key, files)
+      k += 1
     }
   }
 }
 
+object MergeClaimsBuffer {
+  private val offTaskKeys = new java.util.concurrent.atomic.AtomicInteger(0)
+  private def offTaskKey(): Int = offTaskKeys.decrementAndGet()
+}
+
 /** One decoded per-file result: claim bitmap bytes + multi-match stats
-  * (maxMatches, an offending idx) — the same three facts the unfused
-  * per-file aggregation row carried. */
+  * (maxMatches, an offending idx). */
 final case class MergeFileClaims(claims: Array[Byte], maxMatches: Long,
     maxMatchesIdx: Long)
 
@@ -153,9 +194,10 @@ final case class MergeFileClaims(claims: Array[Byte], maxMatches: Long,
   * `(dvPath, dvIdx, matched, action)` join rows that a `Dataset.observe`
   * evaluates as a side effect of the merge's new-rows WRITE job — the
   * full-outer join is computed once, with no cache, instead of cache +
-  * claims pass + projection pass. Exactly-once: observed metrics are
-  * per-partition, and the scheduler accepts only the first successful
-  * completion of each partition.
+  * claims pass + projection pass. Exactly-once: partials are keyed by
+  * partition id and the first partial of each partition wins
+  * ([[MergeClaimsBuffer]]), so a re-run map stage, whose accumulator
+  * updates the driver merges again, cannot double-count.
   *
   * Input sentinel conventions keep the encoder on primitive fast paths:
   * source-only rows pass `dvIdx < 0` (skipped entirely);
@@ -178,18 +220,17 @@ object MergeClaimsAgg
     b
   }
 
+  /** Partials combine by partition key; the FIRST partial of a key wins
+    * (a retried task's copy is dropped). Per-file state combines only in
+    * [[finish]]. */
   def merge(a: MergeClaimsBuffer, b: MergeClaimsBuffer): MergeClaimsBuffer = {
-    val it = b.files.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      a.fileBuf(e.getKey).mergeFrom(e.getValue)
-    }
+    b.parts.forEach((key, files) => a.parts.putIfAbsent(key, files))
     a
   }
 
   /** Blob format: Int nFiles, then per file: UTF path, Int claimsLen +
     * bytes, Long maxMatches, Long maxMatchesIdx. Files with no claims
-    * and no multi-match are dropped (the unfused job's WHERE). */
+    * and no multi-match are dropped. */
   def finish(b: MergeClaimsBuffer): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val out = new java.io.DataOutputStream(bos)
@@ -198,7 +239,7 @@ object MergeClaimsAgg
     while (it.hasNext) {
       val e = it.next()
       val f = e.getValue
-      var mm = 0L
+      var mm = if (f.seen.isEmpty) 0L else 1L
       var mmIdx = -1L
       val di = f.dup.entrySet().iterator()
       while (di.hasNext) {

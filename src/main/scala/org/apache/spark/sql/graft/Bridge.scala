@@ -14,34 +14,13 @@ object Bridge {
   def expr(c: Column): Expression = ExpressionUtils.expression(c)
   def column(e: Expression): Column = ExpressionUtils.column(e)
 
-  /** Run `body` with adaptive execution disabled on the CALLING THREAD
-    * only (thread-local SQLConf override; a clone of the session conf,
-    * so every other setting is inherited). For a plan with no join or
-    * aggregate, AQE cannot improve any exchange — a pure repartition's
-    * output partitioning is user-fixed and exempt from coalescing — yet
-    * it still splits the write into per-stage jobs, re-optimizes and
-    * re-codegens between them. NOTE: this only covers code that reads
-    * `SQLConf.get` directly on the calling thread; an eagerly-executed
-    * WRITE COMMAND does NOT honor it, because
-    * `SQLExecution.withNewExecutionId` re-propagates the SESSION conf
-    * (`withSQLConfPropagated(sparkSession)`) over the thread-local
-    * before the command plan is prepared. Staging writes use
-    * [[rebindAdaptiveDisabled]] instead.
-    */
-  def withAdaptiveDisabled[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val base = spark.sessionState.conf
-    if (!base.adaptiveExecutionEnabled) body
-    else {
-      val cloned = base.clone()
-      cloned.setConfString("spark.sql.adaptive.enabled", "false")
-      org.apache.spark.sql.internal.SQLConf.withExistingConf(cloned)(body)
-    }
-  }
-
   /** Rebind `df`'s analyzed plan to a clone of its session with
     * adaptive execution disabled. A write command run through the
     * returned frame is planned non-adaptively, because the conf that
-    * `SQLExecution.withNewExecutionId` propagates is the CLONE's.
+    * `SQLExecution.withNewExecutionId` propagates is the CLONE's (a
+    * thread-local SQLConf override is NOT enough: that call
+    * re-propagates the SESSION conf over it before the command plan is
+    * prepared).
     * The clone shares the SparkContext and SharedState (so the cache
     * manager still deduplicates cached subplans).
     *
@@ -75,11 +54,19 @@ object Bridge {
     }
   }
 
-  // weak keys: a dropped session releases its twin (whose listener bus
-  // entry self-unregisters once the twin is collected)
+  // The weak key does NOT release an entry: the twin (the value) holds
+  // its base session (the key) strongly through its parent session
+  // state, and the map holds its values strongly. Every base session
+  // that ever staged a write therefore keeps one twin, and one
+  // listener-bus entry, until the JVM exits. That is bounded by the
+  // number of base sessions (usually one); conf changes replace the
+  // entry rather than adding one.
   private val twinCache =
     new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
       (Map[String, String], org.apache.spark.sql.classic.SparkSession)]()
+
+  /** Number of cached AQE-off twins (one per base session). */
+  def twinCount: Int = twinCache.synchronized(twinCache.size())
 
   /** Fault-tolerant eager cut (the `localCheckpoint(true)` replacement,
     * VERDICT r13 #2): evaluate `df` ONCE now, keep the rows PERSISTED

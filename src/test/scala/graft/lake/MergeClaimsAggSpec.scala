@@ -1,10 +1,16 @@
 package graft.lake
 
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark
 
 /** Unit-pins the fused merge-claims aggregate's buffer algebra — the
   * cross-partition multi-match cases a co-partitioned equi-join rarely
-  * produces but a cartesian/theta merge condition can. */
+  * produces but a cartesian/theta merge condition can — and its
+  * retry safety: partials built by real tasks are keyed by partition
+  * id, so a partial the driver receives twice (a re-run map stage)
+  * counts once. */
 class MergeClaimsAggSpec extends AnyFunSuite {
 
   private def reduce(b: MergeClaimsBuffer,
@@ -79,4 +85,64 @@ class MergeClaimsAggSpec extends AnyFunSuite {
     val b = reduce(MergeClaimsAgg.zero, ("f1", 3L, true, -1))
     assert(roundTrip(b).isEmpty)
   }
+
+  /** One serialized partial per partition, each built by a real task
+    * (so keyed by its TaskContext partition id). */
+  private def taskPartials(
+      perPartition: Seq[Seq[(String, Long, Boolean, Int)]]): Seq[Array[Byte]] =
+    TestSpark.session.sparkContext
+      .parallelize(perPartition, perPartition.size)
+      .map(rows => ClaimsWire.write(
+        rows.foldLeft(MergeClaimsAgg.zero)(MergeClaimsAgg.reduce)))
+      .collect().toSeq
+
+  test("retry: a duplicated identical partial still reports maxMatches == 1") {
+    val Seq(p0, p1) = taskPartials(Seq(
+      Seq(("f1", 5L, true, 0), ("f1", 6L, false, 0)),
+      Seq(("f1", 7L, true, -1))))
+    // partition 0's partial arrives twice, as after a map-stage retry
+    val merged = Seq(p0, p1, p0).map(ClaimsWire.read).reduce(MergeClaimsAgg.merge)
+    val m = roundTrip(merged)
+    assert(m("f1").maxMatches === 1L)
+    val bm = Dv.deserialize(m("f1").claims)
+    assert(bm.getLongCardinality === 2L && bm.contains(5L) && bm.contains(6L))
+  }
+
+  test("retry: a genuine two-source match still counts 2 and the merge throws") {
+    val Seq(p0, p1) = taskPartials(Seq(
+      Seq(("f1", 7L, true, 0)), Seq(("f1", 7L, true, 0))))
+    val merged = Seq(p0, p1, p1).map(ClaimsWire.read).reduce(MergeClaimsAgg.merge)
+    val m = roundTrip(merged)
+    assert(m("f1").maxMatches === 2L)
+    assert(m("f1").maxMatchesIdx === 7L)
+
+    // end to end: two source rows in different partitions hit one row
+    val spark = TestSpark.session
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("claims-retry-").toString
+    val t = LakeTable.create(spark, path, (1L to 20L).map(i => (i, i * 1.0)).toDF("id", "v"))
+    val v0 = t.version
+    val src = Seq((3L, 30.0), (3L, 31.0), (25L, 1.0)).toDF("id", "v").repartition(2)
+    val e = intercept[IllegalArgumentException] {
+      t.mergeClauses(src, col("t.id") === col("s.id"),
+        Seq(MergeClause.Update(None, Map.empty)),
+        Seq(MergeClause.Insert(None, Map.empty)), Seq.empty)
+    }
+    assert(e.getMessage.contains("matches multiple source rows"))
+    assert(t.version === v0)
+  }
+}
+
+/** Java-serialization round trip of a claims buffer (the partial
+  * aggregation wire), usable inside task closures. */
+object ClaimsWire {
+  def write(b: MergeClaimsBuffer): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val oos = new java.io.ObjectOutputStream(bos)
+    oos.writeObject(b); oos.close()
+    bos.toByteArray
+  }
+  def read(bytes: Array[Byte]): MergeClaimsBuffer =
+    new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes))
+      .readObject().asInstanceOf[MergeClaimsBuffer]
 }
