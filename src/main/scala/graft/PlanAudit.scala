@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 
 /** Plan-quality audit (builder brief: ".explain the plan and iterate
@@ -46,14 +45,7 @@ object PlanAudit {
         "q3_shipping_priority", "o1_topk_orders", "w2_running_sum",
         "d1_exact_dedup", "sim1_cosine_topk")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionRecipe.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     names.foreach { name =>

@@ -2,14 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 
 /** Dump the full `.explain("formatted")` output of catalog queries to
   * files — the optimization rounds' evidence artifacts
   * (`plans/rNN/<query>_{before,after}.txt`). Usage:
   *   runMain graft.PlanDump <sfDir> <outDir> <suffix> [queryName...]
-  * (no names = every catalog query). The session recipe matches Bench's
-  * so the dumped plan is the one the bench times.
+  * (no names = every catalog query). The session is [[SessionRecipe]]'s,
+  * Bench's confs, so the dumped plan is the one the bench times.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -19,16 +18,7 @@ object PlanDump {
     val names = if (args.length > 3) args.drop(3).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.allowJoinKeysSubsetOfPartitionKeys.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionRecipe.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>

@@ -1,11 +1,7 @@
 package graft.lake
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.UUID
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
 
 /** Change data feed (Delta's CDF, `delta.enableChangeDataFeed`): when the
   * table property [[Cdc.PROP]] is true, every DML commit also writes its
@@ -21,25 +17,26 @@ import org.apache.spark.sql.DataFrame
   * files; their changes are derived from add/remove actions at read time
   * (Delta does the same).
   *
-  * Routing (Delta's `__is_cdc` partition): a DV-path MERGE writes its
-  * change rows in the SAME job as its new data rows. One generator over
-  * the merge join emits both, tagged by the hidden [[KIND_COL]], and
-  * [[LakeTable.stageFilesAndChanges]] partitions the write on it first:
-  * files of the `true` partition move to `_change_data/` as CdcFiles,
-  * the rest are the commit's AddFiles. Change files keep one on-disk
-  * shape whichever way they were written — table columns plus an
-  * in-file `_change_type` — so every reader, old logs included, reads
-  * them unchanged. Routed data files carry an all-null `_change_type`
-  * that every scan ignores (each reads with the explicit table schema).
-  * Layouts whose dirs would strip table columns out of change files
-  * (identity partitions, buckets) and the other DML paths write change
-  * rows in a separate job through [[stage]].
+  * One generator, one writer (Delta's `__is_cdc` partition): MERGE,
+  * UPDATE and DELETE build their output with [[rows]], which emits each
+  * input row's data row and its change rows side by side, tagged by the
+  * hidden [[KIND_COL]]. [[LakeTable.stageFilesAndChanges]] is the only
+  * code that writes change files: it routes the tagged frame in the
+  * DML's own write — files of the kind column's `true` partition move to
+  * `_change_data/` as CdcFiles, the rest are the commit's AddFiles — and
+  * splits it into a data write and a flat change write only where an
+  * identity partition dir would strip a table column out of the change
+  * files. Change files keep one on-disk shape however they were written
+  * — table columns plus an in-file `_change_type` — so every reader, old
+  * logs included, reads them unchanged. Routed data files carry an
+  * all-null `_change_type` that every scan ignores (each reads with the
+  * explicit table schema).
   */
 object Cdc {
 
   val CDC_DIR = "_change_data"
   val CHANGE_TYPE = "_change_type"
-  /** hidden routing column of a merge write: true on change rows */
+  /** hidden routing column of a DML write: true on change rows */
   val KIND_COL = "__is_cdc"
   val PROP = "graft.enableChangeDataFeed"
 
@@ -62,35 +59,39 @@ object Cdc {
       StructField("_commit_version", LongType),
       StructField("_commit_timestamp", TimestampType)))
 
-  /** Stage `df` (data columns + `_change_type`) as change files under
-    * `_change_data/`. Executors write; the driver only moves (same-FS
-    * renames) and lists sizes.
+  /** The DML output generator: per row of `df` up to three structs —
+    * the data row (if `data`), the old image (if `old`, typed by
+    * `oldType`) and the new image (if `nu`, typed by `newType`) —
+    * flattened by `inline`, so one pass over `df` yields data and change
+    * rows alike (a union of filtered branches would run `df`, and any
+    * metric it observes, once per branch). The data row and the new
+    * image share `newImage`; `oldImage` gives the old one; both list one
+    * column per field of `schema`. Columns out: the table columns,
+    * `_change_type` (null on data rows) and [[KIND_COL]] (true on change
+    * rows). Without `cdf` only the data rows come out, in table columns.
     */
-  def stage(tablePath: String, df: DataFrame): Seq[CdcFile] = {
-    val staging = Paths.get(tablePath,
-      LakeTable.STAGING_PREFIX + "cdc-" + UUID.randomUUID())
-    df.write.mode("overwrite").parquet(staging.toString)
-    val destDir = Paths.get(tablePath, CDC_DIR)
-    Files.createDirectories(destDir)
-    val moved = scala.collection.mutable.ArrayBuffer[Path]()
-    graft.util.Fs.listDir(staging).foreach { p =>
-      val name = p.getFileName.toString
-      if (name.endsWith(".parquet")) {
-        val dest = destDir.resolve(name)
-        Files.move(p, dest)
-        moved += dest
-      } else Files.deleteIfExists(p)
+  def rows(df: DataFrame, schema: StructType, cdf: Boolean,
+      data: Column, newImage: Seq[Column],
+      old: Column, oldImage: Seq[Column], oldType: Column,
+      nu: Column, newType: Column): DataFrame = {
+    val names = schema.fieldNames.toSeq.zipWithIndex
+    def flat(prefix: String, image: Seq[Column]) =
+      image.zip(names).map { case (c, (_, i)) => c.as(s"$prefix$i") }
+    def named(prefix: String) = names.map { case (n, i) => col(s"$prefix$i").as(n) }
+    if (!cdf)
+      df.select(data.as("__d") +: flat("__n", newImage): _*)
+        .where(col("__d")).select(named("__n"): _*)
+    else {
+      def image(present: String, prefix: String, changeType: Column, isChange: Boolean) =
+        when(col(present), struct(named(prefix) ++
+          Seq(changeType.as(CHANGE_TYPE), lit(isChange).as(KIND_COL)): _*))
+      df.select(Seq(data.as("__d"), old.as("__o"), nu.as("__u"),
+          oldType.cast(StringType).as("__ot"), newType.cast(StringType).as("__ut")) ++
+          flat("__n", newImage) ++ flat("__p", oldImage): _*)
+        .select(inline(filter(array(
+          image("__d", "__n", lit(null).cast(StringType), isChange = false),
+          image("__o", "__p", col("__ot"), isChange = true),
+          image("__u", "__n", col("__ut"), isChange = true)), _.isNotNull)))
     }
-    Files.deleteIfExists(staging)
-    // drop zero-row parts (footer-only files) — an empty change set
-    // registers no cdc action at all
-    val counts = Stats.collectFromFooters(df.sparkSession, df.schema,
-      moved.map(_.toString).toSeq)
-    moved.flatMap { p =>
-      val abs = p.toAbsolutePath.normalize.toString
-      if (counts.get(abs).exists(_.numRecords > 0))
-        Some(CdcFile(s"$CDC_DIR/${p.getFileName}", Files.size(p)))
-      else { Files.deleteIfExists(p); None }
-    }.toSeq
   }
 }

@@ -711,11 +711,17 @@ final class LakeTable private (
     val cls = classifyMatches(snap, cond, useDvs, dvMaxFraction, distCands)
     if (cls.touched.isEmpty) return 0L
     val now = System.currentTimeMillis()
-    // change data feed: the matched rows ARE the change set
+    // change data feed: the matched rows ARE the change set, staged flat
     val cdcActions: Seq[Action] =
       if (!cdfEnabled(snap)) Seq.empty
-      else Cdc.stage(path, readFiles(snap, cls.touched).where(cond)
-        .withColumn(Cdc.CHANGE_TYPE, lit(Cdc.DELETE))).map(Action.of)
+      else {
+        val cols = snap.schema.fieldNames.map(col).toSeq
+        LakeTable.stageFilesAndChanges(spark, path,
+          Cdc.rows(readFiles(snap, cls.touched).where(cond), snap.schema, cdf = true,
+            data = lit(false), newImage = cols, old = lit(true), oldImage = cols,
+            oldType = lit(Cdc.DELETE), nu = lit(false), newType = lit(null)),
+          snap.schema, Seq.empty)._2.map(Action.of)
+      }
     val dvAdds = buildDvs(cls, now)
 
     // heavily-hit files: classic copy-on-write
@@ -838,83 +844,46 @@ final class LakeTable private (
     if (cls.touched.isEmpty) return
     val now = System.currentTimeMillis()
 
-    def applySet(df: DataFrame): DataFrame =
-      df.select(snap.schema.fields.map { f =>
-        set.get(f.name) match {
-          case Some(v) => v.cast(f.dataType).as(f.name)
-          case None => col(f.name)
-        }
-      }.toSeq: _*)
-
-    // every consumer below needs the MATCHED rows (CDC pre/post images,
-    // the re-appended post-images): scan the candidates ONCE into the
-    // block manager instead of once per consumer
+    // ONE pass over the touched files: matched rows, plus every row of a
+    // rewrite target. Full-match and DV'd files lose their old row
+    // versions (remove / bitmap) and re-append only the matched rows;
+    // rewrite targets rewrite whole. The data row is the assigned row;
+    // the change rows are the matched rows' pre- and post-images.
+    val matched = coalesceFalse(cond)
+    val rewriting =
+      if (cls.rewriteTargets.isEmpty) lit(false)
+      else {
+        val rw = cls.rewriteTargets.map(absPath).toSet
+        val inRewrite = udf((p: String) => rw.contains(Stats.normalizeFileUri(p)))
+        inRewrite(col("__dv_path"))
+      }
     val dataCols = snap.schema.fieldNames.map(col).toSeq
-    val matchedAll = readFilesInternal(snap, cls.touched, withMeta = true)
-      .where(coalesceFalse(cond)).cache()
-    try {
-      // change data feed: matched rows before and after assignment
-      val cdcActions: Seq[Action] =
-        if (!cdfEnabled(snap)) Seq.empty
-        else {
-          val matched = matchedAll.select(dataCols: _*)
-          Cdc.stage(path,
-            matched.withColumn(Cdc.CHANGE_TYPE, lit(Cdc.UPDATE_PRE))
-              .unionByName(applySet(matched)
-                .withColumn(Cdc.CHANGE_TYPE, lit(Cdc.UPDATE_POST)))).map(Action.of)
-        }
+    val assigned = snap.schema.fields.map { f =>
+      set.get(f.name) match {
+        case Some(v) => when(matched, v.cast(f.dataType)).otherwise(col(f.name))
+        case None => col(f.name)
+      }
+    }.toSeq
+    val (adds, cdcFiles) = LakeTable.stageFilesAndChanges(spark, path,
+      Cdc.rows(readFilesInternal(snap, cls.touched, withMeta = true)
+          .where(matched || rewriting), snap.schema, cdfEnabled(snap),
+        data = lit(true), newImage = assigned,
+        old = matched, oldImage = dataCols, oldType = lit(Cdc.UPDATE_PRE),
+        nu = matched, newType = lit(Cdc.UPDATE_POST)),
+      snap.schema, pcs, Bucketing.specOf(snap.metaData), Constraints.of(snap.metaData),
+      snap.metaData.properties)
 
-      // full-match + DV'd files: their old row versions vanish (remove /
-      // bitmap); ONLY the matched rows re-append with assignments applied
-      val dvAdds = buildDvs(cls, now)
-      val appendTargets = cls.fullMatch ++ cls.dvTargets
-      val appendedAdds: Seq[AddFile] =
-        if (appendTargets.isEmpty) Seq.empty
-        else {
-          val fromTargets =
-            if (cls.rewriteTargets.isEmpty) matchedAll // touched == targets
-            else {
-              val keep = appendTargets.map(absPath).toSet
-              val inTargets = udf((p: String) =>
-                keep.contains(Stats.normalizeFileUri(p)))
-              matchedAll.where(inTargets(col("__dv_path")))
-            }
-          LakeTable.stageFiles(spark, path,
-            applySet(fromTargets.select(dataCols: _*)), snap.schema, pcs,
-            Bucketing.specOf(snap.metaData), Constraints.of(snap.metaData),
-            snap.metaData.properties)
-        }
-
-      // heavy files: classic whole-file rewrite with conditional assignment
-      val rewriteAdds: Seq[AddFile] =
-        if (cls.rewriteTargets.isEmpty) Seq.empty
-        else {
-          val rewritten = readFiles(snap, cls.rewriteTargets)
-            .select(snap.schema.fields.map { f =>
-              set.get(f.name) match {
-                case Some(v) =>
-                  when(coalesceFalse(cond), v.cast(f.dataType))
-                    .otherwise(col(f.name)).as(f.name)
-                case None => col(f.name)
-              }
-            }.toSeq: _*)
-          LakeTable.stageFiles(spark, path, rewritten, snap.schema, pcs,
-            Bucketing.specOf(snap.metaData), Constraints.of(snap.metaData),
-            snap.metaData.properties)
-        }
-
-      val removes = (cls.fullMatch ++ cls.dvTargets ++ cls.rewriteTargets)
-        .map(f => Action.of(RemoveFile(f.path, now, f.partitionValues)))
-      val adds = (dvAdds ++ appendedAdds ++ rewriteAdds).map(Action.of)
-      val actions = removes ++ adds ++ cdcActions :+
-        Action.of(CommitInfo(now, "UPDATE",
-          Map("predicate" -> cond.toString, "set" -> set.keys.mkString(","),
-            "deletionVectors" -> cls.dvTargets.size.toString),
-          numAddedFiles = (appendedAdds.size + rewriteAdds.size).toLong,
-          numRemovedFiles = (cls.fullMatch.size + cls.rewriteTargets.size).toLong,
-          numOutputRows = cls.matchedRows))
-      commitWithRetry(snap.version, actions, rebaseable = false)
-    } finally matchedAll.unpersist()
+    val removes = (cls.fullMatch ++ cls.dvTargets ++ cls.rewriteTargets)
+      .map(f => Action.of(RemoveFile(f.path, now, f.partitionValues)))
+    val actions = removes ++ (buildDvs(cls, now) ++ adds).map(Action.of) ++
+      cdcFiles.map(Action.of) :+
+      Action.of(CommitInfo(now, "UPDATE",
+        Map("predicate" -> cond.toString, "set" -> set.keys.mkString(","),
+          "deletionVectors" -> cls.dvTargets.size.toString),
+        numAddedFiles = adds.size.toLong,
+        numRemovedFiles = (cls.fullMatch.size + cls.rewriteTargets.size).toLong,
+        numOutputRows = cls.matchedRows))
+    commitWithRetry(snap.version, actions, rebaseable = false)
   }
 
   /** MERGE INTO (L4/J1): copy-on-write upsert, the
@@ -1159,24 +1128,21 @@ final class LakeTable private (
     // path bitmaps exactly these, and multi-match ambiguity is detected
     // on them without generating row ids.
     //
-    // DV path: ONE uncached pass. The claims aggregation rides the
-    // staging WRITE job as an observed metric (Dataset.observe +
-    // [[MergeClaimsAgg]]), so the join is computed exactly once. Partials
-    // are keyed by partition id, so a retried map stage cannot
-    // double-count, and CollectMetrics is a pushdown barrier, so the
-    // filters above it cannot drop rows from the claims. On a change-feed
-    // table the same write also carries the change rows ([[mergeRows]]):
-    // stageFiles routes them to `_change_data/` by a hidden kind column.
-    // Identity-partitioned and bucketed tables, whose layout would strip
-    // columns out of change files, write the change rows in a second
-    // uncached pass over the join. The copy-on-write path caches the
-    // join: its ambiguity probe, rewrite and change rows each read it.
+    // Every merge shape runs ONE uncached pass over the join. The claims
+    // aggregation rides the staging WRITE job as an observed metric
+    // (Dataset.observe + [[MergeClaimsAgg]]). Partials are keyed by
+    // partition id, so a retried map stage cannot double-count, and
+    // CollectMetrics is a pushdown barrier, so the filters above it cannot
+    // drop rows from the claims. The same write carries the new row
+    // versions, the change rows of a change-feed table ([[Cdc.rows]]) and,
+    // copy-on-write, the kept rows of the touched files. Where
+    // stageFilesAndChanges splits the write in two, each observes the
+    // whole join and the first to finish completes the observation.
     val cdf = cdfEnabled(snap)
     val tRows = readFilesInternal(snap, touched, withMeta = true)
       .withColumn("__tgt", lit(true))
     val sRows = src.withColumn("__src", lit(true))
-    val joinedBase = tRows.alias("t").join(sRows.alias("s"), condition, "full_outer")
-    val joined = if (useDvs) joinedBase else joinedBase.cache()
+    val joined = tRows.alias("t").join(sRows.alias("s"), condition, "full_outer")
     try {
       // SQL cascade: tag each row with the index of the first clause whose
       // condition holds (-1 = none)
@@ -1218,9 +1184,10 @@ final class LakeTable private (
         }
       val emits = emitsOf(0, matchedClauses) ++
         emitsOf(1, notMatchedBySourceClauses) ++ emitsOf(2, notMatchedClauses)
-      val keptEmits =
-        Seq(Emit(0, -1, Map.empty, fromSource = false),
-          Emit(1, -1, Map.empty, fromSource = false))
+      // copy-on-write rewrites whole files: kept rows are data rows too
+      val dataEmits =
+        if (useDvs) emits
+        else emits ++ Seq(0, 1).map(g => Emit(g, -1, Map.empty, fromSource = false))
 
       /** Per target field, ONE CASE chain over the emitting pairs. The
         * per-clause filter+union shape scanned the join once per clause;
@@ -1241,75 +1208,22 @@ final class LakeTable private (
           }.as(f.name)
         }.toSeq
 
-      /** The new row versions of `es`, or None if no pair emits. */
-      def newRows(es: Seq[Emit], base: DataFrame): Option[DataFrame] =
-        if (es.isEmpty) None
-        else Some(tagged(base).where(es.map(_.fires).reduce(_ || _))
-          .select(newFields(es): _*))
-
-      /** New row versions AND change rows from ONE generator over the
-        * join: per join row up to three structs — the new row version,
-        * the old image (`update_preimage` / `delete`) and the new image
-        * (`update_postimage` / `insert`) — flattened by `inline`. A union
-        * of per-clause filtered branches would re-run the join, and
-        * re-apply an observed metric, once per branch. Columns: the table
-        * columns, `_change_type` (null on data rows) and the hidden
-        * [[Cdc.KIND_COL]] (true on change rows). */
-      def mergeRows(base: DataFrame): DataFrame = {
-        val names = tgtSchema.fieldNames.toSeq.zipWithIndex
-        val flat = tagged(base).select((Seq(
-          emits.map(_.fires).reduceOption(_ || _).getOrElse(lit(false)).as("__new"),
-          (col("__g") < 2 && col("__a") >= 0).as("__old"),
-          (col("__g") === 2).as("__ins")) ++
-          newFields(emits).zip(names).map { case (c, (_, i)) => c.as(s"__n$i") } ++
-          names.map { case (n, i) => col(s"t.$n").as(s"__o$i") }): _*)
-        def image(present: String, prefix: String, changeType: Column,
-            isChange: Boolean): Column =
-          when(col(present), struct(names.map { case (n, i) => col(s"$prefix$i").as(n) } ++
-            Seq(changeType.as(Cdc.CHANGE_TYPE), lit(isChange).as(Cdc.KIND_COL)): _*))
-        flat.select(inline(filter(array(
-          image("__new", "__n", lit(null).cast(StringType), isChange = false),
-          image("__old", "__o",
-            when(col("__new"), lit(Cdc.UPDATE_PRE)).otherwise(lit(Cdc.DELETE)),
-            isChange = true),
-          image("__new", "__n",
-            when(col("__ins"), lit(Cdc.INSERT)).otherwise(lit(Cdc.UPDATE_POST)),
-            isChange = true)), _.isNotNull)))
-      }
-      /** Only the change rows of [[mergeRows]], in change-file shape:
-        * table columns (with their field ids, as routed change files
-        * carry them) plus `_change_type`. */
-      def changeRows(base: DataFrame): DataFrame =
-        mergeRows(base).where(col(Cdc.KIND_COL)).select(
-          tgtSchema.fields.map(f => col(f.name).as(f.name, f.metadata)).toSeq :+
-            col(Cdc.CHANGE_TYPE): _*)
+      def anyFires(es: Seq[Emit]): Column =
+        es.map(_.fires).reduceOption(_ || _).getOrElse(lit(false))
+      def outRows(base: DataFrame): DataFrame =
+        Cdc.rows(tagged(base), tgtSchema, cdf,
+          data = anyFires(dataEmits), newImage = newFields(dataEmits),
+          old = col("__g") < 2 && col("__a") >= 0,
+          oldImage = tgtSchema.fieldNames.map(n => col(s"t.$n")).toSeq,
+          oldType = when(anyFires(emits), lit(Cdc.UPDATE_PRE)).otherwise(lit(Cdc.DELETE)),
+          nu = anyFires(emits),
+          newType = when(col("__g") === 2, lit(Cdc.INSERT)).otherwise(lit(Cdc.UPDATE_POST)))
 
       val propsActions: Seq[Action] =
         if (propsDelta.isEmpty) Seq.empty
         else Seq(Action.of(snap.metaData.copy(
           properties = snap.metaData.properties ++ propsDelta)))
 
-      if (!useDvs) {
-        // classic copy-on-write over the cached join: a short-circuit
-        // ambiguity probe, then rewrite every candidate file (kept rows
-        // included, so the rewrite frame always exists)
-        if (matchedClauses.nonEmpty) {
-          val dupes = joined.where(isMatched)
-            .groupBy(col("t.__dv_path"), col("t.__dv_idx"))
-            .count().where(col("count") > 1).limit(1).count()
-          require(dupes == 0L,
-            "merge: a target row matches multiple source rows; make the condition more specific")
-        }
-        val cdcActions =
-          if (cdf) Cdc.stage(path, changeRows(joined)).map(Action.of) else Seq.empty
-        rewrite(snap, touched, newRows(emits ++ keptEmits, joined).get, "MERGE",
-          Map("condition" -> condition.toString),
-          extra = cdcActions ++ propsActions,
-          constraints = Constraints.of(snap.metaData))
-        return
-      }
-
-      // ---- deletion-vector path ----------------------------------------
       // The claim bitmaps are built ON EXECUTORS and the driver receives
       // one (file, bitmap blob, maxMatches) record per affected FILE —
       // never a row per claimed target row. Files staged by an ambiguous
@@ -1318,35 +1232,22 @@ final class LakeTable private (
       val claimsCol = MergeClaimsAgg.claims(
         coalesce(col("t.__dv_path"), lit("")), coalesce(col("t.__dv_idx"), lit(-1L)),
         isMatched, actionOf).as("__claims")
-      val routeChanges = cdf && Bucketing.specOf(snap.metaData).isEmpty &&
-        !PartitionTransforms.parseAll(snap.metaData.partitionColumns)
-          .exists(_.isInstanceOf[PartitionTransforms.Identity])
-      def stage(df: DataFrame, withChanges: Boolean) =
-        LakeTable.stageFilesAndChanges(spark, path, df, tgtSchema,
-          snap.metaData.partitionColumns, Bucketing.specOf(snap.metaData),
-          Constraints.of(snap.metaData), snap.metaData.properties, withChanges)
       val (claimsBlob, appendedAdds, cdcFiles) =
-        if (emits.isEmpty && !cdf) {
+        if (dataEmits.isEmpty && !cdf) {
           // delete-only clauses and no change feed: nothing to write, so
           // the claims take one dedicated uncached aggregation pass
           (joined.agg(claimsCol).head().getAs[Array[Byte]](0),
             Seq.empty[AddFile], Seq.empty[CdcFile])
         } else {
-          // the single pass: stage the new rows (and change rows), claims
-          // fall out as the observed metric. Every branch below runs a
-          // write over `observed`, so the observation always completes;
-          // the plan contains the merge join, so stageFiles never rebinds
-          // it away from the session the observation listens on.
+          // the single pass: the claims fall out of the staging write as
+          // its observed metric. The plan contains the merge join, so the
+          // write never rebinds it away from the session the observation
+          // listens on.
           val obs = new org.apache.spark.sql.Observation()
-          val observed = joined.observe(obs, claimsCol)
-          val (adds, cdcs) =
-            if (routeChanges) stage(mergeRows(observed), withChanges = true)
-            else {
-              val adds = newRows(emits, observed)
-                .map(stage(_, withChanges = false)._1).getOrElse(Seq.empty)
-              (adds, if (!cdf) Seq.empty
-                else Cdc.stage(path, changeRows(if (emits.isEmpty) observed else joined)))
-            }
+          val (adds, cdcs) = LakeTable.stageFilesAndChanges(spark, path,
+            outRows(joined.observe(obs, claimsCol)), tgtSchema,
+            snap.metaData.partitionColumns, Bucketing.specOf(snap.metaData),
+            Constraints.of(snap.metaData), snap.metaData.properties)
           (obs.get("__claims").asInstanceOf[Array[Byte]], adds, cdcs)
         }
       val claimsByPath = MergeClaimsAgg.decode(claimsBlob)
@@ -1372,11 +1273,13 @@ final class LakeTable private (
           else byAbs.get(Stats.normalizeFileUri(p)).map(_ -> bm)
         }.toMap
 
-      val affected = touched.filter(f => claimedByFile.contains(f.path))
-      val (fullMatch, partial) = affected.partition { f =>
-        f.stats.exists(st =>
-          claimedByFile(f.path).getLongCardinality == st.numRecords - f.dvCardinality)
-      }
+      // copy-on-write: the write above rewrote every touched file whole
+      val (fullMatch, partial) =
+        if (!useDvs) (touched, Seq.empty[AddFile])
+        else touched.filter(f => claimedByFile.contains(f.path)).partition { f =>
+          f.stats.exists(st =>
+            claimedByFile(f.path).getLongCardinality == st.numRecords - f.dvCardinality)
+        }
       val (dvTargets, rewriteTargets) = partial.partition { f =>
         f.stats.exists(st =>
           claimedByFile(f.path).getLongCardinality <=
@@ -1424,7 +1327,6 @@ final class LakeTable private (
           numOutputRows = outputRows))
       commitWithRetry(snap.version, actions, rebaseable = false)
     } finally {
-      if (!useDvs) joined.unpersist()
       // release a materialized non-deterministic source promptly (an
       // exception before this try leaves it to Spark's ContextCleaner,
       // which unpersists the unreferenced checkpoint RDD on GC)
@@ -2921,18 +2823,25 @@ object LakeTable {
       constraints: Map[String, String] = Map.empty,
       props: Map[String, String] = Map.empty): Seq[AddFile] =
     stageFilesAndChanges(spark, tablePath, df0, schema, partitionCols,
-      bucketSpec, constraints, props, withChanges = false)._1
+      bucketSpec, constraints, props)._1
 
-  /** [[stageFiles]] that can also stage change rows in the SAME write
-    * (Delta's `__is_cdc` routing). With `withChanges`, `df0` carries
-    * `_change_type` and the hidden [[Cdc.KIND_COL]] besides the table
-    * columns; the kind column leads the partitionBy order, files of its
-    * `true` partition move to `_change_data/` and return as CdcFiles
-    * (zero-row parts dropped, as [[Cdc.stage]] does), the rest return
-    * as AddFiles. Data files then carry an all-null `_change_type`,
-    * which every scan ignores: each reads with the explicit table
-    * schema. Only for layouts whose dirs strip no table column: no
-    * identity partitions, no buckets.
+  /** [[stageFiles]] for a DML's output, and the only writer of change
+    * files. A frame built by [[Cdc.rows]] carries `_change_type` and the
+    * hidden [[Cdc.KIND_COL]] besides the table columns; the write shape
+    * follows from the table layout:
+    *  - flat, transform-partitioned and bucketed tables route data and
+    *    change rows in ONE write (Delta's `__is_cdc` partition): the kind
+    *    column leads the partitionBy order, change rows get null
+    *    transform and bucket dirs (those dirs are synthetic, so change
+    *    rows keep every table column), files of its `true` partition move
+    *    to `_change_data/` as CdcFiles (zero-row parts dropped) and the
+    *    rest return as AddFiles. Data files then carry an all-null
+    *    `_change_type`, which every scan ignores: each reads with the
+    *    explicit table schema.
+    *  - identity partitions strip their column out of the files under
+    *    their dirs, so there the same frame is written twice: data rows
+    *    with the table layout, change rows flat.
+    * A frame without the kind column is a plain data write.
     */
   private[lake] def stageFilesAndChanges(
       spark: SparkSession,
@@ -2940,10 +2849,18 @@ object LakeTable {
       df0: DataFrame,
       schema: StructType,
       partitionCols: Seq[String],
-      bucketSpec: Option[Bucketing.Spec],
-      constraints: Map[String, String],
-      props: Map[String, String],
-      withChanges: Boolean): (Seq[AddFile], Seq[CdcFile]) = {
+      bucketSpec: Option[Bucketing.Spec] = None,
+      constraints: Map[String, String] = Map.empty,
+      props: Map[String, String] = Map.empty): (Seq[AddFile], Seq[CdcFile]) = {
+    val withChanges = df0.columns.contains(Cdc.KIND_COL)
+    val pFields = PartitionTransforms.parseAll(partitionCols)
+    if (withChanges && pFields.exists(_.isInstanceOf[PartitionTransforms.Identity])) {
+      val data = df0.where(!col(Cdc.KIND_COL)).drop(Cdc.KIND_COL, Cdc.CHANGE_TYPE)
+      return (stageFiles(spark, tablePath, data, schema, partitionCols, bucketSpec,
+          constraints, props),
+        stageFilesAndChanges(spark, tablePath, df0.where(col(Cdc.KIND_COL)), schema,
+          Seq.empty)._2)
+    }
     // CHECK enforcement rides the write plan itself — new-row paths pass
     // the table's constraints; pure reorganizations (compact, rebucket,
     // survivor rewrites) skip the re-validation of already-valid rows
@@ -2966,18 +2883,16 @@ object LakeTable {
     // hidden partitioning: transform entries materialize their synthetic
     // __pt_ directory column (the source column stays in the data file);
     // identity entries elide as plain hive dirs
-    val pFields = PartitionTransforms.parseAll(partitionCols)
     val layoutCols = pFields.map {
       case PartitionTransforms.Identity(c) => c
       case t: PartitionTransforms.Transform => t.dirName
     }
-    // (change rows get a null dir value: they all leave for the flat
+    // (change rows get null dir values: they all leave for the flat
     // `_change_data/`, one file per write task)
+    def dataDir(dir: Column) = if (withChanges) when(!col(Cdc.KIND_COL), dir) else dir
     val df2t = pFields.foldLeft(df2) {
       case (d, t: PartitionTransforms.Transform) =>
-        val dir = PartitionTransforms.column(t, schema(t.col).dataType)
-        d.withColumn(t.dirName,
-          if (withChanges) when(!col(Cdc.KIND_COL), dir) else dir)
+        d.withColumn(t.dirName, dataDir(PartitionTransforms.column(t, schema(t.col).dataType)))
       case (d, _) => d
     }
     // bucketed layout: route rows into `__bucket=K/` staging dirs by the
@@ -2986,13 +2901,11 @@ object LakeTable {
       case Some(Bucketing.Spec(bcols, n)) =>
         (df2t.withColumn(Bucketing.BUCKET_DIR_COL,
             Bucketing.bucketId(bcols.map(col), n))
-          .repartition(n, col(Bucketing.BUCKET_DIR_COL)),
+          .repartition(n, col(Bucketing.BUCKET_DIR_COL))
+          .withColumn(Bucketing.BUCKET_DIR_COL, dataDir(col(Bucketing.BUCKET_DIR_COL))),
           layoutCols :+ Bucketing.BUCKET_DIR_COL)
       case None => (df2t, layoutCols)
     }
-    require(!withChanges || bucketSpec.isEmpty &&
-      pFields.forall(_.isInstanceOf[PartitionTransforms.Transform]),
-      "change rows cannot share a write with identity partitions or buckets")
     val routedCols = if (withChanges) Cdc.KIND_COL +: writeCols else writeCols
     // AQE only ever improves exchanges it may re-plan: join/aggregate/
     // window shuffles (skew split, strategy switch) and
@@ -3034,9 +2947,7 @@ object LakeTable {
     // the classic read-side build per file.
     val bloomFields = BloomIndex.indexedFields(props, dataSchema)
     val fuseBloom = bloomFields.nonEmpty && routedCols.isEmpty &&
-      bucketSpec.isEmpty && spark.sessionState.conf.maxRecordsPerFile <= 0 &&
-      !spark.conf.getOption("spark.graft.bloom.fused").exists(
-        _.trim.equalsIgnoreCase("false"))
+      bucketSpec.isEmpty && spark.sessionState.conf.maxRecordsPerFile <= 0
     val bloomObs =
       if (fuseBloom) Some(new org.apache.spark.sql.Observation()) else None
     val writeDf0 =

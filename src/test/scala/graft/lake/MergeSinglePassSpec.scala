@@ -6,22 +6,23 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{Bridge, SessionProbe}
+import org.apache.spark.sql.graft.{Bridge, SessionProbe, StageFault}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** The single-pass MERGE on change-feed tables: new rows and change rows
-  * come from one generator over the merge join and ride one staged write,
+/** Change-feed DML in one pass: MERGE, UPDATE and DELETE build data rows
+  * and change rows with one generator and stage them through one writer,
   * routed to `_change_data/` by a hidden kind column (Delta's `__is_cdc`
   * partition). Checked on every layout against a plain model, for the
   * all-null `_change_type` column routed data files carry, for the job
-  * shape (no cached join, no extra jobs), and over a long session.
+  * shape (no cached relation, no extra jobs), under real stage retries,
+  * and over a long session.
   */
 class MergeSinglePassSpec extends AnyFunSuite {
 
@@ -58,16 +59,19 @@ class MergeSinglePassSpec extends AnyFunSuite {
   private def source: DataFrame =
     srcRows.toDF("id", "state", "amount", "op").repartition(3)
 
-  /** update-if-cond, delete, insert and a by-source update */
-  private def runMerge(t: LakeTable, src: DataFrame, useDvs: Boolean = true): Unit =
+  /** update-if-cond, delete, insert and a by-source update; `gate(alias)`
+    * (true) leads the first clause of each group, so every join row
+    * evaluates it */
+  private def runMerge(t: LakeTable, src: DataFrame, useDvs: Boolean = true,
+      gate: String => Column = _ => lit(true)): Unit =
     t.mergeClauses(src, col("t.id") === col("s.id"),
       matchedClauses = Seq(
-        MergeClause.Update(Some(col("s.amount") > col("t.amount")),
+        MergeClause.Update(Some(gate("t") && col("s.amount") > col("t.amount")),
           Map("state" -> col("s.state"), "amount" -> col("s.amount"))),
         MergeClause.Delete(Some(col("s.op") === "D"))),
-      notMatchedClauses = Seq(MergeClause.Insert(None, Map.empty)),
+      notMatchedClauses = Seq(MergeClause.Insert(Some(gate("s")), Map.empty)),
       notMatchedBySourceClauses = Seq(MergeClause.Update(
-        Some(col("t.state") === "CA"), Map("amount" -> col("t.amount") * 10))),
+        Some(gate("t") && col("t.state") === "CA"), Map("amount" -> col("t.amount") * 10))),
       useDvs = useDvs)
 
   /** The same MERGE over plain collections: (final rows, change rows). */
@@ -108,6 +112,32 @@ class MergeSinglePassSpec extends AnyFunSuite {
   private def walk(p: Path): Seq[Path] =
     Files.walk(p).iterator().asScala.toSeq
 
+  /** The table after commit `ver` against the model: rows through the
+    * API and SQL, no `_change_type` column visible, the change feed at
+    * `ver`, every change file under `_change_data/`, no routing dir left.
+    * Returns the commit's change files. */
+  private def checkModel(t: LakeTable, name: String, cdf: Boolean, ver: Long,
+      expRows: Seq[Row3], expChanges: Seq[Change]): Seq[CdcFile] = {
+    assert(rows(t.toDF) === expRows)
+    val viaSql = spark.sql(s"SELECT * FROM m1p.db.$name")
+    assert(rows(viaSql) === expRows)
+    assert(!t.toDF.columns.contains(Cdc.CHANGE_TYPE))
+    assert(!viaSql.columns.contains(Cdc.CHANGE_TYPE))
+    val cdcFiles = t.log.readCommit(ver).flatMap(_.cdc)
+    if (cdf) {
+      assert(changesAt(t, ver) === expChanges)
+      assert(cdcFiles.nonEmpty)
+      cdcFiles.foreach { c =>
+        assert(c.path.startsWith(Cdc.CDC_DIR + "/"), c.path)
+        assert(Files.isRegularFile(Paths.get(t.path, c.path)), c.path)
+      }
+    } else assert(cdcFiles.isEmpty)
+    assert(t.snapshot.files.forall(!_.path.startsWith(Cdc.CDC_DIR)))
+    assert(!walk(Paths.get(t.path)).exists(_.toString.contains(Cdc.KIND_COL)),
+      "a routing directory survived the staging moves")
+    cdcFiles
+  }
+
   private val bloomProps =
     Map(BloomIndex.COLS_PROP -> "id", BloomIndex.FPP_PROP -> "0.001")
 
@@ -144,27 +174,7 @@ class MergeSinglePassSpec extends AnyFunSuite {
       val ver = t.version
       assert(ver === before + 1)
       val (expRows, expChanges) = model
-
-      // final rows, through the API and through SQL; no change row leaks
-      assert(rows(t.toDF) === expRows)
-      val viaSql = spark.sql(s"SELECT * FROM m1p.db.${v.name}")
-      assert(rows(viaSql) === expRows)
-      assert(!t.toDF.columns.contains(Cdc.CHANGE_TYPE))
-      assert(!viaSql.columns.contains(Cdc.CHANGE_TYPE))
-
-      // change feed and where its files live
-      val cdcFiles = t.log.readCommit(ver).flatMap(_.cdc)
-      if (v.cdf) {
-        assert(changesAt(t, ver) === expChanges)
-        assert(cdcFiles.nonEmpty)
-        cdcFiles.foreach { c =>
-          assert(c.path.startsWith(Cdc.CDC_DIR + "/"), c.path)
-          assert(Files.isRegularFile(Paths.get(t.path, c.path)), c.path)
-        }
-      } else assert(cdcFiles.isEmpty)
-      assert(t.snapshot.files.forall(!_.path.startsWith(Cdc.CDC_DIR)))
-      assert(!walk(Paths.get(t.path)).exists(_.toString.contains(Cdc.KIND_COL)),
-        "a routing directory survived the staging moves")
+      val cdcFiles = checkModel(t, v.name, v.cdf, ver, expRows, expChanges)
 
       if (v.props.contains(BloomIndex.COLS_PROP)) {
         // the routed write is partitioned on the kind column, so the
@@ -193,6 +203,39 @@ class MergeSinglePassSpec extends AnyFunSuite {
       assert(e.getMessage.contains("matches multiple source rows"))
       assert(t.version === ver)
       assert(rows(t.toDF) === expRows)
+    }
+
+    test(s"change-feed UPDATE and DELETE on ${v.name} match the model") {
+      val name = s"${v.name}_dml"
+      val t = create(v, s"$warehouse/db/$name")
+      // a dvMaxFraction between the lowest and highest share of matched
+      // rows per file sends some files to DVs and the rest to rewrites
+      val upd = col("id") <= 20
+      val shares = t.snapshot.files.map { f =>
+        val df = spark.read.parquet(s"${t.path}/${f.path}")
+        df.where(upd).count().toDouble / df.count()
+      }.filter(x => x > 0 && x < 1).distinct.sorted
+      assert(shares.size >= 2, s"per-file match shares $shares")
+      val dvMax = (shares.head + shares.last) / 2
+
+      t.update(upd, Map("state" -> lit("UP"), "amount" -> (col("amount") + 1)),
+        useDvs = v.useDvs, dvMaxFraction = dvMax)
+      val updated = baseRows.map { case r @ (id, _, amt) =>
+        if (id <= 20) (id, "UP", amt + 1) else r
+      }
+      val info = t.log.readCommit(t.version).flatMap(_.commitInfo).head
+      assert(info.numRemovedFiles > 0, "no rewrite target")
+      if (v.useDvs) assert(info.parameters("deletionVectors").toInt > 0, "no DV target")
+      checkModel(t, name, v.cdf, t.version, updated.sorted,
+        baseRows.zip(updated).collect { case ((id, st, amt), (_, nst, namt)) if id <= 20 =>
+          Seq((id, st, amt, Cdc.UPDATE_PRE), (id, nst, namt, Cdc.UPDATE_POST))
+        }.flatten.sorted)
+
+      // deletes rows of base files and of the UPDATE's routed data files
+      val del = (r: Row3) => r._1 > 60 || r._1 == 2
+      t.delete(col("id") > 60 || col("id") === 2, useDvs = v.useDvs, dvMaxFraction = dvMax)
+      checkModel(t, name, v.cdf, t.version, updated.filterNot(del).sorted,
+        updated.filter(del).map { case (id, st, amt) => (id, st, amt, Cdc.DELETE) }.sorted)
     }
   }
 
@@ -300,22 +343,62 @@ class MergeSinglePassSpec extends AnyFunSuite {
     (jobs.get(), cached.get())
   }
 
-  test("job shape: a change-feed DV merge caches nothing and adds no jobs") {
-    def fresh(v: Variant) =
-      create(v, Files.createTempDirectory("merge-1p-shape-").toString)
-    val cdf = fresh(Variant("shape"))
-    val plain = fresh(Variant("shape", cdf = false))
-    val cow = fresh(Variant("shape"))
-    runMerge(fresh(Variant("shape")), source) // warm the plan shapes
-    val (plainJobs, plainCached) = shape(runMerge(plain, source))
-    val (cdfJobs, cdfCached) = shape(runMerge(cdf, source))
-    assert(cdfCached === 0, "a change-feed DV merge read a cached relation")
-    assert(plainCached === 0)
-    assert(cdfJobs <= plainJobs,
-      s"change-feed merge ran $cdfJobs jobs, the plain one $plainJobs")
-    // the probe sees caches: the copy-on-write merge keeps its cached join
-    val (_, cowCached) = shape(runMerge(cow, source, useDvs = false))
-    assert(cowCached > 0)
+  test("job shape: change-feed DMLs cache nothing and add no jobs") {
+    def fresh(cdf: Boolean) = create(Variant("shape", cdf = cdf),
+      Files.createTempDirectory("merge-1p-shape-").toString)
+    val upd = col("id") <= 20
+    // (name, DML, extra jobs allowed on a change-feed table)
+    val dmls = Seq[(String, LakeTable => Unit, Int)](
+      ("DV merge", runMerge(_, source), 0),
+      ("copy-on-write merge", runMerge(_, source, useDvs = false), 0),
+      ("update", _.update(upd, Map("amount" -> (col("amount") + 1))), 0),
+      // the change rows take a write of their own beside the classify job
+      ("delete", _.delete(col("id") > 60), 1))
+    dmls.foreach { case (_, dml, _) => dml(fresh(cdf = true)) } // warm the plan shapes
+    dmls.foreach { case (name, dml, slack) =>
+      val (plainJobs, plainCached) = shape(dml(fresh(cdf = false)))
+      val (cdfJobs, cdfCached) = shape(dml(fresh(cdf = true)))
+      assert(plainCached === 0, s"a $name read a cached relation")
+      assert(cdfCached === 0, s"a change-feed $name read a cached relation")
+      assert(cdfJobs <= plainJobs + slack,
+        s"change-feed $name ran $cdfJobs jobs, the plain one $plainJobs")
+    }
+    // the probe sees caches: a merge whose source is cached
+    val cachedSource = source.cache()
+    try {
+      val (_, cached) = shape(runMerge(fresh(cdf = true), cachedSource))
+      assert(cached > 0)
+    } finally cachedSource.unpersist()
+  }
+
+  for (v <- variants.filter(v => Set("flat", "bucketed", "copy_on_write")(v.name))) {
+    test(s"stage retry: a change-feed ${v.name} merge survives a fetch failure") {
+      val gate = (alias: String) => StageFault.failOnce(col(s"$alias.id"))
+      def run(faults: Boolean): LakeTable = {
+        val t = create(v, Files.createTempDirectory("merge-1p-retry-").toString)
+        LakeLog.awaitMaintenance()
+        if (faults) {
+          val seen = StageFault.armed(spark.sparkContext)(runMerge(t, source, v.useDvs, gate))
+          assert(seen.retries >= 1, "no stage was retried")
+          // the claims ride the stage that failed: a map stage exactly
+          // where the bucket exchange sits above the merge join
+          assert(seen.failedInMapStage === v.bucketBy.nonEmpty)
+        } else runMerge(t, source, v.useDvs, gate)
+        t
+      }
+      // one task per shuffle partition, so a retried stage has tasks
+      // that succeeded in attempt 0
+      val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+      spark.conf.set(coalesce, "false")
+      val (clean, faulty) =
+        try (run(faults = false), run(faults = true))
+        finally spark.conf.unset(coalesce)
+      val (expRows, expChanges) = model
+      assert(rows(clean.toDF) === expRows)
+      assert(rows(faulty.toDF) === expRows)
+      assert(changesAt(clean, clean.version) === expChanges)
+      assert(changesAt(faulty, faulty.version) === expChanges)
+    }
   }
 
   test("long session: fifty change-feed merges leak no cache, listener or twin") {
