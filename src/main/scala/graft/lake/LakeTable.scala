@@ -179,19 +179,25 @@ final class LakeTable private (
     }
   }
 
-  /** DML entry to the big-log path: (lite snapshot, pre-pruned candidate
-    * files) when engaged, else the materialized snapshot. DELETE/UPDATE
-    * over a million-file table never hold the full file list on the
-    * driver — only the condition's candidates.
+  /** DML entry: the snapshot and the files whose stats and bloom filters
+    * say they might hold a row matching `cond`. On the big-log path the
+    * snapshot is lite and the candidates were pruned on executors, so
+    * DELETE/UPDATE over a million-file table never hold the full file
+    * list on the driver — only the condition's candidates.
     */
-  private def snapshotForDml(cond: Column): (Snapshot, Option[Seq[AddFile]]) =
+  private def snapshotForDml(cond: Column): (Snapshot, Seq[AddFile]) =
     distributedResolve(_ => Seq(cond)) match {
       case Some((lite, candidates)) =>
         DmlMetrics.lastDmlDistributed.set(true)
-        (lite, Some(candidates))
+        (lite, candidates)
       case None =>
         DmlMetrics.lastDmlDistributed.set(false)
-        (snapshot, None)
+        val snap = snapshot
+        val norm = Stats.normalize(resolveFilter(cond, snap.schema))
+        val pcs = snap.metaData.partitionColumns
+        val probe = bloomProbe
+        (snap, snap.files.filter(f =>
+          Stats.mightMatchNormalized(f, norm, snap.schema, pcs, probe)))
     }
 
   /** Time travel (`VERSION AS OF`). */
@@ -590,25 +596,6 @@ final class LakeTable private (
   private def absPath(f: AddFile): String =
     Paths.get(path, f.path).toAbsolutePath.normalize.toString
 
-  /** Files whose stats say they MIGHT contain rows matching cond, then
-    * narrowed to files that actually do (one scan of the candidates).
-    */
-  private def filesWithMatches(snap: Snapshot, cond: Column): Seq[AddFile] = {
-    val pcs = snap.metaData.partitionColumns
-    val resolvedCond = resolveFilter(cond, snap.schema)
-    val probe = bloomProbe
-    val norm = Stats.normalize(resolvedCond)
-    val candidates = snap.files.filter(f =>
-      Stats.mightMatchNormalized(f, norm, snap.schema, pcs, probe))
-    if (candidates.isEmpty) return Seq.empty
-    val hit = readFiles(snap, candidates)
-      .withColumn("__file", input_file_name())
-      .where(cond)
-      .select("__file").distinct().collect()
-      .map(r => Stats.normalizeFileUri(r.getString(0))).toSet
-    candidates.filter(f => hit.contains(absPath(f)))
-  }
-
   private def readFiles(snap: Snapshot, files: Seq[AddFile]): DataFrame =
     readFilesInternal(snap, files, withMeta = false)
 
@@ -616,7 +603,7 @@ final class LakeTable private (
     * path; DV-backed files read `_metadata.{file_path,row_index}` and
     * drop rows the bitmap marks deleted (one codegen'd O(1) probe per
     * row). `withMeta` keeps the metadata columns (as `__dv_path` /
-    * `__dv_idx`) for DELETE's index collection.
+    * `__dv_idx`) for the DML claims.
     */
   private def readFilesInternal(snap: Snapshot, files: Seq[AddFile],
       withMeta: Boolean): DataFrame = {
@@ -706,127 +693,21 @@ final class LakeTable private (
   def delete(cond: Column, useDvs: Boolean = true,
       dvMaxFraction: Double = 0.5): Long = {
     require(pinnedVersion.isEmpty, "cannot write through a time-travel handle")
-    val (snap, distCands) = snapshotForDml(cond)
-    val pcs = snap.metaData.partitionColumns
-    val cls = classifyMatches(snap, cond, useDvs, dvMaxFraction, distCands)
-    if (cls.touched.isEmpty) return 0L
-    val now = System.currentTimeMillis()
-    // change data feed: the matched rows ARE the change set, staged flat
-    val cdcActions: Seq[Action] =
-      if (!cdfEnabled(snap)) Seq.empty
-      else {
-        val cols = snap.schema.fieldNames.map(col).toSeq
-        LakeTable.stageFilesAndChanges(spark, path,
-          Cdc.rows(readFiles(snap, cls.touched).where(cond), snap.schema, cdf = true,
-            data = lit(false), newImage = cols, old = lit(true), oldImage = cols,
-            oldType = lit(Cdc.DELETE), nu = lit(false), newType = lit(null)),
-          snap.schema, Seq.empty)._2.map(Action.of)
-      }
-    val dvAdds = buildDvs(cls, now)
-
-    // heavily-hit files: classic copy-on-write
-    val rewriteAdds: Seq[AddFile] =
-      if (cls.rewriteTargets.isEmpty) Seq.empty
-      else LakeTable.stageFiles(spark, path,
-        readFiles(snap, cls.rewriteTargets).where(!coalesceFalse(cond)),
-        snap.schema, pcs, Bucketing.specOf(snap.metaData),
-        props = snap.metaData.properties)
-
-    val deleted = cls.matchedRows
-    val removes = (cls.fullMatch ++ cls.dvTargets ++ cls.rewriteTargets)
-      .map(f => Action.of(RemoveFile(f.path, now, f.partitionValues)))
-    val adds = (dvAdds ++ rewriteAdds).map(Action.of)
-    val actions = removes ++ adds ++ cdcActions :+
-      Action.of(CommitInfo(now, "DELETE",
-        Map("predicate" -> cond.toString,
-          "deletionVectors" -> cls.dvTargets.size.toString,
-          "fullFileRemoves" -> cls.fullMatch.size.toString),
-        numAddedFiles = rewriteAdds.size.toLong,
-        numRemovedFiles = (cls.fullMatch.size + cls.rewriteTargets.size).toLong,
-        numOutputRows = deleted))
-    commitWithRetry(snap.version, actions, rebaseable = false)
-    deleted
+    val (snap, candidates) = snapshotForDml(cond)
+    if (candidates.isEmpty) return 0L
+    // the matched rows ARE the change set, staged flat; without a change
+    // feed the pass writes nothing
+    val cols = snap.schema.fieldNames.map(col).toSeq
+    val write =
+      if (!cdfEnabled(snap)) None
+      else Some((hits: DataFrame) => LakeTable.stageFilesAndChanges(spark, path,
+        Cdc.rows(hits, snap.schema, cdf = true,
+          data = lit(false), newImage = cols, old = lit(true), oldImage = cols,
+          oldType = lit(Cdc.DELETE), nu = lit(false), newType = lit(null)),
+        snap.schema, Seq.empty))
+    dmlPass(snap, candidates, cond, write, useDvs, dvMaxFraction,
+      "DELETE", Map("predicate" -> cond.toString))
   }
-
-  /** Per-file match classification shared by DV-based DML: which files
-    * match entirely (pure metadata ops), which get a bitmap, which
-    * rewrite. `bitmaps` carries each touched file's matched row indexes —
-    * built in the SAME aggregation job as the counts ([[DvAgg]], on
-    * executors), so the DV build never re-scans the candidates and the
-    * driver receives one blob per file, never the matched rows.
-    */
-  private case class MatchClassification(
-      counts: Map[String, Long],
-      bitmaps: Map[String, org.roaringbitmap.longlong.Roaring64Bitmap],
-      touched: Seq[AddFile],
-      fullMatch: Seq[AddFile],
-      dvTargets: Seq[AddFile],
-      rewriteTargets: Seq[AddFile]) {
-    def matchedRows: Long = touched.map(f => counts(f.path)).sum
-  }
-
-  private def classifyMatches(snap: Snapshot, cond: Column,
-      useDvs: Boolean, dvMaxFraction: Double,
-      candidatesOverride: Option[Seq[AddFile]] = None): MatchClassification = {
-    // override = the big-log path already pruned candidates on executors
-    // (snap is then a LITE snapshot whose .files must not be touched)
-    val candidates = candidatesOverride.getOrElse {
-      val resolvedCond = resolveFilter(cond, snap.schema)
-      val pcs = snap.metaData.partitionColumns
-      val probe = bloomProbe
-      val norm = Stats.normalize(resolvedCond)
-      snap.files.filter(f =>
-        Stats.mightMatchNormalized(f, norm, snap.schema, pcs, probe))
-    }
-    if (candidates.isEmpty)
-      return MatchClassification(Map.empty, Map.empty,
-        Seq.empty, Seq.empty, Seq.empty, Seq.empty)
-    // ONE job: per-file match counts AND matched-index bitmaps (already
-    // excludes rows a previous DV deleted); keyed by table-relative path
-    val byAbs: Map[String, String] = candidates.map(f => absPath(f) -> f.path).toMap
-    val rows = graft.util.Prof(s"dml.classify ${candidates.size}f $path") {
-      readFilesInternal(snap, candidates, withMeta = true)
-        .where(cond).groupBy(col("__dv_path"))
-        .agg(count(lit(1)).as("__n"),
-          (if (useDvs) DvAgg.bitmap(col("__dv_idx"))
-           else lit(null).cast("binary")).as("__bm"))
-        .collect()
-    }
-    DmlMetrics.lastIdentityRowsCollected.set(rows.length.toLong)
-    val counts: Map[String, Long] = rows
-      .flatMap(r => byAbs.get(Stats.normalizeFileUri(r.getString(0)))
-        .map(_ -> r.getLong(1))).toMap
-    val bitmaps: Map[String, org.roaringbitmap.longlong.Roaring64Bitmap] =
-      if (!useDvs) Map.empty
-      else rows.flatMap { r =>
-        byAbs.get(Stats.normalizeFileUri(r.getString(0)))
-          .map(_ -> Dv.deserialize(r.getAs[Array[Byte]](2)))
-      }.toMap
-    val touched = candidates.filter(f => counts.contains(f.path))
-    val (fullMatch, partial) = touched.partition { f =>
-      f.stats.exists(st => counts(f.path) == st.numRecords - f.dvCardinality)
-    }
-    val (dvTargets, rewriteTargets) =
-      if (!useDvs) (Seq.empty[AddFile], partial)
-      else partial.partition { f =>
-        f.stats.exists(st =>
-          counts(f.path) <= dvMaxFraction * (st.numRecords - f.dvCardinality))
-      }
-    MatchClassification(counts, bitmaps, touched, fullMatch, dvTargets,
-      rewriteTargets)
-  }
-
-  /** Union each target's matched-index bitmap (already computed by
-    * [[classifyMatches]]'s single aggregation job — no re-scan) into its
-    * live deletion vector and write the new sidecars.
-    */
-  private def buildDvs(cls: MatchClassification, now: Long): Seq[AddFile] =
-    cls.dvTargets.map { f =>
-      val bm = Dv.bitmapOf(path, f)
-        .getOrElse(new org.roaringbitmap.longlong.Roaring64Bitmap())
-      bm.or(cls.bitmaps(f.path))
-      Dv.attach(path, f, bm, now, dvInlineMax)
-    }
 
   /** UPDATE SET WHERE (L3) with deletion vectors: a small update DVs the
     * old row versions in place and APPENDS only the updated rows — cost
@@ -836,54 +717,152 @@ final class LakeTable private (
   def update(cond: Column, set: Map[String, Column], useDvs: Boolean = true,
       dvMaxFraction: Double = 0.5): Unit = {
     require(pinnedVersion.isEmpty, "cannot write through a time-travel handle")
-    val (snap, distCands) = snapshotForDml(cond)
-    val pcs = snap.metaData.partitionColumns
+    val (snap, candidates) = snapshotForDml(cond)
     val bad = set.keys.filterNot(snap.schema.fieldNames.contains)
     require(bad.isEmpty, s"UPDATE SET on unknown column(s): ${bad.mkString(",")}")
-    val cls = classifyMatches(snap, cond, useDvs, dvMaxFraction, distCands)
-    if (cls.touched.isEmpty) return
-    val now = System.currentTimeMillis()
-
-    // ONE pass over the touched files: matched rows, plus every row of a
-    // rewrite target. Full-match and DV'd files lose their old row
-    // versions (remove / bitmap) and re-append only the matched rows;
-    // rewrite targets rewrite whole. The data row is the assigned row;
-    // the change rows are the matched rows' pre- and post-images.
-    val matched = coalesceFalse(cond)
-    val rewriting =
-      if (cls.rewriteTargets.isEmpty) lit(false)
-      else {
-        val rw = cls.rewriteTargets.map(absPath).toSet
-        val inRewrite = udf((p: String) => rw.contains(Stats.normalizeFileUri(p)))
-        inRewrite(col("__dv_path"))
-      }
+    if (candidates.isEmpty) return
+    // the data row is the assigned row; the change rows are the matched
+    // rows' pre- and post-images
     val dataCols = snap.schema.fieldNames.map(col).toSeq
     val assigned = snap.schema.fields.map { f =>
-      set.get(f.name) match {
-        case Some(v) => when(matched, v.cast(f.dataType)).otherwise(col(f.name))
-        case None => col(f.name)
-      }
+      set.get(f.name).map(_.cast(f.dataType)).getOrElse(col(f.name))
     }.toSeq
-    val (adds, cdcFiles) = LakeTable.stageFilesAndChanges(spark, path,
-      Cdc.rows(readFilesInternal(snap, cls.touched, withMeta = true)
-          .where(matched || rewriting), snap.schema, cdfEnabled(snap),
+    dmlPass(snap, candidates, cond,
+      Some(hits => stageDml(snap, Cdc.rows(hits, snap.schema, cdfEnabled(snap),
         data = lit(true), newImage = assigned,
-        old = matched, oldImage = dataCols, oldType = lit(Cdc.UPDATE_PRE),
-        nu = matched, newType = lit(Cdc.UPDATE_POST)),
-      snap.schema, pcs, Bucketing.specOf(snap.metaData), Constraints.of(snap.metaData),
-      snap.metaData.properties)
+        old = lit(true), oldImage = dataCols, oldType = lit(Cdc.UPDATE_PRE),
+        nu = lit(true), newType = lit(Cdc.UPDATE_POST)))),
+      useDvs, dvMaxFraction,
+      "UPDATE", Map("predicate" -> cond.toString, "set" -> set.keys.mkString(",")))
+  }
 
-    val removes = (cls.fullMatch ++ cls.dvTargets ++ cls.rewriteTargets)
+  /** Stage a DML's output with the table's layout and CHECK constraints. */
+  private def stageDml(snap: Snapshot, df: DataFrame): (Seq[AddFile], Seq[CdcFile]) =
+    LakeTable.stageFilesAndChanges(spark, path, df, snap.schema,
+      snap.metaData.partitionColumns, Bucketing.specOf(snap.metaData),
+      Constraints.of(snap.metaData), snap.metaData.properties)
+
+  /** DELETE's and UPDATE's one uncached pass over the candidates' rows
+    * where `cond` holds: every such row is claimed (its old version
+    * leaves the table) and `write` stages the pass's output. A pass that
+    * matched nothing drops what it staged and commits nothing.
+    * @return rows claimed
+    */
+  private def dmlPass(snap: Snapshot, candidates: Seq[AddFile], cond: Column,
+      write: Option[DataFrame => (Seq[AddFile], Seq[CdcFile])],
+      useDvs: Boolean, dvMaxFraction: Double,
+      op: String, params: Map[String, String]): Long = {
+    val hits = readFilesInternal(snap, candidates, withMeta = true).where(cond)
+    val (claims, staged) = claimPass(hits,
+      MergeClaimsAgg.claims(col("__dv_path"), col("__dv_idx"), lit(false), lit(0)), write)
+    if (claims.isEmpty) {
+      val (adds, cdcs) = staged
+      (adds.flatMap(a => a.path +: a.bloomPath.toSeq) ++ cdcs.map(_.path))
+        .foreach(p => Files.deleteIfExists(Paths.get(path, p)))
+      return 0L
+    }
+    commitClaims(snap, candidates, claims, staged, useDvs, dvMaxFraction,
+      rewroteWhole = false, op, params)
+  }
+
+  /** The single pass of a DML: per-file claims ([[MergeClaimsAgg]], the
+    * ungrouped aggregate `claims`) over `rows`. With a `write`, the claims
+    * are the observed metric of the write that stages the pass's output,
+    * so the rows are computed once, uncached; without one nothing is
+    * written and the claims take one aggregation. Partials are keyed by
+    * partition id, so a retried map stage cannot double-count, and
+    * CollectMetrics is a pushdown barrier, so filters `write` puts above
+    * it cannot drop rows from the claims. Where stageFilesAndChanges
+    * splits the write in two, each observes all of `rows` and the first
+    * to finish completes the observation. The driver receives one record
+    * per claimed file, never a row per claimed row.
+    */
+  private def claimPass(rows: DataFrame, claims: Column,
+      write: Option[DataFrame => (Seq[AddFile], Seq[CdcFile])])
+      : (Map[String, MergeFileClaims], (Seq[AddFile], Seq[CdcFile])) = {
+    val (blob, staged) = write match {
+      case None =>
+        (rows.agg(claims.as("__claims")).head().getAs[Array[Byte]](0),
+          (Seq.empty[AddFile], Seq.empty[CdcFile]))
+      case Some(w) =>
+        val obs = new org.apache.spark.sql.Observation()
+        val staged = w(rows.observe(obs, claims.as("__claims")))
+        (obs.get("__claims").asInstanceOf[Array[Byte]], staged)
+    }
+    val decoded = MergeClaimsAgg.decode(blob)
+    DmlMetrics.lastIdentityRowsCollected.set(decoded.size.toLong)
+    (decoded, staged)
+  }
+
+  /** The shared end of DELETE, UPDATE and MERGE once the pass has
+    * returned its claims: fully claimed files become metadata removes;
+    * files claimed up to `dvMaxFraction` of their live rows get the
+    * claims unioned into their deletion vector; the rest (every
+    * partially claimed file without `useDvs`) rewrite to their
+    * survivors, the claim bitmap shipped inline with the scan (never
+    * persisted). With `rewroteWhole` the pass already rewrote every
+    * touched file (copy-on-write MERGE), so they all go. One
+    * non-rebaseable commit carries it all with the pass's `staged` files
+    * and `extra` actions.
+    * @return rows claimed
+    */
+  private def commitClaims(snap: Snapshot, touched: Seq[AddFile],
+      claims: Map[String, MergeFileClaims], staged: (Seq[AddFile], Seq[CdcFile]),
+      useDvs: Boolean, dvMaxFraction: Double, rewroteWhole: Boolean,
+      op: String, params: Map[String, String],
+      outputRows: Option[Long] = None, extra: Seq[Action] = Seq.empty): Long = {
+    val byAbs = touched.map(f => absPath(f) -> f.path).toMap
+    val claimed: Map[String, org.roaringbitmap.longlong.Roaring64Bitmap] =
+      claims.flatMap { case (p, c) =>
+        val bm = Dv.deserialize(c.claims)
+        if (bm.isEmpty) None // ambiguity-only file, no clause claimed a row
+        else byAbs.get(Stats.normalizeFileUri(p)).map(_ -> bm)
+      }
+    def claimedOf(f: AddFile): Long = claimed(f.path).getLongCardinality
+    val (fullMatch, partial) =
+      if (rewroteWhole) (touched, Seq.empty[AddFile])
+      else touched.filter(f => claimed.contains(f.path)).partition { f =>
+        f.stats.exists(st => claimedOf(f) == st.numRecords - f.dvCardinality)
+      }
+    val (dvTargets, rewriteTargets) =
+      if (!useDvs) (Seq.empty[AddFile], partial)
+      else partial.partition { f =>
+        f.stats.exists(st => claimedOf(f) <= dvMaxFraction * (st.numRecords - f.dvCardinality))
+      }
+    val now = System.currentTimeMillis()
+    val dvAdds = dvTargets.map { f =>
+      val bm = Dv.bitmapOf(path, f)
+        .getOrElse(new org.roaringbitmap.longlong.Roaring64Bitmap())
+      bm.or(claimed(f.path))
+      Dv.attach(path, f, bm, now, dvInlineMax)
+    }
+    val rewriteAdds: Seq[AddFile] =
+      if (rewriteTargets.isEmpty) Seq.empty
+      else {
+        val lookup = new DvLookup(path, Map.empty,
+          rewriteTargets.map(f => absPath(f) -> Dv.serialize(claimed(f.path))).toMap)
+        val survivors = readFilesInternal(snap, rewriteTargets, withMeta = true)
+          .where(!org.apache.spark.sql.graft.DvExpressions.rowDeleted(
+            col("__dv_path"), col("__dv_idx"), lookup))
+          .select(snap.schema.fieldNames.map(col).toSeq: _*)
+        LakeTable.stageFiles(spark, path, survivors, snap.schema,
+          snap.metaData.partitionColumns, Bucketing.specOf(snap.metaData),
+          props = snap.metaData.properties)
+      }
+    val (appended, cdcFiles) = staged
+    val claimedRows = claimed.values.map(_.getLongCardinality).sum
+    val removes = (fullMatch ++ dvTargets ++ rewriteTargets)
       .map(f => Action.of(RemoveFile(f.path, now, f.partitionValues)))
-    val actions = removes ++ (buildDvs(cls, now) ++ adds).map(Action.of) ++
-      cdcFiles.map(Action.of) :+
-      Action.of(CommitInfo(now, "UPDATE",
-        Map("predicate" -> cond.toString, "set" -> set.keys.mkString(","),
-          "deletionVectors" -> cls.dvTargets.size.toString),
-        numAddedFiles = adds.size.toLong,
-        numRemovedFiles = (cls.fullMatch.size + cls.rewriteTargets.size).toLong,
-        numOutputRows = cls.matchedRows))
+    val actions = extra ++ removes ++
+      (dvAdds ++ rewriteAdds ++ appended).map(Action.of) ++ cdcFiles.map(Action.of) :+
+      Action.of(CommitInfo(now, op,
+        params ++ Map("deletionVectors" -> dvTargets.size.toString,
+          "fullFileRemoves" -> fullMatch.size.toString),
+        numAddedFiles = (rewriteAdds.size + appended.size).toLong,
+        numRemovedFiles = (fullMatch.size + rewriteTargets.size).toLong,
+        numOutputRows = outputRows.getOrElse(claimedRows)))
     commitWithRetry(snap.version, actions, rebaseable = false)
+    claimedRows
   }
 
   /** MERGE INTO (L4/J1): copy-on-write upsert, the
@@ -1128,16 +1107,10 @@ final class LakeTable private (
     // path bitmaps exactly these, and multi-match ambiguity is detected
     // on them without generating row ids.
     //
-    // Every merge shape runs ONE uncached pass over the join. The claims
-    // aggregation rides the staging WRITE job as an observed metric
-    // (Dataset.observe + [[MergeClaimsAgg]]). Partials are keyed by
-    // partition id, so a retried map stage cannot double-count, and
-    // CollectMetrics is a pushdown barrier, so the filters above it cannot
-    // drop rows from the claims. The same write carries the new row
-    // versions, the change rows of a change-feed table ([[Cdc.rows]]) and,
-    // copy-on-write, the kept rows of the touched files. Where
-    // stageFilesAndChanges splits the write in two, each observes the
-    // whole join and the first to finish completes the observation.
+    // Every merge shape runs ONE uncached pass over the join
+    // ([[claimPass]]): the claims ride, as its observed metric, the write
+    // of the new row versions, the change rows of a change-feed table
+    // ([[Cdc.rows]]) and, copy-on-write, the kept rows of the touched files.
     val cdf = cdfEnabled(snap)
     val tRows = readFilesInternal(snap, touched, withMeta = true)
       .withColumn("__tgt", lit(true))
@@ -1228,30 +1201,13 @@ final class LakeTable private (
       // one (file, bitmap blob, maxMatches) record per affected FILE —
       // never a row per claimed target row. Files staged by an ambiguous
       // merge stay uncommitted (vacuum-reapable orphans, like any failed
-      // commit).
-      val claimsCol = MergeClaimsAgg.claims(
-        coalesce(col("t.__dv_path"), lit("")), coalesce(col("t.__dv_idx"), lit(-1L)),
-        isMatched, actionOf).as("__claims")
-      val (claimsBlob, appendedAdds, cdcFiles) =
-        if (dataEmits.isEmpty && !cdf) {
-          // delete-only clauses and no change feed: nothing to write, so
-          // the claims take one dedicated uncached aggregation pass
-          (joined.agg(claimsCol).head().getAs[Array[Byte]](0),
-            Seq.empty[AddFile], Seq.empty[CdcFile])
-        } else {
-          // the single pass: the claims fall out of the staging write as
-          // its observed metric. The plan contains the merge join, so the
-          // write never rebinds it away from the session the observation
-          // listens on.
-          val obs = new org.apache.spark.sql.Observation()
-          val (adds, cdcs) = LakeTable.stageFilesAndChanges(spark, path,
-            outRows(joined.observe(obs, claimsCol)), tgtSchema,
-            snap.metaData.partitionColumns, Bucketing.specOf(snap.metaData),
-            Constraints.of(snap.metaData), snap.metaData.properties)
-          (obs.get("__claims").asInstanceOf[Array[Byte]], adds, cdcs)
-        }
-      val claimsByPath = MergeClaimsAgg.decode(claimsBlob)
-      DmlMetrics.lastIdentityRowsCollected.set(claimsByPath.size.toLong)
+      // commit). Delete-only clauses on a table without a change feed
+      // write nothing.
+      val (claimsByPath, staged) = claimPass(joined,
+        MergeClaimsAgg.claims(
+          coalesce(col("t.__dv_path"), lit("")), coalesce(col("t.__dv_idx"), lit(-1L)),
+          isMatched, actionOf),
+        if (dataEmits.isEmpty && !cdf) None else Some(j => stageDml(snap, outRows(j))))
       if (matchedClauses.nonEmpty) {
         claimsByPath.find(_._2.maxMatches > 1).foreach { case (p, c) =>
           throw new IllegalArgumentException(
@@ -1261,71 +1217,11 @@ final class LakeTable private (
               "condition more specific")
         }
       }
-
-      // claimed old row versions: every matched/by-source row a clause
-      // applied to (update → superseded, delete → gone) — already
-      // aggregated into per-file bitmaps by the claims pass above
-      val byAbs = touched.map(f => absPath(f) -> f.path).toMap
-      val claimedByFile: Map[String, org.roaringbitmap.longlong.Roaring64Bitmap] =
-        claimsByPath.flatMap { case (p, c) =>
-          val bm = Dv.deserialize(c.claims)
-          if (bm.isEmpty) None // ambiguity-only file, no clause claimed a row
-          else byAbs.get(Stats.normalizeFileUri(p)).map(_ -> bm)
-        }.toMap
-
       // copy-on-write: the write above rewrote every touched file whole
-      val (fullMatch, partial) =
-        if (!useDvs) (touched, Seq.empty[AddFile])
-        else touched.filter(f => claimedByFile.contains(f.path)).partition { f =>
-          f.stats.exists(st =>
-            claimedByFile(f.path).getLongCardinality == st.numRecords - f.dvCardinality)
-        }
-      val (dvTargets, rewriteTargets) = partial.partition { f =>
-        f.stats.exists(st =>
-          claimedByFile(f.path).getLongCardinality <=
-            dvMaxFraction * (st.numRecords - f.dvCardinality))
-      }
-      val now = System.currentTimeMillis()
-
-      // bitmap union for DV'd files
-      val dvAdds = dvTargets.map { f =>
-        val bm = Dv.bitmapOf(path, f)
-          .getOrElse(new org.roaringbitmap.longlong.Roaring64Bitmap())
-        bm.or(claimedByFile(f.path))
-        Dv.attach(path, f, bm, now, dvInlineMax)
-      }
-
-      // heavily-claimed files rewrite to their surviving rows; the claim
-      // bitmaps ship inline with the scan (never persisted)
-      val rewriteAdds: Seq[AddFile] =
-        if (rewriteTargets.isEmpty) Seq.empty
-        else {
-          val inline = rewriteTargets.map { f =>
-            absPath(f) -> Dv.serialize(claimedByFile(f.path))
-          }.toMap
-          val lookup = new DvLookup(path, Map.empty, inline)
-          val survivors = readFilesInternal(snap, rewriteTargets, withMeta = true)
-            .where(!org.apache.spark.sql.graft.DvExpressions.rowDeleted(
-              col("__dv_path"), col("__dv_idx"), lookup))
-            .select(tgtSchema.fieldNames.map(col).toSeq: _*)
-          LakeTable.stageFiles(spark, path, survivors, tgtSchema,
-            snap.metaData.partitionColumns, Bucketing.specOf(snap.metaData),
-            props = snap.metaData.properties)
-        }
-
-      val outputRows = appendedAdds.flatMap(_.stats.map(_.numRecords)).sum
-      val removes = (fullMatch ++ dvTargets ++ rewriteTargets)
-        .map(f => Action.of(RemoveFile(f.path, now, f.partitionValues)))
-      val adds = (dvAdds ++ rewriteAdds ++ appendedAdds).map(Action.of)
-      val actions = propsActions ++ removes ++ adds ++ cdcFiles.map(Action.of) :+
-        Action.of(CommitInfo(now, "MERGE",
-          Map("condition" -> condition.toString,
-            "deletionVectors" -> dvTargets.size.toString,
-            "fullFileRemoves" -> fullMatch.size.toString),
-          numAddedFiles = (rewriteAdds.size + appendedAdds.size).toLong,
-          numRemovedFiles = (fullMatch.size + rewriteTargets.size).toLong,
-          numOutputRows = outputRows))
-      commitWithRetry(snap.version, actions, rebaseable = false)
+      commitClaims(snap, touched, claimsByPath, staged, useDvs, dvMaxFraction,
+        rewroteWhole = !useDvs, "MERGE", Map("condition" -> condition.toString),
+        outputRows = Some(staged._1.flatMap(_.stats.map(_.numRecords)).sum),
+        extra = propsActions)
     } finally {
       // release a materialized non-deterministic source promptly (an
       // exception before this try leaves it to Spark's ContextCleaner,
@@ -1655,14 +1551,7 @@ final class LakeTable private (
     val scoped = where match {
       case None => snap.files
       case Some(cond) =>
-        val e = resolveFilter(cond, snap.schema)
-        val refs = e.collect {
-          case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
-            a.name
-        }
-        val bad = refs.filterNot(pcs.contains)
-        require(bad.isEmpty,
-          s"OPTIMIZE WHERE supports partition columns only; got ${bad.mkString(",")}")
+        val e = requirePartitionScope(cond, snap.schema, pcs)
         snap.files.filter(f => Stats.mightMatch(f, e, snap.schema, pcs))
     }
     def hasDv(f: AddFile) = f.dvPath.isDefined || f.dvInline.isDefined
@@ -1744,7 +1633,7 @@ final class LakeTable private (
     }
     val nonPart = refs.filterNot(pcs.contains)
     require(nonPart.isEmpty,
-      s"cluster WHERE supports partition columns only; got ${nonPart.mkString(",")}")
+      s"OPTIMIZE WHERE supports partition columns only; got ${nonPart.mkString(",")}")
     e
   }
 

@@ -190,11 +190,12 @@ object MergeClaimsBuffer {
 final case class MergeFileClaims(claims: Array[Byte], maxMatches: Long,
     maxMatchesIdx: Long)
 
-/** The fused merge-claims aggregate: an UNGROUPED aggregate over
-  * `(dvPath, dvIdx, matched, action)` join rows that a `Dataset.observe`
-  * evaluates as a side effect of the merge's new-rows WRITE job — the
-  * full-outer join is computed once, with no cache, instead of cache +
-  * claims pass + projection pass. Exactly-once: partials are keyed by
+/** The fused DML-claims aggregate: an UNGROUPED aggregate over
+  * `(dvPath, dvIdx, matched, action)` rows that a `Dataset.observe`
+  * evaluates as a side effect of the DML's staging WRITE job — MERGE's
+  * full-outer join, or the rows DELETE and UPDATE match (`matched` false,
+  * `action` 0), is computed once, with no cache and no separate claims
+  * job. Exactly-once: partials are keyed by
   * partition id and the first partial of each partition wins
   * ([[MergeClaimsBuffer]]), so a re-run map stage, whose accumulator
   * updates the driver merges again, cannot double-count.
@@ -283,4 +284,24 @@ object MergeClaimsAgg
   val claims: UserDefinedFunction = udaf(MergeClaimsAgg,
     Encoders.tuple(Encoders.STRING, Encoders.scalaLong,
       Encoders.scalaBoolean, Encoders.scalaInt))
+}
+
+/** Test observability for the DML scale contract: the record count the most
+  * recent DML claims pass returned to the driver. Specs assert this stays
+  * O(files) under large-fraction DELETE/MERGE (the per-row collect was the
+  * one driver OOM hazard at 100 TB).
+  */
+private[graft] object DmlMetrics {
+  val lastIdentityRowsCollected = new java.util.concurrent.atomic.AtomicLong(-1L)
+  /** true when the most recent DELETE/UPDATE/MERGE resolved its candidates
+    * via the distributed checkpoint scan instead of a materialized
+    * snapshot. */
+  val lastDmlDistributed = new java.util.concurrent.atomic.AtomicBoolean(false)
+  /** Touched-file count of the most recent MERGE (post key-range pruning
+    * and prefilter) — lets specs assert the scan really narrowed. */
+  val lastMergeCandidateFiles = new java.util.concurrent.atomic.AtomicLong(-1L)
+  /** true when the most recent purgeStale resolved its live-file census
+    * inventory via the distributed checkpoint scan (big-log parity with
+    * DELETE/UPDATE) instead of a materialized snapshot. */
+  val lastPurgeDistributed = new java.util.concurrent.atomic.AtomicBoolean(false)
 }

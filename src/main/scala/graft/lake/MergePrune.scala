@@ -21,6 +21,10 @@ import org.apache.spark.sql.types.StructType
   */
 private[lake] object MergePrune {
 
+  /** Largest approximate source NDV per equi-key that still earns an
+    * IN-list filter (see [[sourceRangeFilters]]). */
+  private val InListMaxKeys = 64L
+
   private def conjuncts(e: Expression): Seq[Expression] = e match {
     case And(l, r) => conjuncts(l) ++ conjuncts(r)
     case other => Seq(other)
@@ -134,10 +138,8 @@ private[lake] object MergePrune {
     // larger) target side per value. The collected set is re-checked
     // against 2× the cap so an approximation error cannot ship an
     // unbounded list.
-    val ndvCap = spark.conf.getOption("spark.graft.merge.inListMaxKeys")
-      .flatMap(_.toLongOption).getOrElse(64L)
     val smallKeys = keys.zipWithIndex.collect {
-      case ((tk, sk), i) if ndvCap > 0 && row.getLong(3 * i + 2) <= ndvCap =>
+      case ((tk, sk), i) if row.getLong(3 * i + 2) <= InListMaxKeys =>
         (tk, sk)
     }
     val inFilters =
@@ -148,7 +150,7 @@ private[lake] object MergePrune {
           smallKeys.tail.map(k => collect_set(col(k._2))): _*).head()
         smallKeys.zipWithIndex.flatMap { case ((tk, _), i) =>
           val vs = setRow.getSeq[Any](i)
-          if (vs.isEmpty || vs.size > 2 * ndvCap) None
+          if (vs.isEmpty || vs.size > 2 * InListMaxKeys) None
           else try Some(col(tk).isin(vs: _*))
           catch { case scala.util.control.NonFatal(_) => None }
         }

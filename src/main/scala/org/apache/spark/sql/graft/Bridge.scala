@@ -33,6 +33,12 @@ object Bridge {
     * clears when the dropped twins are GC'd. Conf-change invalidation
     * keeps the twin exactly as fresh as clone-per-call for everything
     * a write reads from the session conf.
+    *
+    * An `Observation` attached to `df` completes through the listener
+    * the base session's ObservationManager registers on its first use;
+    * a clone copies only the listeners that exist when it is made. The
+    * manager is therefore created before every clone, so a frame observed
+    * on the base session completes when its write runs on the twin.
     */
   def rebindAdaptiveDisabled(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
@@ -44,6 +50,7 @@ object Bridge {
           case Some((cachedConfs, cachedTwin)) if cachedConfs == confs =>
             cachedTwin
           case _ =>
+            session.observationManager
             val t = session.cloneSession()
             t.conf.set("spark.sql.adaptive.enabled", "false")
             twinCache.put(session, (confs, t))
