@@ -30,10 +30,6 @@ object Verify {
       .foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
-        // lake writes inside a query flip outputTimestampType to INT64
-        // micros (UTC-adjusted) session-wide; result dumps must stay on
-        // the default so DuckDB reads naive timestamps for the compare
-        spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

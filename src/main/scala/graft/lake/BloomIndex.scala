@@ -98,9 +98,6 @@ object BloomProbe {
   *   - `graft.bloom.fpp`: false-positive rate (default 0.03).
   *   - `graft.bloom.maxItems`: cap on a file's expected-item sizing
   *     (default 4,000,000 — ~3.5 MB per column sidecar at 0.03).
-  *
-  * Session escape hatch: `spark.graft.bloom.read.enabled=false` disables
-  * probe-side pruning (sidecars still build).
   */
 object BloomIndex {
 

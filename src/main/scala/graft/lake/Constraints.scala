@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   *
   * Standard SQL semantics: a row violates a CHECK only when the
   * expression evaluates to FALSE; NULL (unknown) passes. Enforcement is
-  * codegen-friendly — the Scala paths inject a
-  * `when(expr).otherwise(raise_error)` filter into the write plan, the
-  * DSv2 writer evaluates one compiled predicate per row.
+  * codegen-friendly: [[enforce]] injects a
+  * `when(expr).otherwise(raise_error)` filter into the one staging
+  * write's plan, which every data write goes through.
   */
 object Constraints {
 

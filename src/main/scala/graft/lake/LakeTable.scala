@@ -43,6 +43,21 @@ object MergeClause {
     assignments: Map[String, Column]) extends MergeClause
 }
 
+/** Which existing files a [[LakeTable.write]] replaces. */
+sealed trait WriteMode
+object WriteMode {
+  /** None: the rows are added. */
+  case object Append extends WriteMode
+  /** Every file. */
+  case object Overwrite extends WriteMode
+  /** The files whose partition values satisfy `cond`, a predicate over
+    * partition columns only (SQL `INSERT OVERWRITE ... PARTITION (...)`). */
+  final case class OverwriteWhere(cond: Column) extends WriteMode
+  /** The files of the partitions the write produces rows for (dynamic
+    * partition overwrite). */
+  case object OverwritePartitions extends WriteMode
+}
+
 final class LakeTable private (
     val spark: SparkSession,
     val path: String,
@@ -62,15 +77,9 @@ final class LakeTable private (
   /** Value-level skipping probe for this table ([[BloomIndex]]): proves
     * equality atoms absent via per-file bloom sidecars. Root is
     * absolutized DRIVER-side so executor-evaluated closures (big-log
-    * candidate pruning) resolve sidecars CWD-independently. A `def`, so
-    * the session kill-switch is honored per operation. */
+    * candidate pruning) resolve sidecars CWD-independently. */
   private def bloomProbe: BloomProbe =
-    // unparseable values fall back to enabled: a kill-switch typo must
-    // not crash every read/DML with a Boolean parse error
-    if (spark.conf.getOption("spark.graft.bloom.read.enabled")
-        .flatMap(v => v.trim.toBooleanOption).getOrElse(true))
-      BloomIndex.probe(Paths.get(path).toAbsolutePath.normalize.toString)
-    else BloomProbe.none
+    BloomIndex.probe(Paths.get(path).toAbsolutePath.normalize.toString)
 
   /** Read with data skipping: `filters` are evaluated against partition
     * values and per-file min/max stats BEFORE Spark lists any file, then
@@ -435,34 +444,50 @@ final class LakeTable private (
   // ---- writes ----------------------------------------------------------
 
   def append(df: DataFrame, mergeSchema: Boolean = false): Unit =
-    write(df, overwrite = false, mergeSchema = mergeSchema, txn = None)
+    write(df, WriteMode.Append, mergeSchema)
 
   def overwrite(df: DataFrame, mergeSchema: Boolean = false): Unit =
-    write(df, overwrite = true, mergeSchema = mergeSchema, txn = None)
+    write(df, WriteMode.Overwrite, mergeSchema)
 
   /** Exactly-once streaming append: a (appId, batchId) already recorded
     * at or above this batchId makes the call a no-op (K6/K7 idempotent
     * foreachBatch sink).
     */
   def idempotentAppend(df: DataFrame, appId: String, batchId: Long,
-      mergeSchema: Boolean = true): Boolean = {
-    val snap = snapshot
-    if (snap.txns.get(appId).exists(_ >= batchId)) false
-    else { write(df, overwrite = false, mergeSchema = mergeSchema, txn = Some(SetTxn(appId, batchId))); true }
-  }
+      mergeSchema: Boolean = true): Boolean =
+    write(df, WriteMode.Append, mergeSchema, Some(SetTxn(appId, batchId)))
 
-  private def write(df: DataFrame, overwrite: Boolean, mergeSchema: Boolean,
-      txn: Option[SetTxn]): Unit = {
+  /** The one data write: the Scala API, SQL INSERT / CTAS / INSERT
+    * OVERWRITE and the streaming sink all commit here. Appends rebase
+    * onto concurrent commits; overwrites abort on them. With a `txn`,
+    * an (appId, batchId) already recorded at or above batchId makes the
+    * call a no-op that returns false, and the commit records it.
+    */
+  def write(df: DataFrame, mode: WriteMode, mergeSchema: Boolean = false,
+      txn: Option[SetTxn] = None): Boolean = {
     require(pinnedVersion.isEmpty, "cannot write through a time-travel handle")
     val snap = snapshot
+    if (txn.exists(t => snap.txns.get(t.appId).exists(_ >= t.batchId))) return false
+    val overwriteAll = mode == WriteMode.Overwrite
     val pcs = snap.metaData.partitionColumns
+    // decided before staging, so a bad WHERE fails before any file is written
+    val replaced: Seq[AddFile] => Seq[AddFile] = mode match {
+      case WriteMode.Append => _ => Nil
+      case WriteMode.Overwrite => _ => snap.files
+      case WriteMode.OverwriteWhere(cond) =>
+        val fs = filesWhere(snap, cond)
+        _ => fs
+      case WriteMode.OverwritePartitions => adds =>
+        val written = adds.map(_.partitionValues).toSet
+        snap.files.filter(f => written.contains(f.partitionValues))
+    }
     val (aligned, newSchema) = LakeTable.align(df, snap.schema, pcs, mergeSchema,
       LakeTable.nextFieldId(snap))
     // evolution may not resurrect a freed name while old-era files are
-    // live (stale name-keyed stats; see alterAddColumn) — an OVERWRITE
-    // removes every old file in the same commit, so it may, and it
-    // clears the registry below
-    if (!overwrite)
+    // live (stale name-keyed stats; see alterAddColumn) — a full
+    // OVERWRITE removes every old file in the same commit, so it may,
+    // and it clears the registry below
+    if (!overwriteAll)
       LakeTable.checkFreedNames(
         newSchema.fieldNames.filterNot(snap.schema.fieldNames.contains),
         snap.metaData.properties)
@@ -474,7 +499,7 @@ final class LakeTable private (
     // a full overwrite leaves no file that could carry stale name-keyed
     // stats: the freed-name registry resets with it
     val clearedProps =
-      if (overwrite)
+      if (overwriteAll)
         snap.metaData.properties
           .filterNot(_._1.startsWith(LakeTable.FREED_NAME_PREFIX))
       else snap.metaData.properties
@@ -486,10 +511,9 @@ final class LakeTable private (
             (LakeTable.MAX_COLUMN_ID_PROP ->
               LakeTable.maxFieldId(newSchema).toString))))
       else Seq.empty
-    val removes =
-      if (overwrite) snap.files.map(f => Action.of(RemoveFile(f.path, now, f.partitionValues)))
-      else Seq.empty
-    val ci = CommitInfo(now, if (overwrite) "OVERWRITE" else "APPEND",
+    val removes = replaced(adds).map(f =>
+      Action.of(RemoveFile(f.path, now, f.partitionValues)))
+    val ci = CommitInfo(now, if (mode == WriteMode.Append) "APPEND" else "OVERWRITE",
       Map("mergeSchema" -> mergeSchema.toString),
       numAddedFiles = adds.size.toLong, numRemovedFiles = removes.size.toLong,
       numOutputRows = rows)
@@ -497,11 +521,33 @@ final class LakeTable private (
       txn.map(Action.of).toSeq :+ Action.of(ci)
     graft.util.Prof(s"write.commit $path") {
       commitWithRetry(snap.version, actions,
-        rebaseable = !overwrite && metaAction.isEmpty,
+        rebaseable = mode == WriteMode.Append && metaAction.isEmpty,
         readMeta = Some(snap.metaData))
     }
     // post-commit maintenance — never fails the (already durable) write
     graft.util.Prof(s"write.autoCompact $path")(maybeAutoCompact())
+    true
+  }
+
+  /** The files an overwrite WHERE replaces. The predicate may reference
+    * partition columns only ([[requirePartitionScope]]) and is evaluated
+    * EXACTLY on each file's partition values: skipping's might-match
+    * answers "unknown" with true, which here would remove files the
+    * predicate does not select.
+    */
+  private def filesWhere(snap: Snapshot, cond: Column): Seq[AddFile] = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, Literal}
+    val e = requirePartitionScope(cond, snap.schema,
+      snap.metaData.partitionColumns, "overwrite WHERE")
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    val selected = snap.files.map(_.partitionValues).distinct.filter { pv =>
+      e.transform { case a: AttributeReference =>
+        require(pv.contains(a.name),
+          s"overwrite WHERE: files of an older partition spec have no ${a.name} value")
+        Cast(Literal(pv(a.name)), a.dataType, Some(tz))
+      }.eval(null) == true
+    }.toSet
+    snap.files.filter(f => selected.contains(f.partitionValues))
   }
 
   /** Optimistic commit. Blind appends rebase onto any concurrent commit;
@@ -1619,13 +1665,15 @@ final class LakeTable private (
     */
   def hilbertBy(cols: String*): Unit = clusterByCurve(cols, hilbert = true)
 
-  /** Resolve a maintenance `WHERE` scope and enforce its contract: the
-    * predicate may reference PARTITION columns only (partition values
-    * evaluate exactly, so scoping is never lossy; a data-column scope
-    * would make "which files rewrite" depend on conservative stats).
+  /** Resolve a maintenance or overwrite `WHERE` scope and enforce its
+    * contract: the predicate may reference PARTITION columns only
+    * (partition values evaluate exactly, so scoping is never lossy; a
+    * data-column scope would make "which files rewrite" depend on
+    * conservative stats).
     */
   private def requirePartitionScope(cond: Column, schema: StructType,
-      pcs: Seq[String]): org.apache.spark.sql.catalyst.expressions.Expression = {
+      pcs: Seq[String], what: String = "OPTIMIZE WHERE")
+      : org.apache.spark.sql.catalyst.expressions.Expression = {
     val e = resolveFilter(cond, schema)
     val refs = e.collect {
       case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
@@ -1633,7 +1681,7 @@ final class LakeTable private (
     }
     val nonPart = refs.filterNot(pcs.contains)
     require(nonPart.isEmpty,
-      s"OPTIMIZE WHERE supports partition columns only; got ${nonPart.mkString(",")}")
+      s"$what supports partition columns only; got ${nonPart.mkString(",")}")
     e
   }
 
@@ -2756,9 +2804,6 @@ object LakeTable {
     val df = Constraints.enforce(df0, constraints)
     val stagingName = STAGING_PREFIX + UUID.randomUUID().toString
     val staging = Paths.get(tablePath, stagingName)
-    // INT64 micros instead of legacy INT96: footer min/max stats become
-    // usable for timestamp skipping (INT96 emits none)
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     // re-attach the table schema's field metadata (parquet field ids):
     // computed columns in DML rewrites lose it, and files MUST carry ids
     // for rename/drop to stay metadata-only
@@ -2852,10 +2897,21 @@ object LakeTable {
       case None => writeDf0
     }
     val writer = writeDf.write.mode("overwrite")
-    graft.util.Prof(s"stage.write $tablePath") {
+    // INT64 micros instead of legacy INT96: footer min/max stats become
+    // usable for timestamp skipping (INT96 emits none). Set on the
+    // session that runs the write for this write only, so the caller's
+    // own parquet writes keep their encoding.
+    val tsKey = org.apache.spark.sql.internal.SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key
+    val writeConf = writeDf.sparkSession.conf
+    val callerTs = writeConf.getAll.get(tsKey)
+    writeConf.set(tsKey, "TIMESTAMP_MICROS")
+    try graft.util.Prof(s"stage.write $tablePath") {
       (if (routedCols.nonEmpty) writer.partitionBy(routedCols: _*) else writer)
         .parquet(staging.toString)
-    }
+    } catch {
+      // a failed write (a CHECK violation, a task error) leaves no staging dir
+      case e: Throwable => graft.util.Fs.deleteRecursively(staging); throw e
+    } finally callerTs.fold(writeConf.unset(tsKey))(writeConf.set(tsKey, _))
 
     val root = Paths.get(tablePath)
     val moved = scala.collection.mutable.ArrayBuffer[(String, Path)]()
@@ -2885,13 +2941,7 @@ object LakeTable {
       }
     walk(staging)
     // clear staging remnants (_SUCCESS etc.)
-    def rmdir(dir: Path): Unit = {
-      graft.util.Fs.listDir(dir).foreach { p =>
-        if (Files.isDirectory(p)) rmdir(p) else Files.deleteIfExists(p)
-      }
-      Files.deleteIfExists(dir)
-    }
-    rmdir(staging)
+    graft.util.Fs.deleteRecursively(staging)
 
     if (moved.isEmpty && changed.isEmpty) {
       // drain the observation so its listener unregisters

@@ -112,26 +112,18 @@ object PartitionTransforms {
     * that becomes the directory name). Deterministic string/int
     * renderings — [[sourceRange]] inverts them for skipping.
     *
-    * Delegates to the Catalyst twin ([[expression]]) so the batch
-    * writer, the DSv2 row writer, and the skipping inversion share ONE
-    * definition — in particular the UTC pin on year/month/day: the
-    * date_format/year DSL functions render timestamps in the SESSION
-    * timezone, so a non-UTC session would route a row into one month
-    * directory while [[sourceRange]] claims the file's rows lie in that
-    * month's UTC range — files whose queried rows fall outside the
-    * claimed range get skipped, and the two writers would route the
-    * same row to different directories. */
+    * Year/month/day are pinned to UTC: the date_format/year DSL
+    * functions render timestamps in the SESSION timezone, so a non-UTC
+    * session would route a row into one month directory while
+    * [[sourceRange]] claims the file's rows lie in that month's UTC
+    * range — files whose queried rows fall outside the claimed range
+    * would get skipped. */
   def column(t: Transform, dt: DataType): Column = {
-    import org.apache.spark.sql.graft.Bridge
-    Bridge.column(expression(t, Bridge.expr(col(t.col)), dt))
-  }
-
-  /** Catalyst twin of [[column]] for the row-level DSv2 writer. */
-  def expression(t: Transform, attr: org.apache.spark.sql.catalyst.expressions.Expression,
-      dt: DataType): org.apache.spark.sql.catalyst.expressions.Expression = {
     import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.graft.Bridge
+    val attr = Bridge.expr(col(t.col))
     val utc = Some("UTC")
-    t.fn match {
+    Bridge.column(t.fn match {
       case "year" => Year(Cast(attr, DateType, utc))
       case "month" => DateFormatClass(attr, Literal("yyyy-MM"), utc)
       case "day" => DateFormatClass(attr, Literal("yyyy-MM-dd"), utc)
@@ -141,7 +133,7 @@ object PartitionTransforms {
           val n = Literal(t.arg.get.toLong)
           Subtract(Cast(attr, LongType), Pmod(Cast(attr, LongType), n))
       }
-    }
+    })
   }
 
   /** The SOURCE-column range implied by a file's recorded transform

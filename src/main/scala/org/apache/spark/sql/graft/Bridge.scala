@@ -32,7 +32,10 @@ object Bridge {
     * bench run, a session-wide event-dispatch slowdown that only
     * clears when the dropped twins are GC'd. Conf-change invalidation
     * keeps the twin exactly as fresh as clone-per-call for everything
-    * a write reads from the session conf.
+    * a write reads from the session conf. The parquet timestamp type is
+    * left out of the comparison: the staging write sets it on the session
+    * it runs on for its own duration only, and a write on the base
+    * session must not make a concurrent lookup re-clone.
     *
     * An `Observation` attached to `df` completes through the listener
     * the base session's ObservationManager registers on its first use;
@@ -44,7 +47,8 @@ object Bridge {
     val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     if (!session.sessionState.conf.adaptiveExecutionEnabled) df
     else {
-      val confs = session.sessionState.conf.getAllConfs
+      val confs = session.sessionState.conf.getAllConfs -
+        org.apache.spark.sql.internal.SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key
       val twin = twinCache.synchronized {
         Option(twinCache.get(session)) match {
           case Some((cachedConfs, cachedTwin)) if cachedConfs == confs =>

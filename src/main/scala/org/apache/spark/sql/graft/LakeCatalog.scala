@@ -23,9 +23,10 @@ import graft.lake.LakeTable
   *
   * Reads delegate to Spark's own ParquetTable pinned to the SNAPSHOT's
   * file list, so pushdown/pruning/vectorized scan are stock; the commit
-  * log decides which files exist. Writes stay on the Scala API
-  * (LakeTable.append/merge/...) — SQL DML through DSv2 would bypass the
-  * commit protocol, so the catalog does not advertise write capability.
+  * log decides which files exist. SQL writes (INSERT, INSERT OVERWRITE,
+  * CTAS, DELETE, UPDATE, MERGE) resolve against these tables and run as
+  * [[LakeTable]] calls ([[LakeDmlRule]]), so the tables advertise no
+  * DSv2 write capability.
   *
   * Register with:
   *   spark.conf.set("spark.sql.catalog.lake",
@@ -80,8 +81,7 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces with FunctionCata
       files,
       Some(snap.schema),
       classOf[ParquetFileFormat])
-    new LakeV2Table(t, fullName, parquet,
-      writable = asOf.isEmpty && asOfTs.isEmpty)
+    new LakeV2Table(t, fullName, parquet)
   }
 
   /** Plain load, plus Delta's `@v<N>` name suffix (the reference's
@@ -117,7 +117,7 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces with FunctionCata
 
   /** SQL `CREATE TABLE lake.db.t (...) PARTITIONED BY (...)` and the
     * first half of CTAS (the data then arrives as an AppendData on the
-    * returned table's [[LakeWrite]]).
+    * returned table, which [[LakeDmlRule]] runs as one lake write).
     */
   override def createTable(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: util.Map[String, String]): Table = {

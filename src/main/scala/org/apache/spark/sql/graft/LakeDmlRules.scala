@@ -8,18 +8,19 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{BooleanType, LongType}
 
-import graft.lake.LakeTable
+import graft.lake.{Bucketing, LakeTable, PartitionTransforms, WriteMode}
 
-/** SQL-statement DML on lake tables (VERDICT.md round-1 #1): a post-hoc
-  * resolution rule converts analyzed `DELETE FROM` / `UPDATE` /
-  * `MERGE INTO` on a [[LakeV2Table]] into runnable commands that execute
-  * the engine's existing copy-on-write rewrites
-  * (`graft.lake.LakeTable.delete/update/merge`). Same pattern Delta uses
-  * publicly (DeltaAnalysis → Delta command nodes); fires BEFORE Spark's
-  * row-level-operation rewrites, which would otherwise reject the table
-  * for not implementing SupportsRowLevelOperations.
+/** SQL-statement writes on lake tables (VERDICT.md round-1 #1): a
+  * post-hoc resolution rule converts analyzed `DELETE FROM` / `UPDATE` /
+  * `MERGE INTO` and the V2 writes (`INSERT INTO`, `INSERT OVERWRITE`,
+  * CTAS's data write, `df.writeTo`) on a [[LakeV2Table]] into runnable
+  * commands that call the engine's own `graft.lake.LakeTable.delete/
+  * update/merge/write`. Same pattern Delta uses publicly (DeltaAnalysis →
+  * Delta command nodes); fires BEFORE Spark's row-level-operation
+  * rewrites, which would otherwise reject the table for not implementing
+  * SupportsRowLevelOperations, and before the write-capability check.
   *
   * Reference scenarios covered: `%sql MERGE INTO / UPDATE / DELETE FROM`
   * (`02.delta_lake_primer.py:215-320`, `03.iceberg_primer.py:183-215`).
@@ -49,6 +50,21 @@ class LakeDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
         case Some(t) => convertMerge(t, m)
         case None => m
       }
+    case w: V2WriteCommand if w.resolved =>
+      (LakeRel.unapply(w.table), writeMode(w)) match {
+        case (Some(t), Some(mode)) => RunLakeWrite(t.lake, w.query, mode)
+        case _ => w
+      }
+  }
+
+  private def writeMode(w: V2WriteCommand): Option[WriteMode] = w match {
+    case _: AppendData => Some(WriteMode.Append)
+    case o: OverwriteByExpression => Some(o.deleteExpr match {
+      case Literal(true, BooleanType) => WriteMode.Overwrite
+      case e => WriteMode.OverwriteWhere(unresolve(e, Map.empty))
+    })
+    case _: OverwritePartitionsDynamic => Some(WriteMode.OverwritePartitions)
+    case _ => None
   }
 
   private def convertMerge(t: LakeV2Table, m: MergeIntoTable): LogicalPlan = {
@@ -203,6 +219,29 @@ class LakeCdfReadRule(session: SparkSession) extends Rule[LogicalPlan] {
         }
         changes.queryExecution.analyzed
     }
+}
+
+/** An analyzed V2 write as one [[LakeTable.write]]. The query's output
+  * already carries the table's column names and types. Rows of a
+  * partitioned table are clustered by its partition layout first, so a
+  * wide insert writes one file per partition value instead of one per
+  * task and value; a bucketed table's write routes rows by bucket itself.
+  */
+case class RunLakeWrite(
+    @transient lake: LakeTable,
+    @transient query: LogicalPlan,
+    mode: WriteMode) extends LeafRunnableCommand {
+  override def run(sparkSession: SparkSession): Seq[Row] = {
+    val df = org.apache.spark.sql.classic.Dataset.ofRows(
+      sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession], query)
+    val snap = lake.snapshot
+    val pcs = snap.metaData.partitionColumns
+    val clustered =
+      if (pcs.isEmpty || Bucketing.specOf(snap.metaData).isDefined) df
+      else df.repartition(PartitionTransforms.layoutColumns(pcs, snap.schema): _*)
+    lake.write(clustered, mode)
+    Seq.empty
+  }
 }
 
 case class RunLakeDelete(

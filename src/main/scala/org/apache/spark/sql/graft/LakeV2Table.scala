@@ -7,7 +7,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -16,15 +15,15 @@ import graft.lake.LakeTable
 
 /** The DSv2 Table for a lake table: reads delegate to Spark's own
   * ParquetTable pinned to the loaded snapshot's file list (stock
-  * pushdown/pruning/vectorization); writes go through [[LakeWrite]] —
-  * executor-staged parquet + one atomic commit-log publish. Time-travel
-  * handles (`VERSION AS OF`) are read-only, same rule as the Scala API.
+  * pushdown/pruning/vectorization). SQL writes never reach a DSv2 write:
+  * [[LakeDmlRule]] turns them into one [[graft.lake.LakeTable.write]].
+  * Time-travel handles (`VERSION AS OF`) are read-only, same rule as the
+  * Scala API.
   */
 class LakeV2Table(
     val lake: LakeTable,
     ident: String,
-    inner: ParquetTable,
-    val writable: Boolean) extends Table with SupportsRead with SupportsWrite
+    inner: ParquetTable) extends Table with SupportsRead
   with SupportsMetadataColumns {
 
   private[graft] val snap = lake.snapshot
@@ -97,11 +96,6 @@ class LakeV2Table(
     util.EnumSet.of(
       TableCapability.BATCH_READ,
       TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE,
-      TableCapability.STREAMING_WRITE,
-      TableCapability.TRUNCATE,
-      TableCapability.OVERWRITE_BY_FILTER,
-      TableCapability.OVERWRITE_DYNAMIC,
       // MERGE WITH SCHEMA EVOLUTION: the analyzer alters the table
       // through LakeCatalog.alterTable (metadata-only ADD COLUMN
       // commits) before expanding star actions
@@ -130,13 +124,6 @@ class LakeV2Table(
     // MicroBatchStream; batch reads and every pushdown surface delegate
     // straight through
     new LakeCatalogScanBuilder(base, lake, options)
-  }
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    if (!writable)
-      throw new UnsupportedOperationException(
-        s"$ident: cannot write through a time-travel handle")
-    new LakeWriteBuilder(lake, info)
   }
 }
 

@@ -92,17 +92,6 @@ class BloomIndexSpec extends AnyFunSuite {
     assert(skipped === 0 && BloomMetrics.skippedByBloom.get() > 0)
   }
 
-  test("kill switch: spark.graft.bloom.read.enabled=false disables pruning only") {
-    val path = tmpDir()
-    val t = unclusteredTable(path)
-    spark.conf.set("spark.graft.bloom.read.enabled", "false")
-    try {
-      BloomMetrics.reset()
-      assert(t.read($"id" === 10L).count() === 1)
-      assert(BloomMetrics.skippedByBloom.get() === 0)
-    } finally spark.conf.unset("spark.graft.bloom.read.enabled")
-  }
-
   test("DELETE / UPDATE by key prune candidates through the bloom") {
     val path = tmpDir()
     val t = unclusteredTable(path)
@@ -483,15 +472,6 @@ class BloomIndexSpec extends AnyFunSuite {
     assert(t.read($"id" === 5L).collect().map(_.getLong(0)).toSeq === Seq(5L))
     assert(BloomMetrics.skippedByBloom.get() === 0,
       "range-excluded files must not consult the bloom")
-  }
-
-  test("kill-switch typo degrades to enabled, never crashes reads") {
-    val path = tmpDir()
-    val t = unclusteredTable(path)
-    spark.conf.set("spark.graft.bloom.read.enabled", "nope")
-    try {
-      assert(t.read($"id" === 10L).count() === 1)
-    } finally spark.conf.unset("spark.graft.bloom.read.enabled")
   }
 
   test("byte/short columns prune with ordinary integer literals") {

@@ -127,6 +127,131 @@ class LakeCatalogSpec extends AnyFunSuite {
     assert(after.toSeq === Seq(2L, 9L))
   }
 
+  test("dynamic partition overwrite replaces only the partitions written") {
+    warehouse
+    spark.sql(
+      """CREATE TABLE lake.bronze.dyn (id BIGINT, region STRING)
+        |PARTITIONED BY (region)""".stripMargin)
+    spark.sql("INSERT INTO lake.bronze.dyn VALUES (1, 'eu'), (2, 'us'), (3, 'eu'), (4, 'ap')")
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try spark.sql("INSERT OVERWRITE lake.bronze.dyn VALUES (7, 'eu'), (8, 'jp')")
+    finally spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    val rows = spark.sql("SELECT id, region FROM lake.bronze.dyn ORDER BY id")
+      .as[(Long, String)].collect().toSeq
+    assert(rows === Seq((2L, "us"), (4L, "ap"), (7L, "eu"), (8L, "jp")))
+    val t = LakeTable.forPath(spark, s"$warehouse/bronze/dyn")
+    assert(t.snapshot.files.map(_.partitionValues("region")).toSet ===
+      Set("us", "ap", "eu", "jp"))
+    assert(t.history.select("operation").as[String].collect().head === "OVERWRITE")
+  }
+
+  test("writeTo: append and overwritePartitions") {
+    warehouse
+    spark.sql(
+      """CREATE TABLE lake.bronze.wt (id BIGINT, region STRING, amount DOUBLE)
+        |PARTITIONED BY (region)""".stripMargin)
+    // by name: the frame's column order differs from the table's
+    Seq(("eu", 1L, 1.0), ("us", 2L, 2.0), ("eu", 3L, 3.0))
+      .toDF("region", "id", "amount").writeTo("lake.bronze.wt").append()
+    Seq(("us", 4L, 4.0)).toDF("region", "id", "amount")
+      .writeTo("lake.bronze.wt").append()
+    assert(spark.table("lake.bronze.wt").count() === 4)
+    Seq((9L, "eu", 9.0)).toDF("id", "region", "amount")
+      .writeTo("lake.bronze.wt").overwritePartitions()
+    val rows = spark.table("lake.bronze.wt").select("id", "region", "amount")
+      .as[(Long, String, Double)].collect().sortBy(_._1).toSeq
+    assert(rows === Seq((2L, "us", 2.0), (4L, "us", 4.0), (9L, "eu", 9.0)))
+    val t = LakeTable.forPath(spark, s"$warehouse/bronze/wt")
+    assert(t.history.select("operation").as[String].collect().toSeq
+      .take(3) === Seq("OVERWRITE", "APPEND", "APPEND"))
+  }
+
+  test("CTAS into a partitioned table and into a bloom-indexed table") {
+    warehouse
+    spark.sql(
+      """CREATE TABLE lake.bronze.ctas_p PARTITIONED BY (state) AS
+        |SELECT id, amount, state FROM lake.bronze.orders""".stripMargin)
+    val p = LakeTable.forPath(spark, s"$warehouse/bronze/ctas_p")
+    assert(p.snapshot.metaData.partitionColumns === Seq("state"))
+    assert(p.snapshot.files.nonEmpty &&
+      p.snapshot.files.forall(_.path.startsWith("state=")))
+    assert(spark.sql("SELECT count(*) FROM lake.bronze.ctas_p").as[Long].head() ===
+      spark.sql("SELECT count(*) FROM lake.bronze.orders").as[Long].head())
+
+    spark.sql(
+      s"""CREATE TABLE lake.bronze.ctas_b
+         |TBLPROPERTIES ('${graft.lake.BloomIndex.COLS_PROP}' = 'id') AS
+         |SELECT id * 2 AS id, id AS v FROM range(0, 200, 1, 4)""".stripMargin)
+    val b = LakeTable.forPath(spark, s"$warehouse/bronze/ctas_b")
+    assert(b.snapshot.files.nonEmpty && b.snapshot.files.forall(_.bloomPath.isDefined))
+    assert(spark.sql("SELECT * FROM lake.bronze.ctas_b WHERE id = 7").count() === 0)
+    assert(spark.sql("SELECT v FROM lake.bronze.ctas_b WHERE id = 8")
+      .as[Long].collect().toSeq === Seq(4L))
+  }
+
+  test("a Complete-mode stream into the path sink overwrites per epoch") {
+    val root = Files.createTempDirectory("lake-complete-").toString
+    val src = LakeTable.create(spark, s"$root/src",
+      Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "k"))
+    LakeTable.create(spark, s"$root/dst", Seq.empty[(String, Long)].toDF("k", "n"))
+    def start() = spark.readStream
+      .format("org.apache.spark.sql.graft.LakeSourceProvider")
+      .option("path", s"$root/src").load()
+      .groupBy("k").agg(count(lit(1)).as("n"))
+      .writeStream.outputMode("complete")
+      .format("org.apache.spark.sql.graft.LakeSourceProvider")
+      .option("path", s"$root/dst")
+      .option("checkpointLocation", s"$root/ckpt")
+      .start()
+    val dst = LakeTable.forPath(spark, s"$root/dst")
+    def counts = dst.toDF.as[(String, Long)].collect().toMap
+    val q = start()
+    try {
+      q.processAllAvailable()
+      assert(counts === Map("a" -> 2L, "b" -> 1L))
+      src.append(Seq((4L, "b"), (5L, "c")).toDF("id", "k"))
+      q.processAllAvailable()
+      assert(counts === Map("a" -> 2L, "b" -> 2L, "c" -> 1L))
+    } finally q.stop()
+    val epochs = dst.history.select("operation").as[String].collect()
+      .count(_ == "OVERWRITE")
+    assert(epochs >= 2)
+    assert(dst.snapshot.txns.size === 1)
+    // a restart from the checkpoint replays nothing
+    val v = dst.version
+    val q2 = start()
+    try q2.processAllAvailable() finally q2.stop()
+    assert(dst.version === v)
+    assert(counts === Map("a" -> 2L, "b" -> 2L, "c" -> 1L))
+  }
+
+  test("a many-task INSERT writes at most one file per partition value") {
+    warehouse
+    spark.sql(
+      """CREATE TABLE lake.bronze.wide (id BIGINT, bucket STRING)
+        |PARTITIONED BY (bucket)""".stripMargin)
+    spark.sql(
+      """INSERT INTO lake.bronze.wide
+        |SELECT id, CAST(id % 3 AS STRING) FROM range(0, 3000, 1, 12)""".stripMargin)
+    val t = LakeTable.forPath(spark, s"$warehouse/bronze/wide")
+    assert(spark.sql("SELECT count(*) FROM lake.bronze.wide").as[Long].head() === 3000)
+    assert(t.snapshot.files.size <= 3,
+      s"${t.snapshot.files.size} files: ${t.snapshot.files.map(_.path)}")
+  }
+
+  test("a failed INSERT commits nothing and leaves no staging directory") {
+    warehouse
+    spark.sql("CREATE TABLE lake.bronze.chk (id BIGINT)")
+    val t = LakeTable.forPath(spark, s"$warehouse/bronze/chk")
+    t.addCheckConstraint("id_pos", "id > 0")
+    val v = t.version
+    intercept[Exception](spark.sql("INSERT INTO lake.bronze.chk VALUES (1), (-1)"))
+    assert(t.version === v)
+    val leftovers = new java.io.File(t.path).list()
+      .filter(_.startsWith(LakeTable.STAGING_PREFIX))
+    assert(leftovers.isEmpty, leftovers.mkString(", "))
+  }
+
   test("INSERT OVERWRITE (truncate) through the catalog") {
     warehouse
     spark.sql("CREATE TABLE lake.bronze.ow AS SELECT 1 AS id")

@@ -5,20 +5,19 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.lake.LakeTable
+import graft.lake.{Action, CommitConflictException, CommitInfo, LakeTable, PinnedCommit}
 
-/** Regression tests for the DSv2 publish staleness check and the
-  * streaming sink's schema-evolution switch:
+/** Regression tests for the write staleness rule and the streaming
+  * sink's schema-evolution switch:
   *
-  *  - [[LakePublish.publish]] re-reads the LATEST snapshot on every
-  *    attempt and takes a fresh version number, so a concurrent metadata
-  *    commit (ADD CONSTRAINT / schema evolution / re-partition) never
-  *    raises a CommitConflict — before the fix the staged files, aligned
-  *    and validated against the PLANNED metadata, committed silently
-  *    under the new rules. The publish now carries the planned MetaData
-  *    and refuses to commit when the table's current metadata differs
-  *    (the same staleness rule `LakeTable.commitWithRetry` applies to
-  *    rebased blind appends).
+  *  - every data write commits through `LakeTable.commitWithRetry`. A
+  *    blind append that loses the race for its version rebases, but only
+  *    while the table's validation state (schema, constraints, layout,
+  *    generation) still equals the metadata the write was PLANNED on: the
+  *    staged rows were aligned and checked against it. A concurrent ADD
+  *    CONSTRAINT / schema evolution aborts the commit; a commit touching
+  *    only benign properties rebases through. (A recreated generation:
+  *    `CommitGenerationSpec`.)
   *  - `LakeStreaming.sink(mergeSchema = ...)` was accepted and silently
   *    ignored — `idempotentAppend` always evolved the schema. The flag
   *    now reaches the append: `false` fails a batch carrying unknown
@@ -33,36 +32,39 @@ class WriteStalenessSpec extends AnyFunSuite {
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  test("DSv2 publish refuses to commit past a concurrent metadata change") {
+  /** An append staged by hand: a copy of one of the table's files. */
+  private def staged(t: LakeTable, name: String): Seq[Action] = {
+    val f = t.snapshot.files.head
+    val rel = s"$name.parquet"
+    Files.copy(Paths.get(t.path, f.path), Paths.get(t.path, rel))
+    val now = System.currentTimeMillis()
+    Seq(Action.of(f.copy(path = rel, modificationTime = now)),
+      Action.of(CommitInfo(now, "APPEND", Map.empty)))
+  }
+
+  test("a rebase refuses a concurrent metadata change") {
     val path = tmpDir("stale-pub-")
     val t = LakeTable.create(spark, path, Seq((1L, "a")).toDF("id", "v"))
-    val planned = t.snapshot.metaData
-    val dataSchema = t.snapshot.dataSchema
+    val planned = t.snapshot
 
-    // metadata commit lands between write planning and publish
+    // metadata commit lands between write planning and commit
     t.alterAddColumn("extra", "INT")
 
-    val staging = Paths.get(path, "_staging_stale_test")
-    Files.createDirectories(staging)
     val versionBefore = t.snapshot.version
-    val e = intercept[IllegalStateException] {
-      LakePublish.publish(t, staging, dataSchema, Seq.empty, LakeAppend,
-        "q-stale", txn = None, plannedMeta = Some(planned))
+    intercept[CommitConflictException] {
+      PinnedCommit(t, planned, staged(t, "stale"))
     }
-    assert(e.getMessage.contains("metadata change"))
     assert(t.snapshot.version === versionBefore, "nothing may commit")
 
-    // re-planned against the CURRENT metadata the same publish goes through
-    LakePublish.publish(t, staging, dataSchema, Seq.empty, LakeAppend,
-      "q-fresh", txn = None, plannedMeta = Some(t.snapshot.metaData))
+    // re-planned against the CURRENT metadata the same commit goes through
+    PinnedCommit(t, t.snapshot, staged(t, "fresh"))
     assert(t.snapshot.version === versionBefore + 1)
   }
 
-  test("benign property-only commits do NOT abort a planned publish") {
+  test("a rebase goes through a property-only commit") {
     val path = tmpDir("stale-benign-")
     val t = LakeTable.create(spark, path, Seq((1L, "a")).toDF("id", "v"))
-    val planned = t.snapshot.metaData
-    val dataSchema = t.snapshot.dataSchema
+    val planned = t.snapshot
 
     // a concurrent commit touching only benign table properties leaves
     // the staged rows valid — staleness compares validationState, not
@@ -70,55 +72,19 @@ class WriteStalenessSpec extends AnyFunSuite {
     // failed running streams whose plannedMeta is pinned at query start)
     t.setProperties(Map("owner" -> "data-eng", "comment" -> "benign"))
 
-    val staging = Paths.get(path, "_staging_benign_test")
-    Files.createDirectories(staging)
     val versionBefore = t.snapshot.version
-    LakePublish.publish(t, staging, dataSchema, Seq.empty, LakeAppend,
-      "q-benign", txn = None, plannedMeta = Some(planned))
+    PinnedCommit(t, planned, staged(t, "benign"))
     assert(t.snapshot.version === versionBefore + 1,
-      "the publish must go through past a props-only commit")
+      "the commit must rebase past a props-only commit")
 
     // but a CONSTRAINT added concurrently still aborts — staged rows
     // were never checked against it
-    val planned2 = t.snapshot.metaData
+    val planned2 = t.snapshot
     t.addCheckConstraint("idpos", "id > 0")
-    val staging2 = Paths.get(path, "_staging_benign_test2")
-    Files.createDirectories(staging2)
-    val e = intercept[IllegalStateException] {
-      LakePublish.publish(t, staging2, dataSchema, Seq.empty, LakeAppend,
-        "q-constraint", txn = None, plannedMeta = Some(planned2))
+    intercept[CommitConflictException] {
+      PinnedCommit(t, planned2, staged(t, "constraint"))
     }
-    assert(e.getMessage.contains("metadata change"))
-  }
-
-  test("a pinned plan refuses to commit into a recreated table generation") {
-    // ADVICE r6: validationState omitted MetaData.id, so a table deleted
-    // and RECREATED at the same path with an identical schema slipped
-    // past the staleness guards — a pinned-plan stream or rebasing
-    // append silently committed into the new table generation.
-    val path = tmpDir("stale-gen-")
-    val t = LakeTable.create(spark, path, Seq((1L, "a")).toDF("id", "v"))
-    val planned = t.snapshot.metaData
-    val dataSchema = t.snapshot.dataSchema
-
-    graft.TestFs.rmRf(path)
-    LakeTable.create(spark, path, Seq((9L, "z")).toDF("id", "v"))
-    val t2 = LakeTable.forPath(spark, path)
-
-    // identical schema, identical (benign) properties — the GENERATION
-    // is what must differ
-    assert(planned.schemaDdl === t2.snapshot.metaData.schemaDdl)
-    assert(planned.validationState !== t2.snapshot.metaData.validationState,
-      "recreated table generation must change the validation state")
-
-    val staging = Paths.get(path, "_staging_gen_test")
-    Files.createDirectories(staging)
-    val e = intercept[IllegalStateException] {
-      LakePublish.publish(t2, staging, dataSchema, Seq.empty, LakeAppend,
-        "q-gen", txn = None, plannedMeta = Some(planned))
-    }
-    assert(e.getMessage.contains("metadata change"))
-    assert(t2.snapshot.version === 0, "nothing may land in the new generation")
+    assert(!t.snapshot.files.exists(_.path == "constraint.parquet"))
   }
 
   test("a running stream survives a benign mid-stream property change") {
