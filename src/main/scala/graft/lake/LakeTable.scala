@@ -2897,21 +2897,20 @@ object LakeTable {
       case None => writeDf0
     }
     val writer = writeDf.write.mode("overwrite")
-    // INT64 micros instead of legacy INT96: footer min/max stats become
-    // usable for timestamp skipping (INT96 emits none). Set on the
-    // session that runs the write for this write only, so the caller's
-    // own parquet writes keep their encoding.
-    val tsKey = org.apache.spark.sql.internal.SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key
-    val writeConf = writeDf.sparkSession.conf
-    val callerTs = writeConf.getAll.get(tsKey)
-    writeConf.set(tsKey, "TIMESTAMP_MICROS")
-    try graft.util.Prof(s"stage.write $tablePath") {
+    def stageWrite(): Unit = graft.util.Prof(s"stage.write $tablePath") {
       (if (routedCols.nonEmpty) writer.partitionBy(routedCols: _*) else writer)
         .parquet(staging.toString)
+    }
+    // lake files are INT64 timestamps: the AQE-off twin writes them so
+    // already; on the caller's session the setting lasts for the write only
+    try {
+      if (writeDf.sparkSession eq df3.sparkSession)
+        org.apache.spark.sql.graft.Bridge.withLakeTimestamps(writeDf.sparkSession)(stageWrite())
+      else stageWrite()
     } catch {
       // a failed write (a CHECK violation, a task error) leaves no staging dir
       case e: Throwable => graft.util.Fs.deleteRecursively(staging); throw e
-    } finally callerTs.fold(writeConf.unset(tsKey))(writeConf.set(tsKey, _))
+    }
 
     val root = Paths.get(tablePath)
     val moved = scala.collection.mutable.ArrayBuffer[(String, Path)]()

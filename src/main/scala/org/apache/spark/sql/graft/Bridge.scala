@@ -32,10 +32,11 @@ object Bridge {
     * bench run, a session-wide event-dispatch slowdown that only
     * clears when the dropped twins are GC'd. Conf-change invalidation
     * keeps the twin exactly as fresh as clone-per-call for everything
-    * a write reads from the session conf. The parquet timestamp type is
-    * left out of the comparison: the staging write sets it on the session
-    * it runs on for its own duration only, and a write on the base
-    * session must not make a concurrent lookup re-clone.
+    * a write reads from the session conf. The twin writes lake files with
+    * TIMESTAMP_MICROS, set once when it is cloned, and the base session's
+    * timestamp type is left out of the comparison: a write on the base
+    * session sets it for its duration ([[withLakeTimestamps]]), which
+    * must not make a concurrent lookup re-clone.
     *
     * An `Observation` attached to `df` completes through the listener
     * the base session's ObservationManager registers on its first use;
@@ -47,8 +48,7 @@ object Bridge {
     val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     if (!session.sessionState.conf.adaptiveExecutionEnabled) df
     else {
-      val confs = session.sessionState.conf.getAllConfs -
-        org.apache.spark.sql.internal.SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key
+      val confs = session.sessionState.conf.getAllConfs - TimestampKey
       val twin = twinCache.synchronized {
         Option(twinCache.get(session)) match {
           case Some((cachedConfs, cachedTwin)) if cachedConfs == confs =>
@@ -57,6 +57,7 @@ object Bridge {
             session.observationManager
             val t = session.cloneSession()
             t.conf.set("spark.sql.adaptive.enabled", "false")
+            t.conf.set(TimestampKey, LakeTimestamps)
             twinCache.put(session, (confs, t))
             t
         }
@@ -78,6 +79,41 @@ object Bridge {
 
   /** Number of cached AQE-off twins (one per base session). */
   def twinCount: Int = twinCache.synchronized(twinCache.size())
+
+  private val TimestampKey =
+    org.apache.spark.sql.internal.SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key
+  // INT64 micros instead of legacy INT96: footer min/max stats become
+  // usable for timestamp skipping (INT96 emits none)
+  private val LakeTimestamps = "TIMESTAMP_MICROS"
+
+  /** Run `body`, a lake write on `session`, with the parquet timestamp
+    * type set to TIMESTAMP_MICROS. Overlapping writes on one session
+    * share the setting: the first one in saves the caller's value (or
+    * its absence) and the last one out restores it. The caller's own
+    * parquet writes that overlap a lake write on the same session take
+    * TIMESTAMP_MICROS too. */
+  def withLakeTimestamps[T](session: org.apache.spark.sql.SparkSession)(body: => T): T = {
+    tsHolds.synchronized {
+      val (n, saved) = Option(tsHolds.get(session))
+        .getOrElse((0, session.conf.getAll.get(TimestampKey)))
+      if (n == 0) session.conf.set(TimestampKey, LakeTimestamps)
+      tsHolds.put(session, (n + 1, saved))
+    }
+    try body
+    finally tsHolds.synchronized {
+      val (n, saved) = tsHolds.get(session)
+      if (n > 1) tsHolds.put(session, (n - 1, saved))
+      else {
+        tsHolds.remove(session)
+        saved.fold(session.conf.unset(TimestampKey))(session.conf.set(TimestampKey, _))
+      }
+    }
+  }
+
+  // (writes in flight, the caller's saved value) per session; an entry
+  // lives only while a write runs
+  private val tsHolds =
+    new java.util.IdentityHashMap[org.apache.spark.sql.SparkSession, (Int, Option[String])]()
 
   /** Fault-tolerant eager cut (the `localCheckpoint(true)` replacement,
     * VERDICT r13 #2): evaluate `df` ONCE now, keep the rows PERSISTED

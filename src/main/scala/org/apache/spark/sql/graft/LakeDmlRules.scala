@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, ExprId, Literal}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -222,10 +222,7 @@ class LakeCdfReadRule(session: SparkSession) extends Rule[LogicalPlan] {
 }
 
 /** An analyzed V2 write as one [[LakeTable.write]]. The query's output
-  * already carries the table's column names and types. Rows of a
-  * partitioned table are clustered by its partition layout first, so a
-  * wide insert writes one file per partition value instead of one per
-  * task and value; a bucketed table's write routes rows by bucket itself.
+  * already carries the table's column names and types.
   */
 case class RunLakeWrite(
     @transient lake: LakeTable,
@@ -234,13 +231,22 @@ case class RunLakeWrite(
   override def run(sparkSession: SparkSession): Seq[Row] = {
     val df = org.apache.spark.sql.classic.Dataset.ofRows(
       sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession], query)
+    lake.write(RunLakeWrite.clustered(lake, df), mode)
+    Seq.empty
+  }
+}
+
+object RunLakeWrite {
+  /** `df`'s rows clustered by `lake`'s partition layout, so a wide SQL
+    * insert or streaming epoch writes one file per partition value
+    * instead of one per task and value. A bucketed table's write routes
+    * rows by bucket itself; a flat table's rows stay where they are.
+    */
+  private[graft] def clustered(lake: LakeTable, df: DataFrame): DataFrame = {
     val snap = lake.snapshot
     val pcs = snap.metaData.partitionColumns
-    val clustered =
-      if (pcs.isEmpty || Bucketing.specOf(snap.metaData).isDefined) df
-      else df.repartition(PartitionTransforms.layoutColumns(pcs, snap.schema): _*)
-    lake.write(clustered, mode)
-    Seq.empty
+    if (pcs.isEmpty || Bucketing.specOf(snap.metaData).isDefined) df
+    else df.repartition(PartitionTransforms.layoutColumns(pcs, snap.schema): _*)
   }
 }
 

@@ -90,17 +90,18 @@ class LakeSourceProvider extends TableProvider with StreamSinkProvider {
   * [[LakeTable.idempotentAppend]] contract). The query id survives
   * restarts from the same checkpoint. Complete mode overwrites the table
   * with each batch; rows are aligned to the table schema without evolving
-  * it.
+  * it, and clustered by its partition layout as a SQL insert's are.
   */
 private[graft] class LakeSink(path: String, complete: Boolean) extends Sink {
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     val ds = data.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
     // the micro-batch as a plain batch frame, as Spark's ForeachBatchSink
     // builds it: the incremental plan itself cannot run another action
-    val batch = org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+    val frame = org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
       LogicalRDD.fromDataset(ds.queryExecution.toRdd, ds, isStreaming = false))
     val queryId = ds.sparkSession.sparkContext.getLocalProperty(StreamExecution.QUERY_ID_KEY)
     val lake = LakeTable.forPath(ds.sparkSession, path)
+    val batch = RunLakeWrite.clustered(lake, frame)
     if (complete)
       lake.write(batch, WriteMode.Overwrite, txn = Some(SetTxn(queryId, batchId)))
     else lake.idempotentAppend(batch, queryId, batchId, mergeSchema = false)

@@ -2,6 +2,11 @@ package graft.lake
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -94,53 +99,82 @@ class FooterStatsSpec extends AnyFunSuite {
     assert(t.read($"id" >= 350).count() === 50)
   }
 
-  test("lake writes keep the caller's parquet timestamp type; lake files stay INT64") {
-    import scala.jdk.CollectionConverters._
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    def footer(file: String) = {
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file), spark.sparkContext.hadoopConfiguration))
-      try r.getFooter finally r.close()
+  private def footer(file: String) = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file), spark.sparkContext.hadoopConfiguration))
+    try r.getFooter finally r.close()
+  }
+  private def tsType(file: String) = {
+    val schema = footer(file).getFileMetaData.getSchema
+    schema.getType(schema.getFieldIndex("ts")).asPrimitiveType.getPrimitiveTypeName
+  }
+  /** Every lake file of `t` has an INT64 `ts` column with footer min/max
+    * and `AddFile` stats. */
+  private def assertInt64Timestamps(t: LakeTable): Unit =
+    t.snapshot.files.foreach { f =>
+      val abs = s"${t.path}/${f.path}"
+      assert(tsType(abs) === PrimitiveTypeName.INT64, abs)
+      val stats = footer(abs).getBlocks.asScala.head.getColumns.asScala
+        .find(_.getPath.toDotString == "ts").get.getStatistics
+      assert(stats.hasNonNullValue, s"$abs has no ts min/max in its footer")
+      assert(f.stats.exists(s => s.minValues.contains("ts") && s.maxValues.contains("ts")))
     }
-    def tsType(file: String) = {
-      val schema = footer(file).getFileMetaData.getSchema
-      schema.getType(schema.getFieldIndex("ts")).asPrimitiveType.getPrimitiveTypeName
-    }
+  private val tsKey = "spark.sql.parquet.outputTimestampType"
 
-    val key = "spark.sql.parquet.outputTimestampType"
+  test("lake writes keep the caller's parquet timestamp type; lake files stay INT64") {
     val wh = Files.createTempDirectory("ts-wh-").toString
     spark.conf.set("spark.sql.catalog.tsw", "org.apache.spark.sql.graft.LakeCatalog")
     spark.conf.set("spark.sql.catalog.tsw.warehouse", wh)
-    val prior = spark.conf.getAll.get(key)
-    spark.conf.set(key, "INT96")
+    val prior = spark.conf.getAll.get(tsKey)
+    spark.conf.set(tsKey, "INT96")
     try {
       val rows = Seq((1L, "2021-06-01 10:00:00"), (2L, "2021-06-02 11:30:00"))
         .toDF("id", "s").select($"id", to_timestamp($"s").as("ts"))
       val t = LakeTable.create(spark, s"$wh/db/t", rows)
       t.append(rows)
-      assert(spark.conf.get(key) === "INT96", "a Scala append changed the session")
+      assert(spark.conf.get(tsKey) === "INT96", "a Scala append changed the session")
       spark.sql("INSERT INTO tsw.db.t VALUES (3, TIMESTAMP '2021-06-03 12:00:00')")
-      assert(spark.conf.get(key) === "INT96", "a SQL INSERT changed the session")
+      assert(spark.conf.get(tsKey) === "INT96", "a SQL INSERT changed the session")
       assert(spark.sql("SELECT count(*) FROM tsw.db.t").as[Long].head() === 5)
 
-      val files = t.snapshot.files
-      assert(files.size >= 3)
-      files.foreach { f =>
-        val abs = s"$wh/db/t/${f.path}"
-        assert(tsType(abs) === PrimitiveTypeName.INT64, abs)
-        val stats = footer(abs).getBlocks.asScala.head.getColumns.asScala
-          .find(_.getPath.toDotString == "ts").get.getStatistics
-        assert(stats.hasNonNullValue, s"$abs has no ts min/max in its footer")
-        assert(f.stats.exists(s => s.minValues.contains("ts") && s.maxValues.contains("ts")))
-      }
+      assert(t.snapshot.files.size >= 3)
+      assertInt64Timestamps(t)
       // the caller's own parquet write still takes INT96
       val own = Files.createTempDirectory("ts-own-").toString + "/o"
       rows.coalesce(1).write.parquet(own)
       val part = new java.io.File(own).listFiles().map(_.toString)
         .filter(_.endsWith(".parquet")).head
       assert(tsType(part) === PrimitiveTypeName.INT96)
-    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    } finally prior.fold(spark.conf.unset(tsKey))(spark.conf.set(tsKey, _))
+  }
+
+  test("concurrent lake writes on one session keep lake files INT64 and restore the caller's type") {
+    // Scan-shaped appends run on the session's AQE-off write twin; the
+    // repartitioned ones run on the caller's session itself, so several
+    // of those overlap on one session conf.
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val prior = spark.conf.getAll.get(tsKey)
+    spark.conf.set(tsKey, "INT96")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val rows = Seq((1L, "2021-06-01 10:00:00"), (2L, "2021-06-02 11:30:00"))
+        .toDF("id", "s").select($"id", to_timestamp($"s").as("ts"))
+      val t = LakeTable.create(spark, Files.createTempDirectory("ts-conc-").toString, rows)
+      val writes = (0 until 16).map { i =>
+        Future {
+          if (i % 4 == 0) t.append(rows)
+          else t.append(rows.repartition($"id"))
+        }
+      }
+      Await.result(Future.sequence(writes), 5.minutes)
+      assert(spark.conf.get(tsKey) === "INT96", "concurrent writes changed the session")
+      assert(t.toDF.count() === 34)
+      assertInt64Timestamps(t)
+    } finally {
+      pool.shutdown()
+      prior.fold(spark.conf.unset(tsKey))(spark.conf.set(tsKey, _))
+    }
   }
 }

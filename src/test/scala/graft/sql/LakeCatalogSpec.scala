@@ -239,6 +239,27 @@ class LakeCatalogSpec extends AnyFunSuite {
       s"${t.snapshot.files.size} files: ${t.snapshot.files.map(_.path)}")
   }
 
+  test("a many-task stream epoch into the path sink writes at most one file per partition value") {
+    val root = Files.createTempDirectory("lake-sink-wide-").toString
+    LakeTable.create(spark, s"$root/src", spark.range(0, 3000).toDF("id"))
+    val dst = LakeTable.create(spark, s"$root/dst",
+      Seq.empty[(Long, String)].toDF("id", "bucket"), partitionBy = Seq("bucket"))
+    val q = spark.readStream
+      .format("org.apache.spark.sql.graft.LakeSourceProvider")
+      .option("path", s"$root/src").load()
+      .repartition(12)
+      .select($"id", ($"id" % 3).cast("string").as("bucket"))
+      .writeStream
+      .format("org.apache.spark.sql.graft.LakeSourceProvider")
+      .option("path", s"$root/dst")
+      .option("checkpointLocation", s"$root/ckpt")
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    assert(dst.toDF.count() === 3000)
+    assert(dst.snapshot.files.size <= 3,
+      s"${dst.snapshot.files.size} files: ${dst.snapshot.files.map(_.path)}")
+  }
+
   test("a failed INSERT commits nothing and leaves no staging directory") {
     warehouse
     spark.sql("CREATE TABLE lake.bronze.chk (id BIGINT)")

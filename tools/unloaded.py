@@ -12,8 +12,6 @@ class (`X$`) and its mirror class (`X`) count as one: code that calls the
 module never loads the mirror. These are candidates for deletion, not
 proof of dead code: a class may serve a path that no logged run
 exercised.
-
-    --top    print only the top-level classes that never loaded at all
 """
 import os
 import re
@@ -47,10 +45,8 @@ def loaded(log):
 
 
 def main(argv):
-    top_only = "--top" in argv
-    paths = [a for a in argv if a != "--top"]
-    dirs = [p for p in paths if os.path.isdir(p)]
-    logs = [p for p in paths if os.path.isfile(p)]
+    dirs = [p for p in argv if os.path.isdir(p)]
+    logs = [p for p in argv if os.path.isfile(p)]
     if not dirs or not logs:
         print(__doc__, file=sys.stderr)
         return 2
@@ -68,7 +64,7 @@ def main(argv):
             continue
         if len(missing) == len(members):
             print(f"{top} (entire)")
-        elif not top_only:
+        else:
             print(top)
             for c in missing:
                 print(f"  {c}")
