@@ -69,14 +69,17 @@ object BloomProbe {
   * equality on a high-cardinality UNCLUSTERED key — every file's range
   * spans the domain, so a point DELETE into a 100 TB table scans every
   * file. An opt-in per-file bloom turns that into O(files actually
-  * holding the key): at write time one distributed pass builds a filter
-  * per (file, indexed column) and stores it as an immutable sidecar under
-  * `_index/`; at prune time equality/IN atoms consult
+  * holding the key): each write task builds a filter per (file it
+  * wrote, indexed column) from the rows it wrote and stores it as an
+  * immutable sidecar under `_index/` ([[LakeWriteStats]]); at prune
+  * time equality/IN atoms consult
   * `mightContainLong(xxhash64(value))` and skip files that provably lack
   * the key. False positives only cost an extra scan — never correctness.
   *
-  * Scale shape: the build is one narrow (file, hash…) shuffle over the
-  * FRESHLY WRITTEN files only (never the table); sidecars are read
+  * Scale shape: a task buffers at most [[LakeWriteStats.HASH_CAP]]
+  * hashes per column and file; a larger file, and any file whose
+  * sidecar write failed, takes the read-side build [[attach]] — one
+  * narrow (file, hash…) shuffle over those files only. Sidecars are read
   * lazily, cached JVM-wide, and evaluated on executors on the big-log
   * path, so a million-file table never funnels index bytes through the
   * driver. Sidecars share the data files' lifecycle: compaction/rewrite
@@ -85,7 +88,7 @@ object BloomProbe {
   *
   * Hash parity between build and probe is delegated to ONE source of
   * truth — Catalyst's `XxHash64` expression typed with the COLUMN's data
-  * type on both sides (the build projects `xxhash64(col)`; the probe
+  * type on both sides (the builds hash `xxhash64(col)`; the probe
   * evaluates `XxHash64(Literal(value, columnType))` after an exact value
   * conversion). A literal that cannot be converted EXACTLY to the column
   * type simply skips bloom pruning (min/max still applies).
@@ -180,12 +183,29 @@ object BloomIndex {
     s"$INDEX_DIR/$digest-$fileName$SIDECAR_SUFFIX"
   }
 
-  /** Build sidecars for freshly staged `adds` and return them with
-    * `bloomPath` set. No-op (returns `adds` unchanged) when the table
-    * doesn't configure an index. One distributed job: project
-    * `xxhash64` of each indexed column, group rows by file, build and
-    * write each file's filter ON the executor that holds its rows.
-    */
+  /** A table's index configuration as its sidecars record it: the
+    * indexed fields, each with its (name, type, parquet field id) — the
+    * probe requires all three to match the CURRENT schema, so a sidecar
+    * built for a different column that later took this name (rename
+    * churn) proves nothing — and the sizing knobs. */
+  private[lake] final case class Layout(fields: Seq[StructField], fpp: Double, maxItems: Long) {
+    val colMeta: Seq[(String, String, Long)] =
+      fields.map(f => (f.name, f.dataType.catalogString, LakeTable.fieldId(f).getOrElse(-1L)))
+    def sidecarFor(dataRel: String): String = sidecarPathFor(dataRel, colMeta, fpp, maxItems)
+    /** An empty filter for a file of `rows` rows. */
+    def filter(rows: Long): BloomFilter =
+      BloomFilter.create(math.min(maxItems, math.max(64L, rows)), fpp)
+  }
+
+  /** The table's [[Layout]]; None when it indexes no column. */
+  private[lake] def layoutOf(props: Map[String, String], dataSchema: StructType): Option[Layout] = {
+    val fields = indexedFields(props, dataSchema)
+    if (fields.isEmpty) None
+    else Some(Layout(fields,
+      props.get(FPP_PROP).flatMap(_.toDoubleOption).filter(p => p > 0 && p < 1).getOrElse(0.03),
+      props.get(MAX_ITEMS_PROP).flatMap(_.toLongOption).filter(_ > 0).getOrElse(4000000L)))
+  }
+
   /** [[attach]] degraded to a no-op on ANY failure — the WRITE paths'
     * entry point: a data write whose files already landed must never
     * fail because its optional index build did (`bloomPath = None` is
@@ -207,88 +227,24 @@ object BloomIndex {
         adds
     }
 
-  // ---- fused build: the bloom rides the staging WRITE job ---------------
-
-  /** Observe-side hash inputs for [[org.apache.spark.sql.graft.FusedBloomHashAgg]]:
-    * one nullable xxhash64 per indexed field, in [[indexedFields]]
-    * order — the same hash expression the read-side build projects, so
-    * parity holds by construction. */
-  private[lake] def fusedHashColumns(fields: Seq[StructField]): Seq[org.apache.spark.sql.Column] =
-    fields.map(f => when(col(f.name).isNotNull, xxhash64(col(f.name))))
-
-  /** [[attach]]'s fast path when the staging write ALREADY computed the
-    * per-file hashes as an observed metric ([[FusedBloomAgg]]): no
-    * second read of the written files, no build job at all. Blob
-    * entries key on the write stage's partition id, which (gated in
-    * stageFiles: no layout dirs, no bucketing, no maxRecordsPerFile)
-    * is exactly the part-NNNNN number in each written file's name.
-    * Files without a usable blob entry (hash-buffer overflow on a huge
-    * task, row-count mismatch, unparseable name) fall back to the
-    * classic [[attach]] — correctness never depends on the fusion.
+  /** Build sidecars for `adds` by reading them back and return them
+    * with `bloomPath` set: the explicit (re)build and the fallback for
+    * files whose write task could not index them. No-op (returns `adds`
+    * unchanged) when the table doesn't configure an index. One
+    * distributed job: project `xxhash64` of each indexed column, group
+    * rows by file, build and write each file's filter.
     */
-  def attachFused(
-      spark: SparkSession,
-      tablePath: String,
-      dataSchema: StructType,
-      adds: Seq[AddFile],
-      props: Map[String, String],
-      blob: Array[Byte]): Seq[AddFile] = {
-    val fields = indexedFields(props, dataSchema)
-    if (fields.isEmpty || adds.isEmpty) return adds
-    val fpp = props.get(FPP_PROP).flatMap(_.toDoubleOption)
-      .filter(p => p > 0 && p < 1).getOrElse(0.03)
-    val maxItems = props.get(MAX_ITEMS_PROP).flatMap(_.toLongOption)
-      .filter(_ > 0).getOrElse(4000000L)
-    val root = Paths.get(tablePath).toAbsolutePath.normalize
-    val colMeta: Seq[(String, String, Long)] =
-      fields.map(f => (f.name, f.dataType.catalogString,
-        LakeTable.fieldId(f).getOrElse(-1L)))
-    val parts = FusedBloomAgg.decode(blob, fields.size)
-    val partOfName = "^part-(\\d+)-".r
-    val (fused, residual) = adds.partition { a =>
-      val name = Paths.get(a.path).getFileName.toString
-      partOfName.findFirstMatchIn(name).map(_.group(1).toInt) match {
-        case Some(pid) => parts.get(pid).exists(p =>
-          !p.overflow && a.stats.forall(_.numRecords == p.rows))
-        case None => false
-      }
-    }
-    val out = fused.map { a =>
-      val name = Paths.get(a.path).getFileName.toString
-      val pid = partOfName.findFirstMatchIn(name).get.group(1).toInt
-      val p = parts(pid)
-      val expected = math.min(maxItems, math.max(64L, p.rows))
-      val blooms = Array.tabulate(fields.size) { c =>
-        val bf = BloomFilter.create(expected, fpp)
-        val hs = p.hashes(c)
-        var i = 0
-        while (i < hs.length) { bf.putLong(hs(i)); i += 1 }
-        bf
-      }
-      val rel = sidecarPathFor(a.path, colMeta, fpp, maxItems)
-      writeSidecar(root, rel, colMeta, blooms)
-      a.copy(bloomPath = Some(rel))
-    }
-    val residualOut =
-      if (residual.isEmpty) Seq.empty
-      else attach(spark, tablePath, dataSchema, residual, props)
-    // preserve the caller's AddFile order (commit actions are ordered)
-    val byPath = (out ++ residualOut).map(a => a.path -> a).toMap
-    adds.map(a => byPath.getOrElse(a.path, a))
-  }
-
   def attach(
       spark: SparkSession,
       tablePath: String,
       dataSchema: StructType,
       adds: Seq[AddFile],
       props: Map[String, String]): Seq[AddFile] = {
-    val fields = indexedFields(props, dataSchema)
-    if (fields.isEmpty || adds.isEmpty) return adds
-    val fpp = props.get(FPP_PROP).flatMap(_.toDoubleOption)
-      .filter(p => p > 0 && p < 1).getOrElse(0.03)
-    val maxItems = props.get(MAX_ITEMS_PROP).flatMap(_.toLongOption)
-      .filter(_ > 0).getOrElse(4000000L)
+    val layout = layoutOf(props, dataSchema) match {
+      case Some(l) if adds.nonEmpty => l
+      case _ => return adds
+    }
+    import layout.{colMeta, fields, fpp, maxItems}
     val root = Paths.get(tablePath).toAbsolutePath.normalize
     val rootStr = root.toString
 
@@ -299,14 +255,8 @@ object BloomIndex {
     // correctness)
     val expected: Map[String, Long] = adds.map(a =>
       absOf(a) -> a.stats.map(_.numRecords).getOrElse(math.max(1L, a.size / 128))).toMap
-    // (name, type, parquet field id): the probe requires all three to
-    // match the CURRENT schema, so a sidecar built for a different
-    // column that later took this name (rename churn) proves nothing
-    val colMeta: Seq[(String, String, Long)] =
-      fields.map(f => (f.name, f.dataType.catalogString,
-        LakeTable.fieldId(f).getOrElse(-1L)))
     val sidecarRel: Map[String, String] =
-      adds.map(a => absOf(a) -> sidecarPathFor(a.path, colMeta, fpp, maxItems)).toMap
+      adds.map(a => absOf(a) -> layout.sidecarFor(a.path)).toMap
 
     // field-id matching like [[LakeTable.readFiles]]: a backfill over a
     // column-mapped (renamed) table must read values, not name-miss nulls
@@ -335,11 +285,8 @@ object BloomIndex {
       val acc = scala.collection.mutable.LinkedHashMap[String, Array[BloomFilter]]()
       it.foreach { r =>
         val abs = Stats.normalizeFileUri(r.getString(0))
-        val blooms = acc.getOrElseUpdate(abs, {
-          val exp = math.min(maxItems,
-            math.max(64L, expected.getOrElse(abs, 65536L)))
-          Array.fill(nCols)(BloomFilter.create(exp, fpp))
-        })
+        val blooms = acc.getOrElseUpdate(abs,
+          Array.fill(nCols)(layout.filter(expected.getOrElse(abs, 65536L))))
         var i = 0
         while (i < blooms.length) {
           if (!r.isNullAt(i + 1)) blooms(i).putLong(r.getLong(i + 1))
@@ -440,15 +387,14 @@ object BloomIndex {
           // re-targets the same file forever.
           if (a.stats.exists(_.numRecords == 0L)) {
             val rel = sidecarRel(absOf(a))
-            writeSidecar(root, rel, colMeta,
-              Array.fill(colMeta.size)(BloomFilter.create(64L, fpp)))
+            writeSidecar(root, rel, colMeta, Array.fill(colMeta.size)(layout.filter(0L)))
             a.copy(bloomPath = Some(rel))
           } else a // unattributable rows: keep the PREVIOUS index state
       }
     }
   }
 
-  private def writeSidecar(
+  private[lake] def writeSidecar(
       root: Path, rel: String,
       colMeta: Seq[(String, String, Long)], blooms: Array[BloomFilter]): Unit = {
     val dest = root.resolve(rel)

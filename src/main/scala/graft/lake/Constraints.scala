@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * Standard SQL semantics: a row violates a CHECK only when the
   * expression evaluates to FALSE; NULL (unknown) passes. Enforcement is
   * codegen-friendly: [[enforce]] injects a
-  * `when(expr).otherwise(raise_error)` filter into the one staging
-  * write's plan, which every data write goes through.
+  * `when(expr).otherwise(raise_error)` filter into the one write's
+  * plan, which every data write goes through.
   */
 object Constraints {
 

@@ -17,9 +17,10 @@ import org.apache.spark.sql.types._
   * pruning, per-file min/max data skipping, DELETE/UPDATE/MERGE as
   * copy-on-write rewrites, VACUUM — on vanilla Spark.
   *
-  * Scale design: data files are written DIRECTLY by executors (staged
-  * under the table dir, then renamed — a same-filesystem metadata op);
-  * only the single atomic log-link happens on the driver. Reads prune
+  * Scale design: data files are written DIRECTLY by executors, at their
+  * final place under the table dir, each write task reporting its files
+  * with their stats; only the single atomic log-link happens on the
+  * driver. Reads prune
   * twice before Spark ever lists a file: partition values exactly, then
   * file-level min/max. All rewrites (DML) touch only files that provably
   * contain matches.
@@ -2464,8 +2465,8 @@ object LakeTable {
     * both changed and carried-over rows). */
   val DML_OPS = Set("DELETE", "UPDATE", "MERGE")
 
-  /** Staging dirs under the table root use this prefix; vacuum treats
-    * orphaned ones (crashed writes) as garbage past retention.
+  /** Earlier builds staged each write in a dir with this prefix under
+    * the table root; vacuum reaps those a crashed write left behind.
     */
   val STAGING_PREFIX = "_staging-"
 
@@ -2702,7 +2703,7 @@ object LakeTable {
       if (i <= 0) None
       else {
         val k = s.substring(0, i)
-        // the EXACT inverse of what the staging writer used (Hive
+        // the EXACT inverse of what the writer used (Hive
         // escapePathName): percent-decode only. URLDecoder additionally
         // maps '+' to space — but Hive leaves '+' literal in dir names,
         // so a partition value like "UTC+8" would round-trip to "UTC 8"
@@ -2746,9 +2747,10 @@ object LakeTable {
     (aligned, newSchema)
   }
 
-  /** Stage `df` as parquet files under the table dir, then move them into
-    * their final (partitioned) locations. Executors write the data; the
-    * moves are same-filesystem renames. Returns AddFiles with stats.
+  /** Write `df` as parquet files at their final (partitioned) places in
+    * the table dir. Executors write the files and report each one with
+    * its stats and bloom sidecar ([[LakeCommitProtocol]],
+    * [[LakeWriteStats]]). Returns AddFiles to commit.
     */
   private[lake] def stageFiles(
       spark: SparkSession,
@@ -2770,9 +2772,9 @@ object LakeTable {
     *    change rows in ONE write (Delta's `__is_cdc` partition): the kind
     *    column leads the partitionBy order, change rows get null
     *    transform and bucket dirs (those dirs are synthetic, so change
-    *    rows keep every table column), files of its `true` partition move
-    *    to `_change_data/` as CdcFiles (zero-row parts dropped) and the
-    *    rest return as AddFiles. Data files then carry an all-null
+    *    rows keep every table column), files of its `true` partition are
+    *    written to `_change_data/` as CdcFiles (zero-row parts dropped)
+    *    and the rest return as AddFiles. Data files then carry an all-null
     *    `_change_type`, which every scan ignores: each reads with the
     *    explicit table schema.
     *  - identity partitions strip their column out of the files under
@@ -2802,8 +2804,6 @@ object LakeTable {
     // the table's constraints; pure reorganizations (compact, rebucket,
     // survivor rewrites) skip the re-validation of already-valid rows
     val df = Constraints.enforce(df0, constraints)
-    val stagingName = STAGING_PREFIX + UUID.randomUUID().toString
-    val staging = Paths.get(tablePath, stagingName)
     // re-attach the table schema's field metadata (parquet field ids):
     // computed columns in DML rewrites lose it, and files MUST carry ids
     // for rename/drop to stay metadata-only
@@ -2829,7 +2829,7 @@ object LakeTable {
         d.withColumn(t.dirName, dataDir(PartitionTransforms.column(t, schema(t.col).dataType)))
       case (d, _) => d
     }
-    // bucketed layout: route rows into `__bucket=K/` staging dirs by the
+    // bucketed layout: route rows into `__bucket=K/` dirs by the
     // canonical bucket hash; each resulting file holds exactly one bucket
     val (df3, writeCols) = bucketSpec match {
       case Some(Bucketing.Spec(bcols, n)) =>
@@ -2871,120 +2871,49 @@ object LakeTable {
           _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.SubqueryExpression])))
     }
     val dataSchema = StructType(schema.filterNot(f => partitionCols.contains(f.name)))
-    // Fused bloom build (r14): when the table is bloom-indexed and the
-    // layout is flat (no hive dirs, no bucketing, no maxRecordsPerFile
-    // splits — so write-stage partition N produces exactly the
-    // part-0000N file), the per-file filters' hashes are collected as
-    // an OBSERVED metric of this same write job, and the post-write
-    // bloom step writes sidecars with no second read and no job of its
-    // own. Oversized tasks overflow their hash buffer and fall back to
-    // the classic read-side build per file.
-    val bloomFields = BloomIndex.indexedFields(props, dataSchema)
-    val fuseBloom = bloomFields.nonEmpty && routedCols.isEmpty &&
-      bucketSpec.isEmpty && spark.sessionState.conf.maxRecordsPerFile <= 0
-    val bloomObs =
-      if (fuseBloom) Some(new org.apache.spark.sql.Observation()) else None
-    val writeDf0 =
+    val writeDf =
       if (aqeCanHelp) df3
       else org.apache.spark.sql.graft.Bridge.rebindAdaptiveDisabled(df3)
-    val writeDf = bloomObs match {
-      case Some(o) =>
-        val cap = spark.conf.getOption("spark.graft.bloom.fusedMaxHashesPerCol")
-          .flatMap(_.toIntOption).filter(_ > 0)
-          .getOrElse(FusedBloomAgg.DEFAULT_CAP)
-        writeDf0.observe(o, org.apache.spark.sql.graft.FusedBloomHashAgg
-          .metric(BloomIndex.fusedHashColumns(bloomFields), cap).as("__bloom"))
-      case None => writeDf0
+    // the write tasks report each file with its stats and bloom sidecar;
+    // a frame lacking an indexed column in the table's type leaves the
+    // indexing to the read-side build
+    val root = Paths.get(tablePath).toAbsolutePath.normalize
+    val dataCols = writeDf.schema.filterNot(f => routedCols.contains(f.name))
+    val bloom = BloomIndex.layoutOf(props, dataSchema)
+    val hashed = bloom.toSeq.flatMap(_.fields.map(f =>
+      dataCols.indexWhere(c => c.name == f.name && c.dataType == f.dataType)))
+    val written = new LakeWriteStats(root.toString, dataSchema.map(f => f.name -> f.dataType).toMap,
+      new graft.util.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration),
+      bloom.filter(_ => hashed.forall(_ >= 0)), hashed)
+    graft.util.Prof(s"stage.write $tablePath") {
+      org.apache.spark.sql.graft.Bridge.writeFiles(writeDf, root.toString, routedCols,
+        new LakeCommitProtocol(root.toString, bloom), written)
     }
-    val writer = writeDf.write.mode("overwrite")
-    def stageWrite(): Unit = graft.util.Prof(s"stage.write $tablePath") {
-      (if (routedCols.nonEmpty) writer.partitionBy(routedCols: _*) else writer)
-        .parquet(staging.toString)
+    val (changed, data) = written.written.partition(_.path.startsWith(Cdc.CDC_DIR + "/"))
+    // zero-row change files carry no change; a file whose footer the
+    // task could not read takes the stats job
+    val cdcs = changed.flatMap { c =>
+      if (c.rows > 0) Some(CdcFile(c.path, c.size))
+      else { Files.deleteIfExists(root.resolve(c.path)); None }
     }
-    // lake files are INT64 timestamps: the AQE-off twin writes them so
-    // already; on the caller's session the setting lasts for the write only
-    try {
-      if (writeDf.sparkSession eq df3.sparkSession)
-        org.apache.spark.sql.graft.Bridge.withLakeTimestamps(writeDf.sparkSession)(stageWrite())
-      else stageWrite()
-    } catch {
-      // a failed write (a CHECK violation, a task error) leaves no staging dir
-      case e: Throwable => graft.util.Fs.deleteRecursively(staging); throw e
+    val unread = data.filter(_.stats.isEmpty).map(w => root.resolve(w.path).toString)
+    val jobStats = if (unread.isEmpty) Map.empty[String, FileStats]
+      else Stats.collect(spark, dataSchema, unread)
+    val adds = data.map { w =>
+      val pv = parsePartitionValues(w.path)
+      AddFile(w.path, pv - Bucketing.BUCKET_DIR_COL, w.size, w.modificationTime,
+        w.stats.orElse(jobStats.get(root.resolve(w.path).toString)),
+        bucket = pv.get(Bucketing.BUCKET_DIR_COL).flatMap(_.toIntOption),
+        bloomPath = w.bloomPath)
     }
-
-    val root = Paths.get(tablePath)
-    val moved = scala.collection.mutable.ArrayBuffer[(String, Path)]()
-    val changed = scala.collection.mutable.ArrayBuffer[Path]()
-    def walk(dir: Path): Unit =
-      graft.util.Fs.listDir(dir).foreach { p =>
-        if (Files.isDirectory(p)) walk(p)
-        else if (p.getFileName.toString.endsWith(".parquet")) {
-          val staged = staging.relativize(p).toString
-          if (withChanges && staged.startsWith(s"${Cdc.KIND_COL}=true/")) {
-            // `cdc-` names (Delta's) keep them apart from the same job's
-            // data parts, which share the task's part-file names
-            val dest = root.resolve(Cdc.CDC_DIR)
-              .resolve(p.getFileName.toString.replaceFirst("^part-", "cdc-"))
-            Files.createDirectories(dest.getParent)
-            Files.move(p, dest)
-            changed += dest
-          } else {
-            val rel =
-              if (withChanges) staged.substring(staged.indexOf('/') + 1) else staged
-            val dest = root.resolve(rel)
-            Files.createDirectories(dest.getParent)
-            Files.move(p, dest)
-            moved += rel -> dest
-          }
-        }
-      }
-    walk(staging)
-    // clear staging remnants (_SUCCESS etc.)
-    graft.util.Fs.deleteRecursively(staging)
-
-    if (moved.isEmpty && changed.isEmpty) {
-      // drain the observation so its listener unregisters
-      bloomObs.foreach(o => try o.get catch {
-        case scala.util.control.NonFatal(_) => ()
-      })
-      return (Seq.empty, Seq.empty)
-    }
-    val statsMap = graft.util.Prof(s"stage.stats ${moved.size + changed.size}f") {
-      Stats.collectFromFooters(spark, dataSchema,
-        (moved.map(_._2) ++ changed).map(_.toString).toSeq)
-    }
-    def statsOf(abs: Path) = statsMap.get(abs.toAbsolutePath.normalize.toString)
-    val cdcs = changed.flatMap { p =>
-      if (statsOf(p).exists(_.numRecords > 0))
-        Some(CdcFile(s"${Cdc.CDC_DIR}/${p.getFileName}", Files.size(p)))
-      else { Files.deleteIfExists(p); None }
-    }.toSeq
-    val adds = moved.map { case (rel, abs) =>
-      val pv = parsePartitionValues(rel)
-      AddFile(rel, pv - Bucketing.BUCKET_DIR_COL, Files.size(abs),
-        Files.getLastModifiedTime(abs).toMillis, statsOf(abs),
-        bucket = pv.get(Bucketing.BUCKET_DIR_COL).flatMap(_.toIntOption))
-    }.toSeq
-    // per-file bloom index sidecars (no-op unless graft.bloom.columns);
-    // rides AFTER stats so sizing uses exact per-file row counts, and
-    // best-effort — a failed index build never fails the data write
-    // (the fused build never runs beside change rows: the kind column
-    // makes the write partitioned)
-    val indexed = if (adds.isEmpty) adds else graft.util.Prof(s"stage.bloom ${adds.size}f") {
-      bloomObs match {
-        case Some(o) =>
-          try BloomIndex.attachFused(spark, tablePath, dataSchema, adds, props,
-            o.get("__bloom").asInstanceOf[Array[Byte]])
-          catch {
-            case scala.util.control.NonFatal(e) =>
-              org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                s"fused bloom build failed for $tablePath, " +
-                  s"falling back to the read-side build: $e")
-              BloomIndex.attachBestEffort(spark, tablePath, dataSchema, adds, props)
-          }
-        case None =>
-          BloomIndex.attachBestEffort(spark, tablePath, dataSchema, adds, props)
-      }
+    // files the tasks left unindexed (over the hash cap, a failed
+    // sidecar write) take the read-side build, best-effort: a failed
+    // index build never fails the data write
+    val unindexed = if (bloom.isEmpty) Nil else adds.filter(_.bloomPath.isEmpty)
+    val indexed = if (unindexed.isEmpty) adds else {
+      val built = BloomIndex.attachBestEffort(spark, tablePath, dataSchema, unindexed, props)
+        .map(a => a.path -> a).toMap
+      adds.map(a => built.getOrElse(a.path, a))
     }
     (indexed, cdcs)
   }

@@ -114,7 +114,7 @@ final class MergeClaimsFileBuf extends Serializable {
   * in a shuffle-map stage, e.g. below a bucketed write's exchange)
   * re-sends an identical partial under the same key; [[MergeClaimsAgg
   * .merge]] keeps the first, so the retry cannot double-count a match
-  * into a false ambiguity error. The same pattern as FusedBloomAgg.
+  * into a false ambiguity error.
   */
 final class MergeClaimsBuffer extends Serializable {
   @transient var parts: java.util.HashMap[Integer,
@@ -192,7 +192,7 @@ final case class MergeFileClaims(claims: Array[Byte], maxMatches: Long,
 
 /** The fused DML-claims aggregate: an UNGROUPED aggregate over
   * `(dvPath, dvIdx, matched, action)` rows that a `Dataset.observe`
-  * evaluates as a side effect of the DML's staging WRITE job — MERGE's
+  * evaluates as a side effect of the DML's WRITE job — MERGE's
   * full-outer join, or the rows DELETE and UPDATE match (`matched` false,
   * `action` 0), is computed once, with no cache and no separate claims
   * job. Exactly-once: partials are keyed by

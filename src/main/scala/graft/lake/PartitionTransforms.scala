@@ -53,9 +53,6 @@ object PartitionTransforms {
 
   def parseAll(spec: Seq[String]): Seq[Field] = spec.map(parse)
 
-  def identityCols(spec: Seq[String]): Seq[String] =
-    parseAll(spec).collect { case Identity(c) => c }
-
   def transforms(spec: Seq[String]): Seq[Transform] =
     parseAll(spec).collect { case t: Transform => t }
 

@@ -41,8 +41,8 @@ object Stats {
     }
   }
 
-  /** Per-file stats read from the parquet FOOTERS the write already
-    * produced — no second job. Canonical encodings match [[collect]]
+  /** Per-file stats read from the parquet FOOTERS of existing files
+    * (CONVERT) — no scan job. Canonical encodings match [[collect]]
     * (numbers via BigDecimal-parseable strings, timestamps as micros,
     * dates as days). Columns whose footer stats are absent/unset are
     * simply omitted (the skipping evaluator treats missing as unknown).
@@ -92,7 +92,7 @@ object Stats {
   }
 
   /** One file's footer -> FileStats; the executor-shippable unit of
-    * [[collectFromFooters]]. None on any read failure (the caller falls
+    * [[collectFromFooters]] and of the write tasks ([[LakeWriteStats]]). None on any read failure (the caller falls
     * back to the aggregation job for exactly those files). */
   private[lake] def footerStats(
       p: String,

@@ -524,41 +524,51 @@ class BloomIndexSpec extends AnyFunSuite {
     (0L until 128L by 2L).foreach(k => assert(ids.contains(k)))
   }
 
-  test("fused write-side build matches the classic read-side build") {
-    // same fixture twice: once with the fused hash cap forced to a few
-    // hashes per task (every partition overflows -> classic read-side
-    // fallback), once default (fused). Sidecar contents must be
-    // bit-identical per file modulo file names: same filter geometry
-    // (sizing is rows-based on both paths), same probe verdicts.
-    def build(path: String): LakeTable = unclusteredTable(path)
-    val fusedPath = tmpDir()
-    val tFused = build(fusedPath)
-    spark.conf.set("spark.graft.bloom.fusedMaxHashesPerCol", "2")
-    val classicPath = tmpDir()
-    val tClassic =
-      try build(classicPath)
-      finally spark.conf.unset("spark.graft.bloom.fusedMaxHashesPerCol")
-    assert(tFused.snapshot.files.forall(_.bloomPath.isDefined))
-    assert(tClassic.snapshot.files.forall(_.bloomPath.isDefined))
-    // identical pruning verdicts on hits and provably-absent keys
-    (0L until 128L).foreach { k =>
-      val a = tFused.read($"id" === k).inputFiles.length
-      val b = tClassic.read($"id" === k).inputFiles.length
-      assert(a === b, s"fused/classic pruning diverged on id=$k: $a vs $b")
+  test("task-side sidecars match the read-side build; an oversized file falls back to it") {
+    // the write tasks index the table; a copy's force rebuild reads the
+    // files back and writes the same sidecar paths (the path digests
+    // file and configuration). Same rows hashed, same rows-based sizing:
+    // the bytes, and so the geometry and every probe verdict, agree.
+    val taskPath = tmpDir()
+    val tTask = unclusteredTable(taskPath)
+    val readPath = tmpDir()
+    Files.walk(Paths.get(taskPath)).forEach { p =>
+      val q = Paths.get(readPath).resolve(Paths.get(taskPath).relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(q)
+      else Files.copy(p, q, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
-    assert(tFused.read($"id" === 3L).isEmpty)
-    assert(tFused.read($"id" === 8L).count() === 1L)
-    // geometry parity: the consolidated-index section keys derive from
-    // (words, k), so fused sidecars must match the classic sizing
-    val fusedHeads = tFused.snapshot.files.flatMap(f =>
-      BloomIndex.readSidecarHeaders(
-        Paths.get(fusedPath).resolve(f.bloomPath.get)))
-      .flatMap(_.map(c => (c.name, c.words, c.k))).sorted
-    val classicHeads = tClassic.snapshot.files.flatMap(f =>
-      BloomIndex.readSidecarHeaders(
-        Paths.get(classicPath).resolve(f.bloomPath.get)))
-      .flatMap(_.map(c => (c.name, c.words, c.k))).sorted
-    assert(fusedHeads === classicHeads,
-      s"filter geometry diverged: $fusedHeads vs $classicHeads")
+    val tRead = LakeTable.forPath(spark, readPath)
+    def sidecars(t: LakeTable) = t.snapshot.files.map(f =>
+      f.path -> Files.readAllBytes(Paths.get(t.path).resolve(f.bloomPath.get)).toSeq).toMap
+    val before = sidecars(tRead)
+    // delete the copied sidecars, so every byte compared below is the rebuild's
+    before.keys.foreach(p => Files.delete(Paths.get(readPath).resolve(
+      tRead.snapshot.files.find(_.path == p).get.bloomPath.get)))
+    assert(tRead.buildBloomIndex(force = true) === 0, "a rebuild under one config moves no pointer")
+    val rebuilt = sidecars(tRead)
+    assert(rebuilt.keySet === before.keySet)
+    assert(rebuilt === sidecars(tTask), "task-side and read-side sidecars differ")
+    def heads(t: LakeTable) = t.snapshot.files.flatMap(f => BloomIndex.readSidecarHeaders(
+      Paths.get(t.path).resolve(f.bloomPath.get))).flatMap(_.map(c => (c.name, c.words, c.k))).sorted
+    assert(heads(tTask) === heads(tRead))
+    (0L until 128L).foreach { k =>
+      val a = tTask.read($"id" === k).inputFiles.length
+      val b = tRead.read($"id" === k).inputFiles.length
+      assert(a === b, s"task-side/read-side pruning diverged on id=$k: $a vs $b")
+    }
+    assert(tTask.read($"id" === 3L).isEmpty)
+    assert(tTask.read($"id" === 8L).count() === 1L)
+
+    // one row over the task's hash cap: that file takes the read-side build
+    val big = LakeTable.create(spark, tmpDir(),
+      spark.range(0, LakeWriteStats.HASH_CAP + 1L).coalesce(1).select(($"id" * 2).as("id")),
+      properties = Map(BloomIndex.COLS_PROP -> "id", BloomIndex.FPP_PROP -> "0.001"))
+    val Seq(f) = big.snapshot.files
+    assert(f.stats.map(_.numRecords) === Some(LakeWriteStats.HASH_CAP + 1L))
+    assert(f.bloomPath.exists(p => Files.exists(Paths.get(big.path).resolve(p))))
+    BloomMetrics.reset()
+    assert(big.read($"id" === 77L).isEmpty)
+    assert(BloomMetrics.skippedByBloom.get() > 0L)
+    assert(big.read($"id" === 78L).count() === 1L)
   }
 }

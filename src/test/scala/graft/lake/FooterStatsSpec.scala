@@ -22,7 +22,14 @@ class FooterStatsSpec extends AnyFunSuite {
 
   test("footer stats == job stats across types") {
     val dir = Files.createTempDirectory("footer-").toString
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    val tsKey = "spark.sql.parquet.outputTimestampType"
+    val saved = spark.conf.getAll.get(tsKey)
+    spark.conf.set(tsKey, "TIMESTAMP_MICROS")
+    try footerMatchesJob(dir)
+    finally saved.fold(spark.conf.unset(tsKey))(spark.conf.set(tsKey, _))
+  }
+
+  private def footerMatchesJob(dir: String): Unit = {
     val df = spark.range(0, 1000).select(
       $"id",
       ($"id" % 7).cast("int").as("i"),

@@ -21,8 +21,9 @@ import graft.TestSpark
   * routed to `_change_data/` by a hidden kind column (Delta's `__is_cdc`
   * partition). Checked on every layout against a plain model, for the
   * all-null `_change_type` column routed data files carry, for the job
-  * shape (no cached relation, no extra jobs), under real stage retries,
-  * and over a long session.
+  * shape (no cached relation, no extra jobs), under real stage retries
+  * (the write stage's included) and write-task failures, and over a long
+  * session.
   */
 class MergeSinglePassSpec extends AnyFunSuite {
 
@@ -180,7 +181,7 @@ class MergeSinglePassSpec extends AnyFunSuite {
 
   for (v <- variants) {
     val label = v.name match {
-      case "bloom_indexed" => "bloom_indexed (sidecars by the classic read-side build)"
+      case "bloom_indexed" => "bloom_indexed (sidecars from the write tasks)"
       case n => n
     }
     test(s"multi-clause MERGE on $label matches the model") {
@@ -193,9 +194,8 @@ class MergeSinglePassSpec extends AnyFunSuite {
       val cdcFiles = checkModel(t, v.name, v.cdf, ver, expRows, expChanges)
 
       if (v.props.contains(BloomIndex.COLS_PROP)) {
-        // the routed write is partitioned on the kind column, so the
-        // fused build (flat writes only) steps aside and the classic
-        // read-side build indexes the commit's AddFiles: data files only
+        // the routed write's tasks index the data files they write, and
+        // only those: change files get no sidecar
         val files = t.snapshot.files
         assert(files.forall(_.bloomPath.isDefined))
         files.foreach(f =>
@@ -377,6 +377,125 @@ class MergeSinglePassSpec extends AnyFunSuite {
     } finally cachedSource.unpersist()
   }
 
+  test("job shape: change-feed DML on a bloom-indexed table runs no more jobs than without") {
+    // the write tasks build the sidecars: no read-side build job. The
+    // index is on a column no DML condition names, so it prunes nothing
+    // and the tables differ only in their sidecars.
+    val indexed = Map(BloomIndex.COLS_PROP -> "state")
+    def fresh(props: Map[String, String]) = create(Variant("shape_bloom", props = props),
+      Files.createTempDirectory("merge-1p-shape-bloom-").toString)
+    // the copy-on-write DELETE rewrites its survivors: data files to index
+    val dmls = Seq[(String, LakeTable => Unit)](
+      ("merge", runMerge(_, source)),
+      ("delete", _.delete(col("id") > 60, useDvs = false)))
+    dmls.foreach { case (_, dml) => dml(fresh(Map.empty)); dml(fresh(indexed)) } // warm the plan shapes
+    dmls.foreach { case (name, dml) =>
+      val (plain, t) = (fresh(Map.empty), fresh(indexed))
+      val (plainJobs, _) = shape(dml(plain))
+      val (bloomJobs, _) = shape(dml(t))
+      assert(t.snapshot.files.forall(_.bloomPath.isDefined))
+      assert(bloomJobs <= plainJobs,
+        s"change-feed $name ran $bloomJobs jobs on the bloom table, $plainJobs without")
+    }
+  }
+
+  /** The files of the commit at `ver`: each committed once, each on disk,
+    * with the stats the stats job reads from it and, on a bloom table, a
+    * sidecar for every data file and none for a change file; and no
+    * parquet file under the table that no commit names. */
+  private def checkCommitted(t: LakeTable, ver: Long): Unit = {
+    val actions = t.log.readCommit(ver)
+    val adds = actions.flatMap(_.add)
+    val cdcs = actions.flatMap(_.cdc)
+    val paths = adds.map(_.path) ++ cdcs.map(_.path)
+    assert(adds.nonEmpty)
+    assert(paths.distinct.size === paths.size, s"a file committed twice: $paths")
+    paths.foreach(p => assert(Files.isRegularFile(Paths.get(t.path, p)), p))
+    val abs = adds.map(a => Paths.get(t.path, a.path).toString)
+    val viaJob = Stats.collect(spark, t.snapshot.schema, abs)
+    adds.zip(abs).foreach { case (a, p) => assert(a.stats === viaJob.get(p), a.path) }
+    val bloom = t.snapshot.metaData.properties.contains(BloomIndex.COLS_PROP)
+    adds.foreach(a => assert(a.bloomPath.exists(b =>
+      Files.isRegularFile(Paths.get(t.path, b))) === bloom, a.path))
+    val sidecars = walk(Paths.get(t.path)).map(_.getFileName.toString)
+      .filter(_.endsWith(BloomIndex.SIDECAR_SUFFIX))
+    cdcs.map(c => Paths.get(c.path).getFileName.toString).foreach(n =>
+      assert(!sidecars.exists(_.endsWith(s"-$n${BloomIndex.SIDECAR_SUFFIX}")), n))
+    val named = t.log.listVersions.flatMap(t.log.readCommit)
+      .flatMap(a => a.add.map(_.path) ++ a.cdc.map(_.path)).toSet
+    val stray = walk(Paths.get(t.path)).filter(_.toString.endsWith(".parquet"))
+      .map(p => Paths.get(t.path).relativize(p).toString).filterNot(named)
+    assert(stray.isEmpty, s"files no commit names: $stray")
+  }
+
+  private val appended: Seq[Row3] = (100L until 160L).map(i => (i, "RA", i * 1.0))
+
+  /** [[appended]] as a frame the optimizer cannot fold on the driver,
+    * in `parts` partitions, each id passed through `gate` after them. */
+  private def appendedDf(parts: Int, gate: Column => Column): DataFrame =
+    spark.range(100L, 160L, 1L, parts).select(
+      when(gate(col("id")), col("id")).as("id"), lit("RA").as("state"),
+      col("id").cast("double").as("amount"))
+
+  test("stage retry in the write stage: a repartitioned append and a bloom-indexed change-feed merge commit each file once") {
+    val bloomFlat = Variant("bloom_retry", props = bloomProps)
+    def run(faults: Boolean): (LakeTable, LakeTable) = {
+      val a = create(bloomFlat, Files.createTempDirectory("merge-1p-wretry-").toString)
+      val m = create(bloomFlat, Files.createTempDirectory("merge-1p-wretry-").toString)
+      val df = appendedDf(4, _ => lit(true)).repartition(4).select(
+        when(StageFault.failOnce(col("id")), col("id")).as("id"), col("state"), col("amount"))
+      val gate = (alias: String) => StageFault.failOnce(col(s"$alias.id"))
+      for ((what, body) <- Seq[(String, () => Unit)](
+          "append" -> (() => a.append(df)),
+          "merge" -> (() => runMerge(m, source, gate = gate)))) {
+        LakeLog.awaitMaintenance()
+        if (faults) {
+          val seen = StageFault.armed(spark.sparkContext)(body())
+          assert(seen.retries >= 1, s"no stage of the $what was retried")
+          assert(!seen.failedInMapStage, s"the $what failed outside its write stage")
+        } else body()
+      }
+      (a, m)
+    }
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    val (clean, faulty) =
+      try (run(faults = false), run(faults = true))
+      finally spark.conf.unset(coalesce)
+    val (expRows, expChanges) = model
+    for ((a, m) <- Seq(clean, faulty)) {
+      assert(rows(a.toDF) === (baseRows ++ appended).sorted)
+      assert(rows(m.toDF) === expRows)
+      assert(changesAt(m, m.version) === expChanges)
+      checkCommitted(a, a.version)
+      checkCommitted(m, m.version)
+    }
+    def shape(t: LakeTable) = t.log.readCommit(t.version).map(x => (x.add.size, x.cdc.size))
+    assert(shape(faulty._1) === shape(clean._1))
+    assert(shape(faulty._2) === shape(clean._2))
+  }
+
+  test("a write task that fails after opening its file leaves no file behind") {
+    val t = create(Variant("fail_open", props = bloomProps),
+      Files.createTempDirectory("merge-1p-failopen-").toString)
+    val v = t.version
+    // one task that writes as it reads: its file is open before the fault
+    val opened = StageFault.armedWrite(t.path) {
+      intercept[Exception](t.append(appendedDf(1, StageFault.failWriteOnce(_))))
+    }
+    assert(opened.nonEmpty, "the failing task had opened no file")
+    assert(t.version === v)
+    val live = t.snapshot.files.map(f => Paths.get(t.path, f.path)).toSet
+    assert(!opened.exists(live))
+    // the aborted attempt deleted its own file; vacuum has nothing of it left
+    assert(!opened.exists(p => Files.exists(p)))
+    t.vacuum(0L)
+    assert(!opened.exists(p => Files.exists(p)))
+    t.append(appendedDf(1, _ => lit(true)))
+    assert(rows(t.toDF) === (baseRows ++ appended).sorted)
+    checkCommitted(t, t.version)
+  }
+
   for (v <- variants.filter(v => Set("flat", "bucketed", "copy_on_write")(v.name))) {
     test(s"stage retry: a change-feed ${v.name} merge survives a fetch failure") {
       val gate = (alias: String) => StageFault.failOnce(col(s"$alias.id"))
@@ -481,26 +600,47 @@ class MergeSinglePassSpec extends AnyFunSuite {
 
   test("long session: fifty change-feed merges leak no cache, listener or twin") {
     val sc = spark.sparkContext
-    val t = LakeTable.create(spark,
-      Files.createTempDirectory("merge-1p-long-").toString,
+    val t = LakeTable.create(spark, s"$warehouse/db/long_session",
       (1L to 200L).map(i => (i, "s", i * 1.0)).toDF("id", "state", "amount"),
       properties = Map(Cdc.PROP -> "true"))
+    // SQL INSERTs and path-sink micro-batches write through the same writer
+    val src = LakeTable.create(spark, Files.createTempDirectory("merge-1p-long-src-").toString,
+      Seq((5000L, "m", 1.0)).toDF("id", "state", "amount"))
+    val sink = spark.readStream
+      .format("org.apache.spark.sql.graft.LakeSourceProvider")
+      .option("path", src.path).load()
+      .writeStream
+      .format("org.apache.spark.sql.graft.LakeSourceProvider")
+      .option("path", t.path)
+      .option("checkpointLocation", Files.createTempDirectory("merge-1p-long-ckpt-").toString)
+      .start()
     def step(i: Int): Unit = {
       val keys = (0 until 10).map(k => (i * 7L + k * 13L) % 260L + 1L)
       runMerge(t, keys.map(k => (k, s"v$i", k + i * 1.0, "U"))
         .toDF("id", "state", "amount", "op"))
       // a join-free staged write goes through the AQE-off twin
       if (i % 10 == 0) t.append(Seq((1000L + i, "a", 1.0)).toDF("id", "state", "amount"))
+      if (i % 10 == 3) spark.sql(s"INSERT INTO m1p.db.long_session VALUES (${2000 + i}, 'q', 1.0)")
+      if (i % 10 == 7) {
+        src.append(Seq((3000L + i, "m", 1.0)).toDF("id", "state", "amount"))
+        sink.processAllAvailable()
+      }
     }
     def probe(): (Int, Int, Int) = {
       LakeLog.awaitMaintenance()
       SessionProbe.drainListenerBus(sc)
       (sc.getPersistentRDDs.size, SessionProbe.listenerCount(sc), Bridge.twinCount)
     }
-    (0 until 2).foreach(step)
-    val before = probe()
-    (2 until 52).foreach(step)
-    val after = probe()
+    val (before, after) =
+      try {
+        sink.processAllAvailable() // the sink writes only while a step waits for it
+        (0 until 10).foreach(step)
+        val before = probe()
+        (10 until 60).foreach(step)
+        (before, probe())
+      } finally sink.stop()
+    assert(spark.sql("SELECT count(*) FROM m1p.db.long_session WHERE id >= 2000")
+      .as[Long].head() === 13L)
     assert(after._1 <= before._1, s"persisted RDDs grew: $before -> $after")
     assert(after._2 <= before._2, s"listener-bus listeners grew: $before -> $after")
     assert(after._3 <= before._3, s"twin sessions grew: $before -> $after")

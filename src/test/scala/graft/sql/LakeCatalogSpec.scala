@@ -2,7 +2,10 @@ package graft.sql
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StageFault
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -258,6 +261,52 @@ class LakeCatalogSpec extends AnyFunSuite {
     assert(dst.toDF.count() === 3000)
     assert(dst.snapshot.files.size <= 3,
       s"${dst.snapshot.files.size} files: ${dst.snapshot.files.map(_.path)}")
+  }
+
+  test("a stream epoch whose write task fails after opening its file replays exactly once") {
+    val root = Files.createTempDirectory("lake-sink-replay-").toString
+    // one source file: the epoch writes in one task
+    LakeTable.create(spark, s"$root/src", spark.range(0, 200).coalesce(1).toDF("id"))
+    val dst = LakeTable.create(spark, s"$root/dst", Seq.empty[Long].toDF("id"))
+    val v = dst.version
+    def start() = spark.readStream
+      .format("org.apache.spark.sql.graft.LakeSourceProvider")
+      .option("path", s"$root/src").load()
+      .where(StageFault.failWriteOnce($"id"))
+      .writeStream
+      .format("org.apache.spark.sql.graft.LakeSourceProvider")
+      .option("path", s"$root/dst")
+      .option("checkpointLocation", s"$root/ckpt")
+      .start()
+    val opened = StageFault.armedWrite(dst.path) {
+      val q = start()
+      try intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
+      finally q.stop()
+    }
+    assert(opened.nonEmpty, "the failing task had opened no file")
+    assert(dst.version === v)
+    val q = start()
+    try q.processAllAvailable() finally q.stop()
+    assert(dst.toDF.as[Long].collect().sorted.toSeq === (0L until 200L))
+    assert(!opened.exists(p => java.nio.file.Files.exists(p)))
+    val live = dst.snapshot.files.map(_.path).toSet
+    val onDisk = java.nio.file.Files.walk(java.nio.file.Paths.get(dst.path)).iterator().asScala
+      .filter(_.toString.endsWith(".parquet"))
+      .map(p => java.nio.file.Paths.get(dst.path).relativize(p).toString).toSet
+    assert(onDisk === live)
+  }
+
+  test("CREATE TABLE PARTITIONED BY (truncate(4, s)) writes and reads back") {
+    warehouse
+    spark.sql("CREATE TABLE lake.bronze.trunc (id BIGINT, s STRING) PARTITIONED BY (truncate(4, s))")
+    spark.sql("INSERT INTO lake.bronze.trunc VALUES (1, 'alpha'), (2, 'alps'), (3, 'beta'), (4, NULL)")
+    val t = LakeTable.forPath(spark, s"$warehouse/bronze/trunc")
+    assert(t.snapshot.metaData.partitionColumns === Seq("truncate(4,s)"))
+    assert(t.snapshot.files.map(_.partitionValues).distinct.size === 4)
+    assert(spark.sql("SELECT id, s FROM lake.bronze.trunc ORDER BY id").as[(Long, String)]
+      .collect().toSeq === Seq((1L, "alpha"), (2L, "alps"), (3L, "beta"), (4L, null)))
+    assert(spark.sql("SELECT id FROM lake.bronze.trunc WHERE s = 'beta'").as[Long]
+      .collect().toSeq === Seq(3L))
   }
 
   test("a failed INSERT commits nothing and leaves no staging directory") {

@@ -3,6 +3,8 @@ package org.apache.spark.sql.graft
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.{SparkContext, SparkEnv, TaskContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.shuffle.FetchFailedException
@@ -61,6 +63,45 @@ object StageFault {
       }
     }
     true
+  }
+
+  @volatile private var writeDir: String = null
+  @volatile private var baseline = Set.empty[java.nio.file.Path]
+  @volatile private var opened = Seq.empty[java.nio.file.Path]
+  private val rowsSeen = new ConcurrentHashMap[Long, Integer]()
+
+  private def parquetUnder(dir: String): Set[java.nio.file.Path] = {
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSet
+    finally s.close()
+  }
+
+  /** A deterministic UDF that returns true, except while [[armedWrite]]
+    * is armed: the first task attempt to evaluate it on a second row
+    * then throws a plain task error, once, after recording the parquet
+    * files that appeared under the armed dir since arming. A write task
+    * whose rows pass through it has by then opened its file and written
+    * a row to it. */
+  val failWriteOnce: UserDefinedFunction = udf { (_: Long) =>
+    val ctx = TaskContext.get()
+    val dir = writeDir
+    if (dir != null && ctx != null && rowsSeen.merge(ctx.taskAttemptId(), 1, _ + _) == 2) {
+      writeDir = null
+      opened = (parquetUnder(dir) -- baseline).toSeq
+      throw new IllegalStateException("injected write-task failure")
+    }
+    true
+  }
+
+  /** Run `body` with [[failWriteOnce]] armed on table dir `dir`; returns
+    * the files the failing attempt saw appear (empty if none failed). */
+  def armedWrite(dir: String)(body: => Unit): Seq[java.nio.file.Path] = {
+    rowsSeen.clear()
+    opened = Nil
+    baseline = parquetUnder(dir)
+    writeDir = dir
+    try body finally writeDir = null
+    opened
   }
 
   /** Run `body` with [[failOnce]] armed. */
