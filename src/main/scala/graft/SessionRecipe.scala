@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The session recipe of the plan tools ([[PlanDump]], [[PlanAudit]],
+/** The session recipe of the plan tools ([[PlanAudit]],
   * [[ProfileQuery]]): the same confs as `Bench.buildSession`, so a plan
-  * they dump, audit or profile is the plan the bench times.
+  * they audit or profile is the plan the bench times.
   * `SessionRecipeSpec` fails when [[confs]] and Bench's `.config` pairs
   * differ.
   */

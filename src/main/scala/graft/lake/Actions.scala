@@ -110,8 +110,10 @@ final case class SetTxn(appId: String, batchId: Long)
 
 /** Change-data file (Delta's `cdc` action): a parquet file under
   * `_change_data/` holding this commit's row-level changes (data columns
-  * + `_change_type`). Never part of table state — snapshot resolution and
-  * checkpoints ignore it; only [[LakeTable.tableChanges]] reads it.
+  * + `_change_type`). On an identity-partitioned table it sits under its
+  * partition dirs (`_change_data/<col>=<v>/cdc-*`), which hold those
+  * columns instead of the file. Never part of table state — snapshot resolution and
+  * checkpoints ignore it; only the change-feed readers read it.
   */
 final case class CdcFile(path: String, size: Long = 0L)
 

@@ -22,15 +22,15 @@ import org.apache.spark.sql.functions._
   * input row's data row and its change rows side by side, tagged by the
   * hidden [[KIND_COL]]. [[LakeTable.stageFilesAndChanges]] is the only
   * code that writes change files: it routes the tagged frame in the
-  * DML's own write — files of the kind column's `true` partition move to
-  * `_change_data/` as CdcFiles, the rest are the commit's AddFiles — and
-  * splits it into a data write and a flat change write only where an
-  * identity partition dir would strip a table column out of the change
-  * files. Change files keep one on-disk shape however they were written
-  * — table columns plus an in-file `_change_type` — so every reader, old
-  * logs included, reads them unchanged. Routed data files carry an
-  * all-null `_change_type` that every scan ignores (each reads with the
-  * explicit table schema).
+  * DML's own write — files of the kind column's `true` partition go to
+  * `_change_data/` as CdcFiles, the rest are the commit's AddFiles.
+  * A change file holds the table columns plus an in-file `_change_type`,
+  * except the identity partition columns: as in Delta, those live in
+  * the file's dirs (`_change_data/<col>=<v>/cdc-*`) and the readers
+  * recover them by partition discovery from `_change_data` ([[layouts]]).
+  * Every other layout, and every older commit, has flat change files.
+  * Routed data files carry an all-null `_change_type` that every scan
+  * ignores (each reads with the explicit table schema).
   */
 object Cdc {
 
@@ -50,6 +50,12 @@ object Cdc {
   /** Change-FILE schema: table columns + `_change_type`. */
   def fileSchema(table: StructType): StructType =
     StructType(table.fields :+ StructField(CHANGE_TYPE, StringType))
+
+  /** Change files (paths under the table root) grouped by the partition
+    * columns of their dirs, so each group reads with one partition
+    * discovery from `_change_data`: flat files form one group. */
+  def layouts(paths: Seq[String]): Seq[Seq[String]] =
+    paths.groupBy(LakeTable.parsePartitionValues(_).keySet).values.toSeq
 
   /** Change-READ schema: table columns + the three CDF columns — the one
     * shape `tableChanges`, the TVF, and the batch/stream readers share. */

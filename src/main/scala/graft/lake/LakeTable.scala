@@ -398,8 +398,10 @@ final class LakeTable private (
     val cdcFiles = actions.flatMap(_.cdc)
     if (cdcFiles.nonEmpty) {
       LakeTable.enableFieldIdReads(spark)
-      Some(finish(spark.read.schema(Cdc.fileSchema(snapAt(Seq.empty).schema))
-        .parquet(cdcFiles.map(c => s"$path/${c.path}"): _*)))
+      val schema = Cdc.fileSchema(snapAt(Seq.empty).schema)
+      Some(finish(Cdc.layouts(cdcFiles.map(_.path)).map(fs => spark.read.schema(schema)
+        .option("basePath", s"$path/${Cdc.CDC_DIR}").parquet(fs.map(f => s"$path/$f"): _*)
+        .select(schema.fieldNames.map(col).toSeq: _*)).reduce(_.unionByName(_))))
     } else if (LakeTable.REORG_OPS.contains(op)) None
     else {
       val adds = actions.flatMap(_.add)
@@ -742,16 +744,19 @@ final class LakeTable private (
     require(pinnedVersion.isEmpty, "cannot write through a time-travel handle")
     val (snap, candidates) = snapshotForDml(cond)
     if (candidates.isEmpty) return 0L
-    // the matched rows ARE the change set, staged flat; without a change
-    // feed the pass writes nothing
+    // the matched rows ARE the change set, staged under the table's
+    // identity partition dirs only; without a change feed the pass
+    // writes nothing
     val cols = snap.schema.fieldNames.map(col).toSeq
+    val dirs = PartitionTransforms.parseAll(snap.metaData.partitionColumns)
+      .collect { case PartitionTransforms.Identity(c) => c }
     val write =
       if (!cdfEnabled(snap)) None
       else Some((hits: DataFrame) => LakeTable.stageFilesAndChanges(spark, path,
         Cdc.rows(hits, snap.schema, cdf = true,
           data = lit(false), newImage = cols, old = lit(true), oldImage = cols,
           oldType = lit(Cdc.DELETE), nu = lit(false), newType = lit(null)),
-        snap.schema, Seq.empty))
+        snap.schema, dirs))
     dmlPass(snap, candidates, cond, write, useDvs, dvMaxFraction,
       "DELETE", Map("predicate" -> cond.toString))
   }
@@ -2766,21 +2771,18 @@ object LakeTable {
 
   /** [[stageFiles]] for a DML's output, and the only writer of change
     * files. A frame built by [[Cdc.rows]] carries `_change_type` and the
-    * hidden [[Cdc.KIND_COL]] besides the table columns; the write shape
-    * follows from the table layout:
-    *  - flat, transform-partitioned and bucketed tables route data and
-    *    change rows in ONE write (Delta's `__is_cdc` partition): the kind
-    *    column leads the partitionBy order, change rows get null
-    *    transform and bucket dirs (those dirs are synthetic, so change
-    *    rows keep every table column), files of its `true` partition are
-    *    written to `_change_data/` as CdcFiles (zero-row parts dropped)
-    *    and the rest return as AddFiles. Data files then carry an all-null
-    *    `_change_type`, which every scan ignores: each reads with the
-    *    explicit table schema.
-    *  - identity partitions strip their column out of the files under
-    *    their dirs, so there the same frame is written twice: data rows
-    *    with the table layout, change rows flat.
-    * A frame without the kind column is a plain data write.
+    * hidden [[Cdc.KIND_COL]] besides the table columns, and its data and
+    * change rows go out in ONE write (Delta's `__is_cdc` partition): the
+    * kind column leads the partitionBy order, files of its `true`
+    * partition are written under `_change_data/` as CdcFiles (zero-row
+    * parts dropped) and the rest return as AddFiles. Change rows keep
+    * their identity partition dirs (`_change_data/<col>=<v>/`, Delta's
+    * layout; readers recover the column from the path) and get null
+    * transform and bucket dirs, which are synthetic and dropped, so change
+    * rows keep every other table column. Data files then carry an
+    * all-null `_change_type`, which every scan ignores: each reads with
+    * the explicit table schema. A frame without the kind column is a
+    * plain data write.
     */
   private[lake] def stageFilesAndChanges(
       spark: SparkSession,
@@ -2793,13 +2795,6 @@ object LakeTable {
       props: Map[String, String] = Map.empty): (Seq[AddFile], Seq[CdcFile]) = {
     val withChanges = df0.columns.contains(Cdc.KIND_COL)
     val pFields = PartitionTransforms.parseAll(partitionCols)
-    if (withChanges && pFields.exists(_.isInstanceOf[PartitionTransforms.Identity])) {
-      val data = df0.where(!col(Cdc.KIND_COL)).drop(Cdc.KIND_COL, Cdc.CHANGE_TYPE)
-      return (stageFiles(spark, tablePath, data, schema, partitionCols, bucketSpec,
-          constraints, props),
-        stageFilesAndChanges(spark, tablePath, df0.where(col(Cdc.KIND_COL)), schema,
-          Seq.empty)._2)
-    }
     // CHECK enforcement rides the write plan itself — new-row paths pass
     // the table's constraints; pure reorganizations (compact, rebucket,
     // survivor rewrites) skip the re-validation of already-valid rows
@@ -2821,8 +2816,7 @@ object LakeTable {
       case PartitionTransforms.Identity(c) => c
       case t: PartitionTransforms.Transform => t.dirName
     }
-    // (change rows get null dir values: they all leave for the flat
-    // `_change_data/`, one file per write task)
+    // (change rows get null synthetic dirs, which their files drop)
     def dataDir(dir: Column) = if (withChanges) when(!col(Cdc.KIND_COL), dir) else dir
     val df2t = pFields.foldLeft(df2) {
       case (d, t: PartitionTransforms.Transform) =>
@@ -2848,13 +2842,8 @@ object LakeTable {
     // repartition, the engine's commonest write — gains nothing, yet
     // AQE still materializes each query stage as its own job with a
     // re-optimize + re-codegen between (measured ~0.15 s per small
-    // commit, ~40% of the staged-write cost at bench scale). Disable it
-    // for exactly those plans. The thread-local SQLConf override is NOT
-    // enough for a write COMMAND (SQLExecution.withNewExecutionId
-    // re-propagates the session conf over it before the command plan is
-    // prepared — verified on Spark 4.1: the executed plan stayed
-    // AdaptiveSparkPlanExec); rebinding the frame to a fresh AQE-off
-    // session clone is (Bridge.rebindAdaptiveDisabled, ~3 ms).
+    // commit, ~40% of the staged-write cost at bench scale). Those plans
+    // are planned without AQE, on the caller's session as it stands.
     val aqeCanHelp = {
       import org.apache.spark.sql.catalyst.plans.logical._
       val analyzed = df3.queryExecution.analyzed
@@ -2871,14 +2860,11 @@ object LakeTable {
           _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.SubqueryExpression])))
     }
     val dataSchema = StructType(schema.filterNot(f => partitionCols.contains(f.name)))
-    val writeDf =
-      if (aqeCanHelp) df3
-      else org.apache.spark.sql.graft.Bridge.rebindAdaptiveDisabled(df3)
     // the write tasks report each file with its stats and bloom sidecar;
     // a frame lacking an indexed column in the table's type leaves the
     // indexing to the read-side build
     val root = Paths.get(tablePath).toAbsolutePath.normalize
-    val dataCols = writeDf.schema.filterNot(f => routedCols.contains(f.name))
+    val dataCols = df3.schema.filterNot(f => routedCols.contains(f.name))
     val bloom = BloomIndex.layoutOf(props, dataSchema)
     val hashed = bloom.toSeq.flatMap(_.fields.map(f =>
       dataCols.indexWhere(c => c.name == f.name && c.dataType == f.dataType)))
@@ -2886,8 +2872,8 @@ object LakeTable {
       new graft.util.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration),
       bloom.filter(_ => hashed.forall(_ >= 0)), hashed)
     graft.util.Prof(s"stage.write $tablePath") {
-      org.apache.spark.sql.graft.Bridge.writeFiles(writeDf, root.toString, routedCols,
-        new LakeCommitProtocol(root.toString, bloom), written)
+      org.apache.spark.sql.graft.Bridge.writeFiles(df3, root.toString, routedCols,
+        new LakeCommitProtocol(root.toString, bloom), written, adaptive = aqeCanHelp)
     }
     val (changed, data) = written.written.partition(_.path.startsWith(Cdc.CDC_DIR + "/"))
     // zero-row change files carry no change; a file whose footer the

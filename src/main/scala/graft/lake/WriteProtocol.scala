@@ -22,11 +22,13 @@ private[lake] final case class WrittenFile(path: String, size: Long, modificatio
 
 /** Names each file of the one writer's job at its final place in the
   * table, as Delta's `DelayedCommitProtocol` does: routed change rows
-  * (`__is_cdc=true/…`) go to `_change_data/cdc-*` and routed data rows
-  * lose their `__is_cdc=false/` dir. A task attempt reports its files on
-  * commit and deletes them on abort; an aborted job deletes its
-  * committed tasks' files and sidecars. The files of an attempt that
-  * dies without aborting are orphans that vacuum reaps by mtime. */
+  * (`__is_cdc=true/<dirs>`) go to `_change_data/<identity dirs>/cdc-*`,
+  * dropping the synthetic transform and bucket dirs they carry as nulls,
+  * and routed data rows lose their `__is_cdc=false/` dir. A task attempt
+  * reports its files on commit and deletes them on abort; an aborted job
+  * deletes its committed tasks' files and sidecars. The files of an
+  * attempt that dies without aborting are orphans that vacuum reaps by
+  * mtime. */
 private[lake] final class LakeCommitProtocol(root: String, bloom: Option[BloomIndex.Layout])
     extends FileCommitProtocol with Serializable {
   // task side: this attempt's files; driver side: the committed tasks'
@@ -35,11 +37,14 @@ private[lake] final class LakeCommitProtocol(root: String, bloom: Option[BloomIn
   override def newTaskTempFile(
       ctx: TaskAttemptContext, dir: Option[String], spec: FileNameSpec): String = {
     val name = f"-${ctx.getTaskAttemptID.getTaskID.getId}%05d-${UUID.randomUUID()}${spec.suffix}"
-    val d = dir.getOrElse("")
-    val path =
-      if (d.startsWith(s"${Cdc.KIND_COL}=true")) s"$root/${Cdc.CDC_DIR}/cdc$name"
-      else (root +: Option(d.stripPrefix(s"${Cdc.KIND_COL}=false").stripPrefix("/"))
-        .filter(_.nonEmpty).toSeq :+ s"part$name").mkString("/")
+    val dirs = dir.toSeq.flatMap(_.split('/'))
+    def synthetic(d: String) =
+      d.startsWith(PartitionTransforms.DIR_PREFIX) || d.startsWith(s"${Bucketing.BUCKET_DIR_COL}=")
+    val path = (
+      if (dirs.headOption.contains(s"${Cdc.KIND_COL}=true"))
+        (root +: Cdc.CDC_DIR +: dirs.tail.filterNot(synthetic)) :+ s"cdc$name"
+      else (root +: dirs.filterNot(_ == s"${Cdc.KIND_COL}=false")) :+ s"part$name"
+    ).mkString("/")
     files += path
     path
   }

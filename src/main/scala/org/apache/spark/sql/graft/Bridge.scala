@@ -4,9 +4,12 @@ import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.internal.io.FileCommitProtocol
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.InsertAdaptiveSparkPlan
 import org.apache.spark.sql.execution.datasources.{FileFormatWriter, OutputWriterFactory, WriteJobStatsTracker}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf
@@ -23,75 +26,19 @@ object Bridge {
   def expr(c: Column): Expression = ExpressionUtils.expression(c)
   def column(e: Expression): Column = ExpressionUtils.column(e)
 
-  /** Rebind `df`'s analyzed plan to a clone of its session with
-    * adaptive execution disabled. A write command run through the
-    * returned frame is planned non-adaptively, because the conf that
-    * `SQLExecution.withNewExecutionId` propagates is the CLONE's (a
-    * thread-local SQLConf override is NOT enough: that call
-    * re-propagates the SESSION conf over it before the command plan is
-    * prepared).
-    * The clone shares the SparkContext and SharedState (so the cache
-    * manager still deduplicates cached subplans).
-    *
-    * The twin is CACHED per base session and re-cloned only when the
-    * base session's explicitly-set confs change (compared by
-    * `getAllConfs`, ~0.1 ms): every `cloneSession()` registers its own
-    * ExecutionListenerBus on the SHARED LiveListenerBus, so cloning per
-    * staging write leaked one bus listener per commit — hundreds per
-    * bench run, a session-wide event-dispatch slowdown that only
-    * clears when the dropped twins are GC'd. Conf-change invalidation
-    * keeps the twin exactly as fresh as clone-per-call for everything
-    * a write reads from the session conf.
-    *
-    * An `Observation` attached to `df` completes through the listener
-    * the base session's ObservationManager registers on its first use;
-    * a clone copies only the listeners that exist when it is made. The
-    * manager is therefore created before every clone, so a frame observed
-    * on the base session completes when its write runs on the twin.
-    */
-  def rebindAdaptiveDisabled(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!session.sessionState.conf.adaptiveExecutionEnabled) df
-    else {
-      val confs = session.sessionState.conf.getAllConfs
-      val twin = twinCache.synchronized {
-        Option(twinCache.get(session)) match {
-          case Some((cachedConfs, cachedTwin)) if cachedConfs == confs =>
-            cachedTwin
-          case _ =>
-            session.observationManager
-            val t = session.cloneSession()
-            t.conf.set("spark.sql.adaptive.enabled", "false")
-            twinCache.put(session, (confs, t))
-            t
-        }
-      }
-      org.apache.spark.sql.classic.Dataset.ofRows(twin, df.queryExecution.analyzed)
-    }
-  }
-
-  // The weak key does NOT release an entry: the twin (the value) holds
-  // its base session (the key) strongly through its parent session
-  // state, and the map holds its values strongly. Every base session
-  // that ever staged a write therefore keeps one twin, and one
-  // listener-bus entry, until the JVM exits. That is bounded by the
-  // number of base sessions (usually one); conf changes replace the
-  // entry rather than adding one.
-  private val twinCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      (Map[String, String], org.apache.spark.sql.classic.SparkSession)]()
-
-  /** Number of cached AQE-off twins (one per base session). */
-  def twinCount: Int = twinCache.synchronized(twinCache.size())
-
   /** Run `df` as one job writing parquet files under `root`, Delta's
     * `TransactionalWrite` shape: `FileFormatWriter` over the frame's own
-    * executed plan, under the frame's own execution id, so an
-    * observation on the frame completes when the write does.
+    * query execution, under an execution id of its own, so an
+    * observation on the frame completes when the write does. With
+    * `adaptive = false` that execution is a [[NonAdaptiveExecution]] of
+    * the frame's analyzed plan on the same session, whose conf stays as
+    * the caller set it.
     * `partitionCols` become hive dirs, which `committer` maps to files. */
   def writeFiles(df: DataFrame, root: String, partitionCols: Seq[String],
-      committer: FileCommitProtocol, stats: WriteJobStatsTracker): Unit = {
-    val qe = df.asInstanceOf[classic.Dataset[Row]].queryExecution
+      committer: FileCommitProtocol, stats: WriteJobStatsTracker, adaptive: Boolean): Unit = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val qe = if (adaptive) ds.queryExecution
+      else new NonAdaptiveExecution(ds.sparkSession, ds.queryExecution.analyzed)
     SQLExecution.withNewExecutionId(qe, Some("lakeWrite")) {
       val plan = qe.executedPlan
       FileFormatWriter.write(qe.sparkSession, plan, new LakeParquetFormat, committer,
@@ -100,6 +47,15 @@ object Bridge {
         partitionCols.map(c => plan.output.find(_.name == c).get),
         None, Seq(stats), Map.empty)
     }
+  }
+
+  /** A query execution planned without `InsertAdaptiveSparkPlan`, as
+    * Spark's streaming `IncrementalExecution` is: each exchange runs as
+    * part of one job, with no per-stage re-optimization. */
+  private final class NonAdaptiveExecution(session: classic.SparkSession, plan: LogicalPlan)
+      extends QueryExecution(session, plan) {
+    override protected def preparations: Seq[Rule[SparkPlan]] =
+      super.preparations.filterNot(_.isInstanceOf[InsertAdaptiveSparkPlan])
   }
 
   /** Lake files store INT64 micros timestamps, whose footer min/max feed

@@ -120,7 +120,7 @@ private[graft] class LakeBucketedScanBuilder(
   override def supportCompletePushDown(aggregation: Aggregation): Boolean =
     inner.supportCompletePushDown(aggregation)
 
-  override def build(): Scan = {
+  override def build(): SupportsReportStatistics = {
     val scan = inner.build()
     // aggregate pushdown rewrites the scan to emit pre-aggregated rows;
     // bucket grouping no longer applies to that shape
@@ -191,14 +191,12 @@ private[graft] final class BucketAppendingReaderFactory(
 }
 
 private[graft] class LakeBucketedScan(
-    val inner: Scan,
+    val inner: SupportsReportStatistics,
     val spec: Bucketing.Spec,
     partSchema: StructType,
     fileKeys: Map[String, (Seq[String], Int)],
     val withBucketCol: Boolean = false)
-  extends Scan with SupportsReportPartitioning
-  with org.apache.spark.sql.connector.read.SupportsReportStatistics
-  with Batch {
+  extends Scan with SupportsReportPartitioning with SupportsReportStatistics with Batch {
 
   override def readSchema(): StructType =
     if (withBucketCol)
@@ -209,14 +207,7 @@ private[graft] class LakeBucketedScan(
   /** delegate size statistics so small bucketed dimensions still get
     * broadcast when SPJ doesn't apply */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
-    inner match {
-      case s: org.apache.spark.sql.connector.read.SupportsReportStatistics =>
-        s.estimateStatistics()
-      case _ => new org.apache.spark.sql.connector.read.Statistics {
-        override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.empty()
-        override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
-      }
-    }
+    inner.estimateStatistics()
   override def description(): String = s"${inner.description()} (bucketed)"
   override def toBatch: Batch = this
 

@@ -11,7 +11,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
+import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetTable}
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.sources.StreamSinkProvider
@@ -369,14 +369,20 @@ private[graft] object LakeCdf {
   def cdcFileSchema(tableSchema: StructType): StructType =
     graft.lake.Cdc.fileSchema(tableSchema)
 
-  private def batchFor(path: String, files: Seq[String], schema: StructType)
-      : org.apache.spark.sql.connector.read.Batch = {
+  /** A scan of `files`, whose partition columns come from their dirs
+    * under `basePath`, with its partition columns and, per column of
+    * `schema`, its ordinal in the scan's rows (which put partition
+    * columns last). */
+  private def batchFor(basePath: String, files: Seq[String], schema: StructType)
+      : (org.apache.spark.sql.connector.read.Batch, StructType, IndexedSeq[Int]) = {
     val spark = SparkSession.active.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     spark.conf.set("spark.sql.parquet.fieldId.read.ignoreMissing", "true")
-    val options = new CaseInsensitiveStringMap(Map("basePath" -> path).asJava)
-    ParquetTable(s"lake-cdf:$path", spark, options, files, Some(schema),
-      classOf[ParquetFileFormat]).newScanBuilder(options).build().toBatch
+    val options = new CaseInsensitiveStringMap(Map("basePath" -> basePath).asJava)
+    val scan = ParquetTable(s"lake-cdf:$basePath", spark, options, files, Some(schema),
+      classOf[ParquetFileFormat]).newScanBuilder(options).build().asInstanceOf[ParquetScan]
+    val read = scan.readSchema().fieldNames
+    (scan.toBatch, scan.readPartitionSchema, schema.fieldNames.map(read.indexOf(_)).toIndexedSeq)
   }
 
   /** Change partitions of commits `[from, to]` + their reader factory.
@@ -391,15 +397,18 @@ private[graft] object LakeCdf {
       from: Long, to: Long, log: graft.lake.LakeLog)
       : (Array[InputPartition], CdfReaderFactory) = {
     val out = scala.collection.mutable.ArrayBuffer[InputPartition]()
-    var cdcFactory: PartitionReaderFactory = null
-    var dataFactory: PartitionReaderFactory = null
-    def dataParts(files: Seq[String], changeType: String, v: Long,
-        ts: Long): Unit = {
-      if (files.isEmpty) return
-      val b = batchFor(path, files, tableSchema)
-      if (dataFactory == null) dataFactory = b.createReaderFactory()
+    // one reader factory per file kind and partition layout: a factory
+    // holds no file list, so later batches of that shape reuse it
+    val readers = scala.collection.mutable.LinkedHashMap[
+      (Boolean, StructType), (PartitionReaderFactory, StructType, IndexedSeq[Int])]()
+    def parts(basePath: String, files: Seq[String], schema: StructType,
+        changeType: Option[String], v: Long, ts: Long): Unit = if (files.nonEmpty) {
+      val (b, partSchema, order) = batchFor(basePath, files, schema)
+      val key = (changeType.isEmpty, partSchema)
+      if (!readers.contains(key)) readers(key) = (b.createReaderFactory(), schema, order)
+      val reader = readers.keysIterator.indexOf(key)
       b.planInputPartitions().foreach(p =>
-        out += CdfInputPartition(p, Some(changeType), v, ts))
+        out += CdfInputPartition(p, reader, changeType, v, ts))
     }
     // one snapshot at the range start, then forward replay (O(range))
     var props: Map[String, String] = Map.empty
@@ -415,12 +424,10 @@ private[graft] object LakeCdf {
       val ci = actions.flatMap(_.commitInfo).headOption
       val op = ci.map(_.operation).getOrElse("")
       val tsMicros = ci.map(_.timestamp).getOrElse(0L) * 1000L
-      val cdcFiles = actions.flatMap(_.cdc).map(c => s"$path/${c.path}")
+      val cdcFiles = actions.flatMap(_.cdc).map(_.path)
       if (cdcFiles.nonEmpty) {
-        val b = batchFor(path, cdcFiles, cdcSchema)
-        if (cdcFactory == null) cdcFactory = b.createReaderFactory()
-        b.planInputPartitions().foreach(p =>
-          out += CdfInputPartition(p, None, v, tsMicros))
+        graft.lake.Cdc.layouts(cdcFiles).foreach(fs => parts(s"$path/${graft.lake.Cdc.CDC_DIR}",
+          fs.map(f => s"$path/$f"), cdcSchema, None, v, tsMicros))
       } else if (!graft.lake.LakeTable.REORG_OPS.contains(op)) {
         val removes = actions.flatMap(_.remove)
         if (removes.nonEmpty && graft.lake.LakeTable.DML_OPS.contains(op)) {
@@ -441,11 +448,11 @@ private[graft] object LakeCdf {
                 s"version $v of $path ($op) removes deletion-vector-masked " +
                   "files; stream the change feed from after it or use the " +
                   "batch tableChanges read")
-            dataParts(removedFiles.map(f => s"$path/${f.path}"),
-              graft.lake.Cdc.DELETE, v, tsMicros)
+            parts(path, removedFiles.map(f => s"$path/${f.path}"), tableSchema,
+              Some(graft.lake.Cdc.DELETE), v, tsMicros)
           }
-          dataParts(actions.flatMap(_.add).map(f => s"$path/${f.path}"),
-            graft.lake.Cdc.INSERT, v, tsMicros)
+          parts(path, actions.flatMap(_.add).map(f => s"$path/${f.path}"), tableSchema,
+            Some(graft.lake.Cdc.INSERT), v, tsMicros)
         }
       }
       actions.foreach { a =>
@@ -453,7 +460,7 @@ private[graft] object LakeCdf {
         a.remove.foreach(r => files.remove(r.path))
       }
     }
-    (out.toArray, new CdfReaderFactory(cdcFactory, dataFactory))
+    (out.toArray, new CdfReaderFactory(readers.values.toIndexedSeq))
   }
 }
 
@@ -475,27 +482,32 @@ private[graft] class LakeCdfBatch(
   override def createReaderFactory(): PartitionReaderFactory = planned._2
 }
 
-/** `changeType`: None = rows come from a `_change_data` file that
+/** `reader`: the [[CdfReaderFactory]] entry that reads `inner`.
+  * `changeType`: None = rows come from a `_change_data` file that
   * already carries `_change_type`; Some(t) = derived rows, append `t`. */
 private[graft] case class CdfInputPartition(
-    inner: InputPartition, changeType: Option[String], version: Long,
+    inner: InputPartition, reader: Int, changeType: Option[String], version: Long,
     tsMicros: Long) extends InputPartition
 
-/** Wraps the stock parquet readers, appending the CDF metadata columns
-  * per row: change files already carry `_change_type` (append version +
-  * timestamp); derived insert files append all three. Row-based by
-  * design — CDF batches are sized by changed rows, not the table.
+/** Wraps the stock parquet readers, putting each row's columns back in
+  * table order (a scan puts partition columns last) and appending the
+  * CDF metadata columns per row: change files already carry
+  * `_change_type` (append version + timestamp); derived insert files
+  * append all three. Row-based by design — CDF batches are sized by
+  * changed rows, not the table. `readers`: (factory, row schema, each
+  * column's ordinal in the factory's rows).
   */
 private[graft] class CdfReaderFactory(
-    cdcFactory: PartitionReaderFactory,
-    dataFactory: PartitionReaderFactory) extends PartitionReaderFactory {
+    readers: IndexedSeq[(PartitionReaderFactory, StructType, IndexedSeq[Int])])
+  extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition)
       : org.apache.spark.sql.connector.read.PartitionReader[
         org.apache.spark.sql.catalyst.InternalRow] = {
     val cp = partition.asInstanceOf[CdfInputPartition]
-    val inner = (if (cp.changeType.isEmpty) cdcFactory else dataFactory)
-      .createReader(cp.inner)
+    val (factory, schema, order) = readers(cp.reader)
+    val inner = factory.createReader(cp.inner)
+    val ordered = org.apache.spark.sql.catalyst.ProjectingInternalRow(schema, order)
     val consts = cp.changeType match {
       case None =>
         new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
@@ -510,8 +522,10 @@ private[graft] class CdfReaderFactory(
       private val joined =
         new org.apache.spark.sql.catalyst.expressions.JoinedRow()
       override def next(): Boolean = inner.next()
-      override def get(): org.apache.spark.sql.catalyst.InternalRow =
-        joined(inner.get(), consts)
+      override def get(): org.apache.spark.sql.catalyst.InternalRow = {
+        ordered.project(inner.get())
+        joined(ordered, consts)
+      }
       override def close(): Unit = inner.close()
     }
   }

@@ -175,8 +175,11 @@ private[graft] class LakeCatalogScanBuilder(
       case _ => false
     }
 
+  // the parquet builder's ParquetScan, or a LakeBucketedScanBuilder's
+  // scan: both report statistics
   override def build(): org.apache.spark.sql.connector.read.Scan =
-    new LakeCatalogScan(inner.build(), lake, options)
+    new LakeCatalogScan(inner.build()
+      .asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics], lake, options)
 }
 
 /** The catalog table's scan: batch behavior (including the bucketed
@@ -187,7 +190,7 @@ private[graft] class LakeCatalogScanBuilder(
   * skipChangeCommits).
   */
 private[graft] class LakeCatalogScan(
-    val inner: org.apache.spark.sql.connector.read.Scan,
+    val inner: org.apache.spark.sql.connector.read.SupportsReportStatistics,
     lake: LakeTable,
     options: CaseInsensitiveStringMap)
   extends org.apache.spark.sql.connector.read.Scan
@@ -200,14 +203,7 @@ private[graft] class LakeCatalogScan(
   /** size/row statistics MUST survive the wrapper — a 1 MB dimension
     * that reports unknown size loses its broadcast join. */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
-    inner match {
-      case s: org.apache.spark.sql.connector.read.SupportsReportStatistics =>
-        s.estimateStatistics()
-      case _ => new org.apache.spark.sql.connector.read.Statistics {
-        override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.empty()
-        override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
-      }
-    }
+    inner.estimateStatistics()
   override def description(): String = inner.description()
   override def toBatch: org.apache.spark.sql.connector.read.Batch = inner.toBatch
 

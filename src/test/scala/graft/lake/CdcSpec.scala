@@ -22,8 +22,8 @@ class CdcSpec extends AnyFunSuite {
     (4L, "NY", 40.0), (5L, "TX", 50.0)).toDF("id", "state", "amount")
 
   /** create (v0) + enable CDF (v1) */
-  private def cdfTable(path: String): LakeTable = {
-    val t = LakeTable.create(spark, path, base)
+  private def cdfTable(path: String, partitionBy: Seq[String] = Nil): LakeTable = {
+    val t = LakeTable.create(spark, path, base, partitionBy = partitionBy)
     t.setProperties(Map(Cdc.PROP -> "true"))
     t
   }
@@ -214,29 +214,34 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("DataFrameReader batch readChangeFeed over a version range") {
-    val path = tmpDir()
-    val t = cdfTable(path)
-    t.delete($"id" <= 2) // v2
-    t.append(Seq((9L, "HI", 9.0)).toDF("id", "state", "amount")) // v3
-    val ch = spark.read
-      .format("org.apache.spark.sql.graft.LakeSourceProvider")
-      .option("path", path)
-      .option("readChangeFeed", "true")
-      .option("startingVersion", "2")
-      .load()
-    assert(ch.where(col(Cdc.CHANGE_TYPE) === Cdc.DELETE)
-      .select("id").as[Long].collect().sorted.toSeq === Seq(1L, 2L))
-    assert(ch.where(col(Cdc.CHANGE_TYPE) === Cdc.INSERT)
-      .select("id").as[Long].collect().toSeq === Seq(9L))
-    // bounded range excludes the append
-    val bounded = spark.read
-      .format("org.apache.spark.sql.graft.LakeSourceProvider")
-      .option("path", path)
-      .option("readChangeFeed", "true")
-      .option("startingVersion", "2")
-      .option("endingVersion", "2")
-      .load()
-    assert(bounded.count() === 2)
+    // flat change files, and change files under identity partition dirs
+    for (partitionBy <- Seq(Nil, Seq("state"))) {
+      val path = tmpDir()
+      val t = cdfTable(path, partitionBy)
+      t.delete($"id" <= 2) // v2
+      t.append(Seq((9L, "HI", 9.0)).toDF("id", "state", "amount")) // v3
+      val ch = spark.read
+        .format("org.apache.spark.sql.graft.LakeSourceProvider")
+        .option("path", path)
+        .option("readChangeFeed", "true")
+        .option("startingVersion", "2")
+        .load()
+      assert(ch.where(col(Cdc.CHANGE_TYPE) === Cdc.DELETE)
+        .select("id", "state", "amount").as[(Long, String, Double)].collect().sorted.toSeq ===
+        Seq((1L, "AZ", 10.0), (2L, "CA", 20.0)), partitionBy)
+      assert(ch.where(col(Cdc.CHANGE_TYPE) === Cdc.INSERT)
+        .select("id", "state", "amount").as[(Long, String, Double)].collect().toSeq ===
+        Seq((9L, "HI", 9.0)), partitionBy)
+      // bounded range excludes the append
+      val bounded = spark.read
+        .format("org.apache.spark.sql.graft.LakeSourceProvider")
+        .option("path", path)
+        .option("readChangeFeed", "true")
+        .option("startingVersion", "2")
+        .option("endingVersion", "2")
+        .load()
+      assert(bounded.count() === 2)
+    }
   }
 
   test("readChangeFeed through .table() reader options (catalog form)") {
@@ -302,17 +307,56 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("vacuum retains change data on its own clock") {
+    // flat change files, and change files under identity partition dirs
+    for (partitionBy <- Seq(Nil, Seq("state"))) {
+      val path = tmpDir()
+      val t = cdfTable(path, partitionBy)
+      t.delete($"id" === 1) // writes a change file
+      assert(Files.isDirectory(Paths.get(path, Cdc.CDC_DIR)))
+      // data retention 0 but CDC retention long: change files survive
+      val removed = t.vacuum(retentionMs = 0L, cdcRetentionMs = 1L << 40)
+      assert(!removed.exists(_.startsWith(Cdc.CDC_DIR + "/")), partitionBy)
+      assert(typed(t, 2L, Cdc.DELETE).select("id", "state").as[(Long, String)]
+        .collect().toSeq === Seq((1L, "AZ"))) // feed still replays
+      // now age CDC out too: the feed read fails (file gone)
+      val removed2 = t.vacuum(retentionMs = 0L, cdcRetentionMs = 0L)
+      assert(removed2.exists(_.startsWith(Cdc.CDC_DIR + "/")), partitionBy)
+    }
+  }
+
+  test("streaming readChangeFeed takes identity partition values from change-file and data dirs") {
+    // the partition column sits mid-schema: a scan puts it last
     val path = tmpDir()
-    val t = cdfTable(path)
-    t.delete($"id" === 1) // writes a change file
-    assert(Files.isDirectory(Paths.get(path, Cdc.CDC_DIR)))
-    // data retention 0 but CDC retention long: change files survive
-    val removed = t.vacuum(retentionMs = 0L, cdcRetentionMs = 1L << 40)
-    assert(!removed.exists(_.startsWith(Cdc.CDC_DIR + "/")))
-    assert(typed(t, 2L, Cdc.DELETE).count() === 1) // feed still replays
-    // now age CDC out too: the feed read fails (file gone)
-    val removed2 = t.vacuum(retentionMs = 0L, cdcRetentionMs = 0L)
-    assert(removed2.exists(_.startsWith(Cdc.CDC_DIR + "/")))
+    val t = cdfTable(path, Seq("state"))
+    t.update($"id" === 3, Map("amount" -> lit(31.0))) // v2
+    t.delete($"state" === "NY") // v3
+    val cdcs = (2L to 3L).flatMap(v => t.log.readCommit(v).flatMap(_.cdc)).map(_.path)
+    assert(cdcs.toSet.map((p: String) => Paths.get(p).getParent.toString) ===
+      Set(s"${Cdc.CDC_DIR}/state=CA", s"${Cdc.CDC_DIR}/state=NY"))
+    val q = spark.readStream
+      .format("org.apache.spark.sql.graft.LakeSourceProvider")
+      .option("path", path)
+      .option("readChangeFeed", "true")
+      .option("startingVersion", "0")
+      .load()
+      .writeStream.format("memory").queryName("cdc_identity_stream")
+      .option("checkpointLocation", tmpDir())
+      .start()
+    try {
+      q.processAllAvailable()
+      val got = spark.table("cdc_identity_stream")
+        .select("id", "state", "amount", Cdc.CHANGE_TYPE, "_commit_version")
+        .as[(Long, String, Double, String, Long)].collect().toSeq.sorted
+      // the create's inserts derive from its partitioned data files
+      assert(got === (base.as[(Long, String, Double)].collect().toSeq
+        .map { case (id, st, amt) => (id, st, amt, Cdc.INSERT, 0L) } ++ Seq(
+        (3L, "CA", 30.0, Cdc.UPDATE_PRE, 2L),
+        (3L, "CA", 31.0, Cdc.UPDATE_POST, 2L),
+        (4L, "NY", 40.0, Cdc.DELETE, 3L))).sorted)
+      // the batch replay reads the same rows
+      assert(t.tableChanges(0).select("id", "state", "amount", Cdc.CHANGE_TYPE,
+        "_commit_version").as[(Long, String, Double, String, Long)].collect().toSeq.sorted === got)
+    } finally q.stop()
   }
 
   test("timestamp-bounded feed and empty-range schema") {

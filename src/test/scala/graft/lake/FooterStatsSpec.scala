@@ -156,9 +156,9 @@ class FooterStatsSpec extends AnyFunSuite {
   }
 
   test("concurrent lake writes on one session keep lake files INT64 and restore the caller's type") {
-    // Scan-shaped appends run on the session's AQE-off write twin; the
-    // repartitioned ones run on the caller's session itself, so several
-    // of those overlap on one session conf.
+    // Scan-shaped appends run non-adaptively, repartitioned ones
+    // adaptively, all on the caller's session: several writes overlap
+    // on one session conf.
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
     val prior = spark.conf.getAll.get(tsKey)

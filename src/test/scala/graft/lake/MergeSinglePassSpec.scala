@@ -10,7 +10,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{Bridge, SessionProbe, StageFault}
+import org.apache.spark.sql.graft.{SessionProbe, StageFault}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -131,8 +131,9 @@ class MergeSinglePassSpec extends AnyFunSuite {
 
   /** The table after commit `ver` against the model: rows through the
     * API and SQL, no `_change_type` column visible, the change feed at
-    * `ver`, every change file under `_change_data/`, no routing dir left.
-    * Returns the commit's change files. */
+    * `ver`, every change file under `_change_data/` and the dirs of the
+    * table's identity partition columns, no routing dir left. Returns
+    * the commit's change files. */
   private def checkModel(t: LakeTable, name: String, cdf: Boolean, ver: Long,
       expRows: Seq[Row3], expChanges: Seq[Change]): Seq[CdcFile] = {
     assert(rows(t.toDF) === expRows)
@@ -144,8 +145,13 @@ class MergeSinglePassSpec extends AnyFunSuite {
     if (cdf) {
       assert(changesAt(t, ver) === expChanges)
       assert(cdcFiles.nonEmpty)
+      val identity = PartitionTransforms.parseAll(t.snapshot.metaData.partitionColumns)
+        .collect { case PartitionTransforms.Identity(c) => c }
       cdcFiles.foreach { c =>
-        assert(c.path.startsWith(Cdc.CDC_DIR + "/"), c.path)
+        val dirs :+ file = c.path.split('/').toSeq
+        assert(dirs.head === Cdc.CDC_DIR, c.path)
+        assert(dirs.tail.map(_.takeWhile(_ != '=')) === identity, c.path)
+        assert(file.startsWith("cdc-"), c.path)
         assert(Files.isRegularFile(Paths.get(t.path, c.path)), c.path)
       }
     } else assert(cdcFiles.isEmpty)
@@ -351,8 +357,6 @@ class MergeSinglePassSpec extends AnyFunSuite {
   }
 
   test("job shape: change-feed DMLs cache nothing and add no jobs") {
-    def fresh(cdf: Boolean) = create(Variant("shape", cdf = cdf),
-      Files.createTempDirectory("merge-1p-shape-").toString)
     val upd = col("id") <= 20
     val dmls = Seq[(String, LakeTable => Unit)](
       ("DV merge", runMerge(_, source)),
@@ -360,19 +364,27 @@ class MergeSinglePassSpec extends AnyFunSuite {
       ("update", _.update(upd, Map("amount" -> (col("amount") + 1)))),
       // the change rows ride the write that carries the claims
       ("delete", _.delete(col("id") > 60)))
-    dmls.foreach { case (_, dml) => dml(fresh(cdf = true)) } // warm the plan shapes
-    dmls.foreach { case (name, dml) =>
-      val (plainJobs, plainCached) = shape(dml(fresh(cdf = false)))
-      val (cdfJobs, cdfCached) = shape(dml(fresh(cdf = true)))
-      assert(plainCached === 0, s"a $name read a cached relation")
-      assert(cdfCached === 0, s"a change-feed $name read a cached relation")
-      assert(cdfJobs <= plainJobs,
-        s"change-feed $name ran $cdfJobs jobs, the plain one $plainJobs")
+    // identity partition dirs hold a column of the change rows too: they
+    // ride the same write, under `_change_data/state=<v>/`
+    for (layout <- Seq(Nil, Seq("state"))) {
+      def fresh(cdf: Boolean) = create(Variant("shape", partitionBy = layout, cdf = cdf),
+        Files.createTempDirectory("merge-1p-shape-").toString)
+      dmls.foreach { case (_, dml) => dml(fresh(cdf = true)) } // warm the plan shapes
+      dmls.foreach { case (name, dml) =>
+        val what = s"$name partitioned by $layout"
+        val (plainJobs, plainCached) = shape(dml(fresh(cdf = false)))
+        val (cdfJobs, cdfCached) = shape(dml(fresh(cdf = true)))
+        assert(plainCached === 0, s"a $what read a cached relation")
+        assert(cdfCached === 0, s"a change-feed $what read a cached relation")
+        assert(cdfJobs <= plainJobs,
+          s"change-feed $what ran $cdfJobs jobs, the plain one $plainJobs")
+      }
     }
     // the probe sees caches: a merge whose source is cached
     val cachedSource = source.cache()
     try {
-      val (_, cached) = shape(runMerge(fresh(cdf = true), cachedSource))
+      val (_, cached) = shape(runMerge(create(Variant("shape"),
+        Files.createTempDirectory("merge-1p-shape-").toString), cachedSource))
       assert(cached > 0)
     } finally cachedSource.unpersist()
   }
@@ -496,7 +508,8 @@ class MergeSinglePassSpec extends AnyFunSuite {
     checkCommitted(t, t.version)
   }
 
-  for (v <- variants.filter(v => Set("flat", "bucketed", "copy_on_write")(v.name))) {
+  for (v <- variants.filter(v =>
+      Set("flat", "identity_partitioned", "bucketed", "copy_on_write")(v.name))) {
     test(s"stage retry: a change-feed ${v.name} merge survives a fetch failure") {
       val gate = (alias: String) => StageFault.failOnce(col(s"$alias.id"))
       def run(faults: Boolean): LakeTable = {
@@ -526,7 +539,7 @@ class MergeSinglePassSpec extends AnyFunSuite {
     }
   }
 
-  for (v <- variants.filter(v => Set("flat", "bucketed")(v.name))) {
+  for (v <- variants.filter(v => Set("flat", "identity_partitioned", "bucketed")(v.name))) {
     test(s"stage retry: change-feed UPDATE and DELETE on ${v.name} survive a fetch failure") {
       // A DML on a plain predicate reads no shuffle, so a fetch failure
       // has nothing to hit. These select the model's rows through
@@ -539,7 +552,7 @@ class MergeSinglePassSpec extends AnyFunSuite {
       def run(faults: Boolean): LakeTable = {
         val t = create(v, Files.createTempDirectory("merge-1p-dml-retry-").toString)
         // the UPDATE's claims sit in a map stage exactly where the bucket
-        // exchange sits above the join; DELETE's change write is flat
+        // exchange sits above the join; DELETE's change write adds none
         def dml(name: String, inMapStage: Boolean)(body: => Unit): Unit = {
           LakeLog.awaitMaintenance()
           if (faults) {
@@ -570,15 +583,15 @@ class MergeSinglePassSpec extends AnyFunSuite {
     }
   }
 
-  test("observed claims complete on a session whose write twin predates any observation") {
+  test("observed claims complete on a fresh session") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
-    val path = Files.createTempDirectory("merge-1p-twin-").toString
-    create(Variant("twin"), path)
-    // a new session reads (fixing its field-id confs), then appends: the
-    // append clones the AQE-off twin the DMLs' join-free writes rebind
-    // onto, before the session has observed anything
+    val path = Files.createTempDirectory("merge-1p-fresh-").toString
+    create(Variant("fresh"), path)
+    // a new session reads (fixing its field-id confs), then appends (a
+    // non-adaptive write), before it has observed anything; its DMLs'
+    // join-free writes run non-adaptively too
     val s = spark.newSession()
     val t = LakeTable.forPath(s, path)
     assert(t.toDF.count() === baseRows.size)
@@ -598,7 +611,7 @@ class MergeSinglePassSpec extends AnyFunSuite {
     assert(changesAt(t, ver) === updChanges.filterNot(_._1 == 2))
   }
 
-  test("long session: fifty change-feed merges leak no cache, listener or twin") {
+  test("long session: change-feed merges leak no cache or listener") {
     val sc = spark.sparkContext
     val t = LakeTable.create(spark, s"$warehouse/db/long_session",
       (1L to 200L).map(i => (i, "s", i * 1.0)).toDF("id", "state", "amount"),
@@ -618,7 +631,7 @@ class MergeSinglePassSpec extends AnyFunSuite {
       val keys = (0 until 10).map(k => (i * 7L + k * 13L) % 260L + 1L)
       runMerge(t, keys.map(k => (k, s"v$i", k + i * 1.0, "U"))
         .toDF("id", "state", "amount", "op"))
-      // a join-free staged write goes through the AQE-off twin
+      // a join-free write runs non-adaptively
       if (i % 10 == 0) t.append(Seq((1000L + i, "a", 1.0)).toDF("id", "state", "amount"))
       if (i % 10 == 3) spark.sql(s"INSERT INTO m1p.db.long_session VALUES (${2000 + i}, 'q', 1.0)")
       if (i % 10 == 7) {
@@ -626,10 +639,10 @@ class MergeSinglePassSpec extends AnyFunSuite {
         sink.processAllAvailable()
       }
     }
-    def probe(): (Int, Int, Int) = {
+    def probe(): (Int, Int) = {
       LakeLog.awaitMaintenance()
       SessionProbe.drainListenerBus(sc)
-      (sc.getPersistentRDDs.size, SessionProbe.listenerCount(sc), Bridge.twinCount)
+      (sc.getPersistentRDDs.size, SessionProbe.listenerCount(sc))
     }
     val (before, after) =
       try {
@@ -643,7 +656,6 @@ class MergeSinglePassSpec extends AnyFunSuite {
       .as[Long].head() === 13L)
     assert(after._1 <= before._1, s"persisted RDDs grew: $before -> $after")
     assert(after._2 <= before._2, s"listener-bus listeners grew: $before -> $after")
-    assert(after._3 <= before._3, s"twin sessions grew: $before -> $after")
     assert(t.toDF.count() === t.tableChanges(0).where(
       col(Cdc.CHANGE_TYPE).isin(Cdc.INSERT, Cdc.UPDATE_POST)).count() -
       t.tableChanges(0).where(col(Cdc.CHANGE_TYPE).isin(Cdc.DELETE, Cdc.UPDATE_PRE)).count())

@@ -58,6 +58,20 @@ class MultiColBucketSpec extends AnyFunSuite {
     }
   }
 
+  test("_bucket reads the same ids through the row reader as through the columnar one") {
+    warehouse
+    def read() = spark.sql("SELECT k1, k2, v, _bucket FROM mcb.db.a")
+      .as[(Long, Long, Double, Int)].collect().toSeq.sorted
+    val columnar = read()
+    val key = "spark.sql.parquet.enableVectorizedReader"
+    val prior = spark.conf.getAll.get(key)
+    spark.conf.set(key, "false")
+    val rows = try read() finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(rows.size === 200)
+    assert(rows === columnar)
+    assert(rows.map(_._4).distinct.size > 1)
+  }
+
   test("joining on (k1, k2, _bucket) is shuffle-free and correct") {
     warehouse
     withNoBroadcast {

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StageFault
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -43,6 +44,31 @@ class ComponentsSpec extends AnyFunSuite {
   test("reversed/duplicated edges change nothing") {
     val m = comps((2L, 1L), (1L, 2L), (2L, 3L), (3L, 2L))
     assert(m === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+  }
+
+  test("stage retry under the persisted cut: labels match a fault-free run") {
+    // chains of ten plus disjoint pairs, over a repartition whose reading
+    // stage carries the fault: the edges cut's job re-runs that stage
+    val pairs = (0L until 40L).flatMap(c => (0L until 9L).map(i => (c * 10 + i, c * 10 + i + 1))) ++
+      (1000L until 1040L by 2).map(i => (i, i + 1))
+    def input(faulty: Boolean) = pairs.toDF("id_a", "id_b").repartition(4).select(
+      (if (faulty) when(StageFault.failOnce(col("id_a")), col("id_a")) else col("id_a")).as("id_a"),
+      col("id_b"))
+    def labels(faulty: Boolean) =
+      Dedup.components(input(faulty)).as[(Long, Long)].collect().toSeq.sorted
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    val (clean, faulty, seen) =
+      try {
+        val clean = labels(faulty = false)
+        var faulty = Seq.empty[(Long, Long)]
+        val seen = StageFault.armed(spark.sparkContext) { faulty = labels(faulty = true) }
+        (clean, faulty, seen)
+      } finally spark.conf.unset(coalesce)
+    assert(seen.retries >= 1, "no stage was retried")
+    assert(faulty === clean)
+    assert(clean.size === 440)
+    assert(clean.map(_._2).distinct.size === 60)
   }
 
   test("dedupByPairs keeps one representative per cluster + unmatched rows") {

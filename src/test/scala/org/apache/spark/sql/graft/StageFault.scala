@@ -6,7 +6,9 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.{SparkContext, SparkEnv, TaskContext}
+import org.apache.spark.rpc.{RpcCallContext, RpcEndpoint, RpcEnv}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.scheduler.cluster.{CoarseGrainedClusterMessages, CoarseGrainedSchedulerBackend}
 import org.apache.spark.shuffle.FetchFailedException
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
@@ -20,6 +22,13 @@ import org.apache.spark.sql.functions.udf
   * attempt 1, as after a lost shuffle file. Stages without a shuffle
   * parent pass through. `FetchFailedException` is `private[spark]`,
   * hence this package.
+  *
+  * The lost block manager is the driver's own, so its next heartbeat
+  * re-registers it, and the master first asks the cluster scheduler
+  * endpoint whether that executor is alive. Local mode has no such
+  * endpoint: every heartbeat would fail, and after 60 of them (ten
+  * minutes) the local executor exits and stops the shared context.
+  * [[armed]] therefore serves that one question, answering yes.
   */
 object StageFault {
 
@@ -104,8 +113,24 @@ object StageFault {
     opened
   }
 
+  @volatile private var answering: SparkEnv = null
+
+  private def answerExecutorAlive(): Unit = synchronized {
+    val env = SparkEnv.get
+    if (answering ne env) {
+      env.rpcEnv.setupEndpoint(CoarseGrainedSchedulerBackend.ENDPOINT_NAME, new RpcEndpoint {
+        override val rpcEnv: RpcEnv = env.rpcEnv
+        override def receiveAndReply(ctx: RpcCallContext): PartialFunction[Any, Unit] = {
+          case CoarseGrainedClusterMessages.IsExecutorAlive(_) => ctx.reply(true)
+        }
+      })
+      answering = env
+    }
+  }
+
   /** Run `body` with [[failOnce]] armed. */
   def armed(sc: SparkContext)(body: => Unit): Faults = {
+    answerExecutorAlive()
     sc.addSparkListener(listener)
     retries.set(0)
     failedInMap = false
