@@ -375,6 +375,36 @@ final class LakeTable private (
     } else frames.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
+  /** A table stream's rows for commits `(start, end]`: the AddFiles of
+    * each commit, read through [[readFiles]] as `schema` (the stream's,
+    * fixed when it started). A commit that removes files (MERGE/UPDATE/
+    * DELETE/OVERWRITE) is skipped, or fails the read when
+    * `skipChangeCommits` is false: Delta's `skipChangeCommits`.
+    * REORG-class commits (compaction, Z-order, bloom-index backfill)
+    * move or annotate files without changing the table's rows (Delta's
+    * `dataChange = false`), so they are skipped in both modes: strict
+    * mode only fails on commits that change data, and an adds-only
+    * backfill must not replay its re-adds as inserts. The operation
+    * label is TRUSTED ([[LakeTable.REORG_OPS]]): a writer that mislabels
+    * a data-changing commit as REORG violates the log protocol, exactly
+    * as a false `dataChange = false` does in Delta.
+    */
+  def streamRows(start: Long, end: Long, schema: StructType,
+      skipChangeCommits: Boolean): DataFrame = {
+    val adds = ((start + 1) to end).flatMap { v =>
+      val actions = log.readCommit(v)
+      val op = actions.flatMap(_.commitInfo).headOption.map(_.operation).getOrElse("")
+      if (LakeTable.REORG_OPS.contains(op)) Nil
+      else if (!actions.exists(_.remove.isDefined)) actions.flatMap(_.add)
+      else if (skipChangeCommits) Nil
+      else throw new IllegalStateException(
+        s"version $v of $path rewrites existing data (MERGE/UPDATE/" +
+          "DELETE/OVERWRITE); set skipChangeCommits=true to stream past it")
+    }
+    readFiles(Snapshot(end, snapshot.metaData.withSchema(schema), adds, Map.empty, Seq.empty),
+      adds)
+  }
+
   /** [[tableChanges]] with a timestamp lower bound (Delta's
     * `table_changes(..., startingTimestamp)`). */
   def tableChangesFrom(tsMillis: Long): DataFrame =
@@ -415,7 +445,8 @@ final class LakeTable private (
           return None
         throw new IllegalStateException(
           s"change data was not recorded for version $v of $path " +
-            s"($op committed before ${Cdc.PROP}=true)")
+            s"($op committed before ${Cdc.PROP}=true): the change feed " +
+            "cannot stream past it; read or stream from a later version")
       }
       val inserted =
         if (adds.isEmpty) None

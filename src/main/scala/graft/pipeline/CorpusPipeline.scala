@@ -582,8 +582,8 @@ object CorpusPipeline {
       fuzzyMaxInList = 0, semMaxBroadcastRows = 0L)
 
   /** Continuous curation — the streaming form of [[curateIncremental]]:
-    * the LANDING lake table's commit log streams through the v2 source
-    * ([[graft.streaming.LakeStreaming.asStreamV2]] — exact version
+    * the LANDING lake table's commit log streams through the lake source
+    * ([[graft.streaming.LakeStreaming.asStream]] — exact version
     * offsets, DML-safe) and each micro-batch runs the incremental path
     * (annotate → gate → in-batch dedup → bloom-gated cross-corpus
     * dedup → append → change-feed stats refresh).
@@ -613,7 +613,7 @@ object CorpusPipeline {
       semNLists: Int = 8,
       fuzzyDedup: Boolean = false,
       fuzzyThreshold: Double = 0.5): org.apache.spark.sql.streaming.StreamingQuery =
-    graft.streaming.LakeStreaming.asStreamV2(spark, landingPath, startingVersion)
+    graft.streaming.LakeStreaming.asStream(spark, landingPath, startingVersion)
       .writeStream
       .queryName(s"curate:$outRoot")
       .option("checkpointLocation", checkpointLocation)

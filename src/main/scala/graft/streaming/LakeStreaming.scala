@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 
 import graft.lake.LakeTable
@@ -61,41 +61,14 @@ object LakeStreaming {
       .start()
   }
 
-  /** Table-as-stream source (S9): a Structured Streaming file source over
-    * the table's data directory. New files appended by commits become new
-    * micro-batch input — the `stream-from=LATEST`-style incremental read
-    * of `03.iceberg_primer.py:253-265`.
-    *
-    * Semantics note (same caveat Delta documents for streaming sources):
-    * intended for APPEND-ONLY tables. Files rewritten by DELETE/UPDATE/
-    * MERGE reappear as new input; vacuumed files disappear from the
-    * backlog.
+  /** Table-as-stream source (S9): the table's commit log as a stream
+    * ([[org.apache.spark.sql.graft.LakeSourceProvider]]). Each
+    * micro-batch holds the rows of the commits it covers, resumes at its
+    * exact version offset, and starts at `startingVersion`. Commits that
+    * rewrite data (DELETE/UPDATE/MERGE/OVERWRITE) are skipped, not
+    * re-emitted, or fail the stream when `skipChangeCommits` is false.
     */
   def asStream(spark: SparkSession, tablePath: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val table = LakeTable.forPath(spark, tablePath)
-    val snap = table.snapshot
-    var reader = spark.readStream
-      .schema(snap.schema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("recursiveFileLookup", "false") // hive dirs handled by partition discovery
-      .option("basePath", tablePath)
-    maxFilesPerTrigger.foreach(n => reader = reader.option("maxFilesPerTrigger", n))
-    // hive partition dirs only (col=val) — a bare /* would also match
-    // _lake_log and trip CONFLICTING_DIRECTORY_STRUCTURES
-    val pattern =
-      if (snap.metaData.partitionColumns.isEmpty) tablePath
-      else tablePath + ("/*=*" * snap.metaData.partitionColumns.size)
-    reader.parquet(pattern)
-  }
-
-  /** Commit-log streaming source (the v2 replacement for [[asStream]]):
-    * exact version-range micro-batches via a custom MicroBatchStream,
-    * DML-safe (rewrite commits are skipped, not re-emitted), resumable
-    * at the precise version offset, `startingVersion` supported. See
-    * [[org.apache.spark.sql.graft.LakeSourceProvider]].
-    */
-  def asStreamV2(spark: SparkSession, tablePath: String,
       startingVersion: Long = 0L,
       skipChangeCommits: Boolean = true): DataFrame =
     spark.readStream

@@ -8,8 +8,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -23,10 +21,12 @@ import graft.lake.LakeTable
   *
   * Reads delegate to Spark's own ParquetTable pinned to the SNAPSHOT's
   * file list, so pushdown/pruning/vectorized scan are stock; the commit
-  * log decides which files exist. SQL writes (INSERT, INSERT OVERWRITE,
-  * CTAS, DELETE, UPDATE, MERGE) resolve against these tables and run as
-  * [[LakeTable]] calls ([[LakeDmlRule]]), so the tables advertise no
-  * DSv2 write capability.
+  * log decides which files exist. `spark.readStream.table` streams the
+  * table through the path provider's V1 source ([[LakeCdfReadRule]]
+  * rewrites the streaming relation), with or without `readChangeFeed`.
+  * SQL writes (INSERT, INSERT OVERWRITE, CTAS, DELETE, UPDATE, MERGE)
+  * resolve against these tables and run as [[LakeTable]] calls
+  * ([[LakeDmlRule]]), so the tables advertise no DSv2 write capability.
   *
   * Register with:
   *   spark.conf.set("spark.sql.catalog.lake",
@@ -65,23 +65,8 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces with FunctionCata
     var t = LakeTable.forPath(spark, path)
     asOfTs.foreach(ts => t = t.asOfTimestamp(ts))
     asOf.foreach(v => t = t.asOf(v))
-    // renamed/dropped columns resolve by parquet field id
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    spark.conf.set("spark.sql.parquet.fieldId.read.ignoreMissing", "true")
-    val snap = t.snapshot
-    val files = snap.files.map(f => s"$path/${f.path}")
-    val options = new CaseInsensitiveStringMap(
-      Map("basePath" -> path).asJava)
-    val fullName =
-      s"$catalogName.${ident.namespace().mkString(".")}.${ident.name()}"
-    val parquet = ParquetTable(
-      fullName,
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      options,
-      files,
-      Some(snap.schema),
-      classOf[ParquetFileFormat])
-    new LakeV2Table(t, fullName, parquet)
+    LakeV2Table(t,
+      s"$catalogName.${ident.namespace().mkString(".")}.${ident.name()}")
   }
 
   /** Plain load, plus Delta's `@v<N>` name suffix (the reference's

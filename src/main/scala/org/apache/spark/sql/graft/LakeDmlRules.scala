@@ -1,5 +1,7 @@
 package org.apache.spark.sql.graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, ExprId, Literal}
@@ -159,44 +161,47 @@ class LakeDvReadRule(session: SparkSession) extends Rule[LogicalPlan] {
     }
 }
 
-/** Batch change-feed reads through reader options (Delta's
-  * `spark.read.option("readChangeFeed","true").table("lake.db.t")`):
-  * swaps the relation for the change-feed plan DURING resolution — the
-  * plan above is still unresolved at that point, so `_change_type` /
-  * `_commit_version` / `_commit_timestamp` resolve against the
-  * substituted schema on the analyzer's next fixed-point pass. The
-  * path-based form (`spark.read.format(provider)`) and the SQL
-  * `table_changes` TVF share the same underlying
-  * [[graft.lake.LakeTable.tableChanges]] replay.
+/** Change-feed and streaming reads of a [[LakeV2Table]].
   *
-  * Options: `startingVersion` (default 0) or `startingTimestamp`
-  * (epoch millis or `yyyy-mm-dd hh:mm:ss[.f...]`), and an optional
-  * `endingVersion`.
+  * Batch change-feed reads through reader options (Delta's
+  * `spark.read.option("readChangeFeed","true").table("lake.db.t")`, and
+  * the path form `spark.read.format(provider)`): swaps the relation for
+  * the [[graft.lake.LakeTable.tableChanges]] plan DURING resolution —
+  * the plan above is still unresolved at that point, so `_change_type` /
+  * `_commit_version` / `_commit_timestamp` resolve against the
+  * substituted schema on the analyzer's next fixed-point pass. The SQL
+  * `table_changes` TVF shares the same replay. Options:
+  * `startingVersion` (default 0) or `startingTimestamp` (epoch millis or
+  * `yyyy-mm-dd hh:mm:ss[.f...]`), and an optional `endingVersion`.
+  *
+  * Streams of a catalog table (`spark.readStream.table(...)`, plain or
+  * with `readChangeFeed`) become the path provider's V1 source
+  * ([[LakeSource]]), so they read what batch reads; `startingTimestamp`
+  * resolves to its version here. A plain stream keeps the relation's
+  * output attributes; a change-feed stream's output is the change-feed
+  * schema.
   */
 class LakeCdfReadRule(session: SparkSession) extends Rule[LogicalPlan] {
+  import org.apache.spark.sql.catalyst.streaming.StreamingRelationV2
+  import org.apache.spark.sql.execution.datasources.DataSource
+  import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
+
+  private def millis(ts: String): Long =
+    ts.toLongOption.getOrElse(java.sql.Timestamp.valueOf(ts).getTime)
+
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.resolveOperatorsDown {
-      // STREAMING form (`spark.readStream.option(...).table(...)`): swap
-      // the catalog table for the path-based CDF stream table, with the
-      // CDF read schema as the relation output
-      case r: org.apache.spark.sql.catalyst.streaming.StreamingRelationV2
-          if r.table.isInstanceOf[LakeV2Table] &&
-            Option(r.extraOptions.get("readChangeFeed")).exists(_.toBoolean) =>
+      case r: StreamingRelationV2 if r.table.isInstanceOf[LakeV2Table] =>
         val t = r.table.asInstanceOf[LakeV2Table]
-        def opt(k: String) = Option(r.extraOptions.get(k))
-        val startingVersion = opt("startingTimestamp") match {
-          case Some(ts) =>
-            val millis = ts.toLongOption.getOrElse(
-              java.sql.Timestamp.valueOf(ts).getTime)
-            t.lake.log.versionAtTimestamp(millis)
-          case None => opt("startingVersion").map(_.toLong).getOrElse(0L)
-        }
-        val cdfSchema = graft.lake.Cdc.readSchema(t.snap.schema)
-        r.copy(
-          table = new LakeStreamTable(t.lake.path, cdfSchema,
-            startingVersion, skipChangeCommits = true, cdf = true),
-          output = org.apache.spark.sql.catalyst.types.DataTypeUtils
-            .toAttributes(cdfSchema))
+        val options = r.extraOptions.asCaseSensitiveMap.asScala.toMap ++
+          Option(r.extraOptions.get("startingTimestamp")).map(ts =>
+            "startingVersion" -> t.lake.log.versionAtTimestamp(millis(ts)).toString) +
+          ("path" -> t.lake.path)
+        val source = DataSource(session, classOf[LakeSourceProvider].getName,
+          options = options)
+        if (Option(r.extraOptions.get("readChangeFeed")).exists(_.toBoolean))
+          StreamingRelation(source)
+        else StreamingRelation(source, r.sourceName, r.output)
 
       case r: DataSourceV2Relation
           if r.table.isInstanceOf[LakeV2Table] &&
@@ -209,9 +214,7 @@ class LakeCdfReadRule(session: SparkSession) extends Rule[LogicalPlan] {
           case Some(ts) =>
             require(opt("endingVersion").isEmpty,
               "readChangeFeed: endingVersion composes with startingVersion only")
-            val millis = ts.toLongOption.getOrElse(
-              java.sql.Timestamp.valueOf(ts).getTime)
-            t.lake.tableChangesFrom(millis)
+            t.lake.tableChangesFrom(millis(ts))
           case None =>
             t.lake.tableChanges(
               opt("startingVersion").map(_.toLong).getOrElse(0L),

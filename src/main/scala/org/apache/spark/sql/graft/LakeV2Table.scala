@@ -7,16 +7,20 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read.ScanBuilder
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.lake.LakeTable
 
-/** The DSv2 Table for a lake table: reads delegate to Spark's own
+/** The DSv2 Table for a lake table, from the catalog or a path
+  * ([[LakeSourceProvider]]): batch reads delegate to Spark's own
   * ParquetTable pinned to the loaded snapshot's file list (stock
   * pushdown/pruning/vectorization). SQL writes never reach a DSv2 write:
   * [[LakeDmlRule]] turns them into one [[graft.lake.LakeTable.write]].
+  * Streams never reach its scan either: [[LakeCdfReadRule]] turns a
+  * streaming relation over it into the provider's [[LakeSource]].
   * Time-travel handles (`VERSION AS OF`) are read-only, same rule as the
   * Scala API.
   */
@@ -95,14 +99,13 @@ class LakeV2Table(
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(
       TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ,
       // MERGE WITH SCHEMA EVOLUTION: the analyzer alters the table
       // through LakeCatalog.alterTable (metadata-only ADD COLUMN
       // commits) before expanding star actions
       TableCapability.AUTOMATIC_SCHEMA_EVOLUTION)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val base: ScanBuilder = bucketSpec match {
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    bucketSpec match {
       // DV'd tables read through the substituted union plan, and a file
       // written before bucketing was enabled has no bucket id — both fall
       // back to the stock parquet scan (correct, just shuffles on join)
@@ -120,135 +123,21 @@ class LakeV2Table(
           spec, partSchema, fileKeys)
       case _ => inner.newScanBuilder(options)
     }
-    // wrap the built scan so `spark.readStream.table("lake.db.t")` gets a
-    // MicroBatchStream; batch reads and every pushdown surface delegate
-    // straight through
-    new LakeCatalogScanBuilder(base, lake, options)
-  }
 }
 
-/** Delegating builder: every pushdown surface passes through to the
-  * parquet/bucketed builder; the built scan is wrapped for streaming. */
-private[graft] class LakeCatalogScanBuilder(
-    inner: ScanBuilder,
-    lake: LakeTable,
-    options: CaseInsensitiveStringMap)
-  extends ScanBuilder
-  with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
-  with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
-  with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
-
-  import org.apache.spark.sql.catalyst.expressions.Expression
-  import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
-  import org.apache.spark.sql.connector.expressions.filter.Predicate
-
-  override def pruneColumns(requiredSchema: StructType): Unit = inner match {
-    case s: org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns =>
-      s.pruneColumns(requiredSchema)
-    case _ => ()
+object LakeV2Table {
+  /** The table over `lake`'s snapshot, named `name`: Spark's
+    * ParquetTable pinned to the snapshot's files. */
+  def apply(lake: LakeTable, name: String): LakeV2Table = {
+    val spark = lake.spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    // renamed/dropped columns resolve by parquet field id
+    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+    spark.conf.set("spark.sql.parquet.fieldId.read.ignoreMissing", "true")
+    val snap = lake.snapshot
+    val parquet = ParquetTable(name, spark,
+      new CaseInsensitiveStringMap(Map("basePath" -> lake.path).asJava),
+      snap.files.map(f => s"${lake.path}/${f.path}"), Some(snap.schema),
+      classOf[ParquetFileFormat])
+    new LakeV2Table(lake, name, parquet)
   }
-
-  override def pushFilters(filters: Seq[Expression]): Seq[Expression] =
-    inner match {
-      case s: org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters =>
-        s.pushFilters(filters)
-      case _ => filters
-    }
-
-  override def pushedFilters(): Array[Predicate] = inner match {
-    case s: org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters =>
-      s.pushedFilters
-    case _ => Array.empty
-  }
-
-  override def pushAggregation(aggregation: Aggregation): Boolean =
-    inner match {
-      case s: org.apache.spark.sql.connector.read.SupportsPushDownAggregates =>
-        s.pushAggregation(aggregation)
-      case _ => false
-    }
-
-  override def supportCompletePushDown(aggregation: Aggregation): Boolean =
-    inner match {
-      case s: org.apache.spark.sql.connector.read.SupportsPushDownAggregates =>
-        s.supportCompletePushDown(aggregation)
-      case _ => false
-    }
-
-  // the parquet builder's ParquetScan, or a LakeBucketedScanBuilder's
-  // scan: both report statistics
-  override def build(): org.apache.spark.sql.connector.read.Scan =
-    new LakeCatalogScan(inner.build()
-      .asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics], lake, options)
-}
-
-/** The catalog table's scan: batch behavior (including the bucketed
-  * KeyGroupedPartitioning and parquet runtime filtering) delegates to the
-  * wrapped scan; `toMicroBatchStream` serves `spark.readStream.table` by
-  * streaming the commit log exactly like the path-based provider
-  * ([[LakeMicroBatchStream]] — same options: startingVersion,
-  * skipChangeCommits).
-  */
-private[graft] class LakeCatalogScan(
-    val inner: org.apache.spark.sql.connector.read.SupportsReportStatistics,
-    lake: LakeTable,
-    options: CaseInsensitiveStringMap)
-  extends org.apache.spark.sql.connector.read.Scan
-  with org.apache.spark.sql.connector.read.SupportsReportPartitioning
-  with org.apache.spark.sql.connector.read.SupportsReportStatistics
-  with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
-
-  override def readSchema(): StructType = inner.readSchema()
-
-  /** size/row statistics MUST survive the wrapper — a 1 MB dimension
-    * that reports unknown size loses its broadcast join. */
-  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
-    inner.estimateStatistics()
-  override def description(): String = inner.description()
-  override def toBatch: org.apache.spark.sql.connector.read.Batch = inner.toBatch
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    def opt(k: String) = Option(options.get(k))
-    if (opt("readChangeFeed").exists(_.toBoolean))
-      throw new UnsupportedOperationException(
-        "streaming readChangeFeed goes through the path-based provider " +
-          "(spark.readStream.format(LakeSourceProvider).option(\"readChangeFeed\",\"true\"))" +
-          " — the catalog relation's schema is the table schema, not the CDF schema")
-    new LakeMicroBatchStream(lake.path, lake.snapshot.schema,
-      opt("startingVersion").map(_.toLong).getOrElse(0L),
-      opt("skipChangeCommits").forall(_.toBoolean))
-  }
-
-  override def outputPartitioning()
-      : org.apache.spark.sql.connector.read.partitioning.Partitioning =
-    inner match {
-      case p: org.apache.spark.sql.connector.read.SupportsReportPartitioning =>
-        p.outputPartitioning()
-      case _ =>
-        new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
-    }
-
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    inner match {
-      case f: org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering =>
-        f.filterAttributes()
-      case _ => Array.empty
-    }
-
-  override def filter(
-      filters: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit =
-    inner match {
-      case f: org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering =>
-        f.filter(filters)
-      case _ => ()
-    }
-
-  // exchange/scan reuse: equality is the wrapped scan's
-  override def equals(other: Any): Boolean = other match {
-    case s: LakeCatalogScan => inner == s.inner
-    case _ => false
-  }
-  override def hashCode(): Int = inner.hashCode()
 }

@@ -24,6 +24,19 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Runs `body` with the lake catalog `name` over `warehouse` registered
+    * on the shared session, and unsets both of its keys afterwards, so
+    * no later suite sees the catalog. */
+  def withCatalog[T](name: String, warehouse: String)(body: => T): T = {
+    session.conf.set(s"spark.sql.catalog.$name", "org.apache.spark.sql.graft.LakeCatalog")
+    session.conf.set(s"spark.sql.catalog.$name.warehouse", warehouse)
+    try body
+    finally {
+      session.conf.unset(s"spark.sql.catalog.$name")
+      session.conf.unset(s"spark.sql.catalog.$name.warehouse")
+    }
+  }
 }
 
 /** Shared filesystem helpers for specs (one copy, not one per suite). */

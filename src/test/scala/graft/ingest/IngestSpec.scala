@@ -244,6 +244,23 @@ class IngestSpec extends AnyFunSuite {
     assert(LakeTable.forPath(spark, root.resolve("sink").toString).toDF.count() === 3)
   }
 
+  test("lake table as stream does not re-emit the rows a DELETE rewrote") {
+    val root = tmp()
+    val src = root.resolve("dml_src").toString
+    val t = LakeTable.create(spark, src,
+      Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "k", "v").coalesce(1))
+    def run(): Unit = LakeStreaming.sink(LakeStreaming.asStream(spark, src),
+      root.resolve("dml_sink").toString, "dml", root.resolve("ckpt_dml").toString)
+      .awaitTermination()
+    run()
+    // copy-on-write DELETE: row 2 moves into a new file without row 1
+    t.delete(col("id") === 1L, useDvs = false)
+    t.append(Seq((3L, "c", 30.0)).toDF("id", "k", "v"))
+    run()
+    val out = LakeTable.forPath(spark, root.resolve("dml_sink").toString).toDF
+    assert(out.select("id").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
+  }
+
   test("lake table as stream works for partitioned tables") {
     val root = tmp()
     val src = root.resolve("parted_src").toString

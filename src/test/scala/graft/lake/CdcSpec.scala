@@ -37,53 +37,90 @@ class CdcSpec extends AnyFunSuite {
     // then upsert (insert ∪ update_postimage) — starting from nothing,
     // and you hold exactly the table's final state. Random interleaving
     // so every recording path (DV delete, rewrite delete, merge clause
-    // cascade, append derivation) participates.
-    for (seed <- Seq(31L, 32L)) {
-      val rnd = new scala.util.Random(seed)
-      val path = tmpDir()
-      val t = cdfTable(path)
-      var nextId = 100L
-      (1 to 7).foreach { _ =>
-        rnd.nextInt(4) match {
-          case 0 =>
-            val rows = Seq.fill(1 + rnd.nextInt(3)) {
-              val id = nextId; nextId += 1
-              (id, Seq("AZ", "CA", "TX")(rnd.nextInt(3)), rnd.nextInt(90).toDouble)
-            }
-            t.append(rows.toDF("id", "state", "amount"))
-          case 1 =>
-            val m = 2 + rnd.nextInt(5)
-            t.delete(pmod(col("id"), lit(m)) === rnd.nextInt(m))
-          case 2 =>
-            val m = 2 + rnd.nextInt(5)
-            t.update(pmod(col("id"), lit(m)) === rnd.nextInt(m),
-              Map("amount" -> (col("amount") + 100)))
-          case 3 =>
-            val src = Seq.fill(2) {
-              val id = if (rnd.nextBoolean()) rnd.nextInt(5) + 1L
-                else { nextId += 1; nextId - 1 }
-              (id, "MG", rnd.nextInt(70).toDouble)
-            }.toDF("id", "state", "amount")
-            t.merge(src.dropDuplicates("id"), expr("t.id = s.id"))
+    // cascade, append derivation, an overwrite of DV-masked files)
+    // participates. The feed streamed with Trigger.AvailableNow, by path
+    // and by catalog name, is the batch feed row for row.
+    val wh = Files.createTempDirectory("cdc-replay-wh-").toString
+    Files.createDirectories(Paths.get(s"$wh/db"))
+    TestSpark.withCatalog("cdcr", wh) {
+      for (seed <- Seq(31L, 32L)) {
+        val rnd = new scala.util.Random(seed)
+        val path = s"$wh/db/r$seed"
+        val t = cdfTable(path)
+        var nextId = 100L
+        (1 to 7).foreach { _ =>
+          rnd.nextInt(4) match {
+            case 0 =>
+              val rows = Seq.fill(1 + rnd.nextInt(3)) {
+                val id = nextId; nextId += 1
+                (id, Seq("AZ", "CA", "TX")(rnd.nextInt(3)), rnd.nextInt(90).toDouble)
+              }
+              t.append(rows.toDF("id", "state", "amount"))
+            case 1 =>
+              val m = 2 + rnd.nextInt(5)
+              t.delete(pmod(col("id"), lit(m)) === rnd.nextInt(m))
+            case 2 =>
+              val m = 2 + rnd.nextInt(5)
+              t.update(pmod(col("id"), lit(m)) === rnd.nextInt(m),
+                Map("amount" -> (col("amount") + 100)))
+            case 3 =>
+              val src = Seq.fill(2) {
+                val id = if (rnd.nextBoolean()) rnd.nextInt(5) + 1L
+                  else { nextId += 1; nextId - 1 }
+                (id, "MG", rnd.nextInt(70).toDouble)
+              }.toDF("id", "state", "amount")
+              t.merge(src.dropDuplicates("id"), expr("t.id = s.id"))
+          }
         }
+        // an overwrite of a table with live deletion vectors: its derived
+        // deletes are the rows the vectors do not mask
+        val dv = (nextId until nextId + 3).map(id => (id, "DV", id.toDouble))
+        nextId += 3
+        t.append(dv.toDF("id", "state", "amount").coalesce(1))
+        t.delete(col("id") === dv.head._1)
+        assert(t.snapshot.files.exists(f => f.dvPath.isDefined || f.dvInline.isDefined),
+          s"seed $seed: the overwrite must meet live deletion vectors")
+        val live = t.toDF.select("id", "state", "amount").as[(Long, String, Double)].collect()
+        t.overwrite((live.toSeq :+ ((nextId, "OW", 1.0))).toDF("id", "state", "amount"))
+        nextId += 1
+        val replayed = scala.collection.mutable.Map[Long, (String, Double)]()
+        val changes = t.tableChanges(0, None)
+          .select("_commit_version", Cdc.CHANGE_TYPE, "id", "state", "amount")
+          .collect()
+          .groupBy(_.getLong(0)).toSeq.sortBy(_._1)
+        changes.foreach { case (_, rows) =>
+          val (outs, ins) = rows.partition(r =>
+            r.getString(1) == Cdc.DELETE || r.getString(1) == Cdc.UPDATE_PRE)
+          outs.foreach(r => replayed.remove(r.getLong(2)))
+          ins.foreach(r =>
+            replayed(r.getLong(2)) = (r.getString(3), r.getDouble(4)))
+        }
+        val finalState = t.toDF.select("id", "state", "amount").collect()
+          .map(r => r.getLong(0) -> (r.getString(1), r.getDouble(2))).toMap
+        assert(replayed.toMap === finalState,
+          s"seed $seed: replayed feed diverges from the table")
+        assert(finalState.nonEmpty, "fixture should retain rows")
+
+        def feedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+          df.select("id", "state", "amount", Cdc.CHANGE_TYPE, "_commit_version",
+            "_commit_timestamp").collect().map(_.toString).toSeq.sorted
+        def streamed(df: org.apache.spark.sql.DataFrame, name: String): Seq[String] = {
+          val q = df.writeStream.format("memory").queryName(name)
+            .option("checkpointLocation", tmpDir())
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+          try q.awaitTermination() finally q.stop()
+          feedRows(spark.table(name))
+        }
+        val batch = feedRows(t.tableChanges(0))
+        assert(streamed(spark.readStream
+          .format("org.apache.spark.sql.graft.LakeSourceProvider")
+          .option("path", path).option("readChangeFeed", "true").load(),
+          s"cdc_replay_path_$seed") === batch, s"seed $seed: path stream")
+        assert(streamed(spark.readStream.option("readChangeFeed", "true")
+          .table(s"cdcr.db.r$seed"), s"cdc_replay_table_$seed") === batch,
+          s"seed $seed: catalog stream")
       }
-      val replayed = scala.collection.mutable.Map[Long, (String, Double)]()
-      val changes = t.tableChanges(0, None)
-        .select("_commit_version", Cdc.CHANGE_TYPE, "id", "state", "amount")
-        .collect()
-        .groupBy(_.getLong(0)).toSeq.sortBy(_._1)
-      changes.foreach { case (_, rows) =>
-        val (outs, ins) = rows.partition(r =>
-          r.getString(1) == Cdc.DELETE || r.getString(1) == Cdc.UPDATE_PRE)
-        outs.foreach(r => replayed.remove(r.getLong(2)))
-        ins.foreach(r =>
-          replayed(r.getLong(2)) = (r.getString(3), r.getDouble(4)))
-      }
-      val finalState = t.toDF.select("id", "state", "amount").collect()
-        .map(r => r.getLong(0) -> (r.getString(1), r.getDouble(2))).toMap
-      assert(replayed.toMap === finalState,
-        s"seed $seed: replayed feed diverges from the table")
-      assert(finalState.nonEmpty, "fixture should retain rows")
     }
   }
 
@@ -203,14 +240,14 @@ class CdcSpec extends AnyFunSuite {
 
     // dotted catalog identifier resolves through the warehouse conf
     val wh = Files.createTempDirectory("cdc-wh-").toString
-    spark.conf.set("spark.sql.catalog.cdc", "org.apache.spark.sql.graft.LakeCatalog")
-    spark.conf.set("spark.sql.catalog.cdc.warehouse", wh)
-    Files.createDirectories(Paths.get(s"$wh/db"))
-    val t2 = cdfTable(s"$wh/db/t")
-    t2.update($"id" === 1, Map("amount" -> lit(0.0))) // v2
-    val n = spark.sql(
-      s"SELECT count(*) FROM table_changes('cdc.db.t', 2, 2)").as[Long].head()
-    assert(n === 2) // pre + post image
+    TestSpark.withCatalog("cdc", wh) {
+      Files.createDirectories(Paths.get(s"$wh/db"))
+      val t2 = cdfTable(s"$wh/db/t")
+      t2.update($"id" === 1, Map("amount" -> lit(0.0))) // v2
+      val n = spark.sql(
+        s"SELECT count(*) FROM table_changes('cdc.db.t', 2, 2)").as[Long].head()
+      assert(n === 2) // pre + post image
+    }
   }
 
   test("DataFrameReader batch readChangeFeed over a version range") {
@@ -246,43 +283,43 @@ class CdcSpec extends AnyFunSuite {
 
   test("readChangeFeed through .table() reader options (catalog form)") {
     val wh = Files.createTempDirectory("cdc-tbl-wh-").toString
-    spark.conf.set("spark.sql.catalog.cdct", "org.apache.spark.sql.graft.LakeCatalog")
-    spark.conf.set("spark.sql.catalog.cdct.warehouse", wh)
-    Files.createDirectories(Paths.get(s"$wh/db"))
-    val t = cdfTable(s"$wh/db/feed")
-    t.delete($"id" <= 2) // v2
-    t.append(Seq((9L, "HI", 9.0)).toDF("id", "state", "amount")) // v3
-    val ch = spark.read
-      .option("readChangeFeed", "true")
-      .option("startingVersion", 2)
-      .table("cdct.db.feed")
-    // the relation schema is the CDF schema, so downstream projections
-    // of _change_type resolve
-    assert(ch.columns.contains(Cdc.CHANGE_TYPE))
-    assert(ch.where(col(Cdc.CHANGE_TYPE) === Cdc.DELETE)
-      .select("id").as[Long].collect().sorted.toSeq === Seq(1L, 2L))
-    assert(ch.where(col(Cdc.CHANGE_TYPE) === Cdc.INSERT)
-      .select("id").as[Long].collect().toSeq === Seq(9L))
-    // bounded range excludes the append
-    val bounded = spark.read
-      .option("readChangeFeed", "true")
-      .option("startingVersion", 2)
-      .option("endingVersion", 2)
-      .table("cdct.db.feed")
-    assert(bounded.count() === 2)
-    // startingTimestamp form: from the table's first commit → everything
-    val t0 = t.log.readCommit(0L).flatMap(_.commitInfo).head.timestamp
-    val fromTs = spark.read
-      .option("readChangeFeed", "true")
-      .option("startingTimestamp", t0.toString)
-      .table("cdct.db.feed")
-    assert(fromTs.where(col(Cdc.CHANGE_TYPE) === Cdc.INSERT).count() === 6)
-    // without the option the same name still reads the table itself
-    assert(spark.table("cdct.db.feed").count() === 4)
-    intercept[IllegalArgumentException] {
-      spark.read.option("readChangeFeed", "true")
-        .option("startingVersion", 0).option("startingTimestamp", "0")
-        .table("cdct.db.feed").collect()
+    TestSpark.withCatalog("cdct", wh) {
+      Files.createDirectories(Paths.get(s"$wh/db"))
+      val t = cdfTable(s"$wh/db/feed")
+      t.delete($"id" <= 2) // v2
+      t.append(Seq((9L, "HI", 9.0)).toDF("id", "state", "amount")) // v3
+      val ch = spark.read
+        .option("readChangeFeed", "true")
+        .option("startingVersion", 2)
+        .table("cdct.db.feed")
+      // the relation schema is the CDF schema, so downstream projections
+      // of _change_type resolve
+      assert(ch.columns.contains(Cdc.CHANGE_TYPE))
+      assert(ch.where(col(Cdc.CHANGE_TYPE) === Cdc.DELETE)
+        .select("id").as[Long].collect().sorted.toSeq === Seq(1L, 2L))
+      assert(ch.where(col(Cdc.CHANGE_TYPE) === Cdc.INSERT)
+        .select("id").as[Long].collect().toSeq === Seq(9L))
+      // bounded range excludes the append
+      val bounded = spark.read
+        .option("readChangeFeed", "true")
+        .option("startingVersion", 2)
+        .option("endingVersion", 2)
+        .table("cdct.db.feed")
+      assert(bounded.count() === 2)
+      // startingTimestamp form: from the table's first commit → everything
+      val t0 = t.log.readCommit(0L).flatMap(_.commitInfo).head.timestamp
+      val fromTs = spark.read
+        .option("readChangeFeed", "true")
+        .option("startingTimestamp", t0.toString)
+        .table("cdct.db.feed")
+      assert(fromTs.where(col(Cdc.CHANGE_TYPE) === Cdc.INSERT).count() === 6)
+      // without the option the same name still reads the table itself
+      assert(spark.table("cdct.db.feed").count() === 4)
+      intercept[IllegalArgumentException] {
+        spark.read.option("readChangeFeed", "true")
+          .option("startingVersion", 0).option("startingTimestamp", "0")
+          .table("cdct.db.feed").collect()
+      }
     }
   }
 

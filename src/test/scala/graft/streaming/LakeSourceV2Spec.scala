@@ -9,9 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.lake.LakeTable
 
-/** Custom MicroBatchStream over the commit log (VERDICT r01 #9): exact
-  * version-range batches, DML-safe (no re-emission of rewritten rows),
-  * startingVersion.
+/** The commit-log stream source (VERDICT r01 #9): exact version-range
+  * batches, DML-safe (no re-emission of rewritten rows), startingVersion,
+  * by path and by catalog name.
   */
 class LakeSourceV2Spec extends AnyFunSuite {
 
@@ -272,82 +272,82 @@ class LakeSourceV2Spec extends AnyFunSuite {
 
   test("spark.readStream.table streams a catalog lake table") {
     val wh = Files.createTempDirectory("lake-rst-wh-").toString
-    spark.conf.set("spark.sql.catalog.rst", "org.apache.spark.sql.graft.LakeCatalog")
-    spark.conf.set("spark.sql.catalog.rst.warehouse", wh)
-    Files.createDirectories(java.nio.file.Paths.get(s"$wh/db"))
-    val t = LakeTable.create(spark, s"$wh/db/s",
-      Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    TestSpark.withCatalog("rst", wh) {
+      Files.createDirectories(java.nio.file.Paths.get(s"$wh/db"))
+      val t = LakeTable.create(spark, s"$wh/db/s",
+        Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
 
-    val q = spark.readStream.table("rst.db.s").writeStream
-      .format("memory").queryName("lake_rst")
-      .option("checkpointLocation",
-        Files.createTempDirectory("lake-rst-ckpt-").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      def seen: Set[(Long, String)] =
-        spark.table("lake_rst").as[(Long, String)].collect().toSet
-      assert(seen === Set((1L, "a"), (2L, "b")))
-      t.append(Seq((3L, "c")).toDF("id", "v"))
-      q.processAllAvailable()
-      assert(seen === Set((1L, "a"), (2L, "b"), (3L, "c")))
-      // DML is a change commit: skipped, not re-emitted
-      t.delete($"id" === 1L, useDvs = false)
-      t.append(Seq((4L, "d")).toDF("id", "v"))
-      q.processAllAvailable()
-      assert(seen === Set((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
-    } finally q.stop()
-    // batch reads through the same catalog still work (scan wrapper)
-    assert(spark.table("rst.db.s").count() === 3)
+      val q = spark.readStream.table("rst.db.s").writeStream
+        .format("memory").queryName("lake_rst")
+        .option("checkpointLocation",
+          Files.createTempDirectory("lake-rst-ckpt-").toString)
+        .start()
+      try {
+        q.processAllAvailable()
+        def seen: Set[(Long, String)] =
+          spark.table("lake_rst").as[(Long, String)].collect().toSet
+        assert(seen === Set((1L, "a"), (2L, "b")))
+        t.append(Seq((3L, "c")).toDF("id", "v"))
+        q.processAllAvailable()
+        assert(seen === Set((1L, "a"), (2L, "b"), (3L, "c")))
+        // DML is a change commit: skipped, not re-emitted
+        t.delete($"id" === 1L, useDvs = false)
+        t.append(Seq((4L, "d")).toDF("id", "v"))
+        q.processAllAvailable()
+        assert(seen === Set((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
+      } finally q.stop()
+      // batch reads through the same catalog still work
+      assert(spark.table("rst.db.s").count() === 3)
+    }
   }
 
   test("readStream.table with readChangeFeed streams the CDF") {
     val wh = Files.createTempDirectory("lake-rstcdf-wh-").toString
-    spark.conf.set("spark.sql.catalog.rstc", "org.apache.spark.sql.graft.LakeCatalog")
-    spark.conf.set("spark.sql.catalog.rstc.warehouse", wh)
-    Files.createDirectories(java.nio.file.Paths.get(s"$wh/db"))
-    val t = LakeTable.create(spark, s"$wh/db/cdf",
-      Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
-      properties = Map(graft.lake.Cdc.PROP -> "true"))
-    val q = spark.readStream
-      .option("readChangeFeed", "true")
-      .table("rstc.db.cdf")
-      .writeStream
-      .format("memory").queryName("lake_rstcdf")
-      .option("checkpointLocation",
-        Files.createTempDirectory("lake-rstcdf-ckpt-").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      def seen: Set[(Long, String, String, Long)] =
-        spark.table("lake_rstcdf")
-          .select("id", "v", graft.lake.Cdc.CHANGE_TYPE, "_commit_version")
-          .as[(Long, String, String, Long)].collect().toSet
-      assert(seen === Set((1L, "a", "insert", 0L), (2L, "b", "insert", 0L)))
-      t.delete($"id" === 1L) // v1
-      q.processAllAvailable()
-      assert(seen.contains((1L, "a", "delete", 1L)))
-    } finally q.stop()
+    TestSpark.withCatalog("rstc", wh) {
+      Files.createDirectories(java.nio.file.Paths.get(s"$wh/db"))
+      val t = LakeTable.create(spark, s"$wh/db/cdf",
+        Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
+        properties = Map(graft.lake.Cdc.PROP -> "true"))
+      val q = spark.readStream
+        .option("readChangeFeed", "true")
+        .table("rstc.db.cdf")
+        .writeStream
+        .format("memory").queryName("lake_rstcdf")
+        .option("checkpointLocation",
+          Files.createTempDirectory("lake-rstcdf-ckpt-").toString)
+        .start()
+      try {
+        q.processAllAvailable()
+        def seen: Set[(Long, String, String, Long)] =
+          spark.table("lake_rstcdf")
+            .select("id", "v", graft.lake.Cdc.CHANGE_TYPE, "_commit_version")
+            .as[(Long, String, String, Long)].collect().toSet
+        assert(seen === Set((1L, "a", "insert", 0L), (2L, "b", "insert", 0L)))
+        t.delete($"id" === 1L) // v1
+        q.processAllAvailable()
+        assert(seen.contains((1L, "a", "delete", 1L)))
+      } finally q.stop()
+    }
   }
 
   test("startingVersion option applies to readStream.table") {
     val wh = Files.createTempDirectory("lake-rst2-wh-").toString
-    spark.conf.set("spark.sql.catalog.rst2", "org.apache.spark.sql.graft.LakeCatalog")
-    spark.conf.set("spark.sql.catalog.rst2.warehouse", wh)
-    Files.createDirectories(java.nio.file.Paths.get(s"$wh/db"))
-    val t = LakeTable.create(spark, s"$wh/db/s2", Seq((1L, "a")).toDF("id", "v"))
-    t.append(Seq((2L, "b")).toDF("id", "v")) // v1
-    val q = spark.readStream.option("startingVersion", 1)
-      .table("rst2.db.s2").writeStream
-      .format("memory").queryName("lake_rst2")
-      .option("checkpointLocation",
-        Files.createTempDirectory("lake-rst2-ckpt-").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      assert(spark.table("lake_rst2").as[(Long, String)].collect().toSet ===
-        Set((2L, "b"))) // v0's rows are before the starting version
-    } finally q.stop()
+    TestSpark.withCatalog("rst2", wh) {
+      Files.createDirectories(java.nio.file.Paths.get(s"$wh/db"))
+      val t = LakeTable.create(spark, s"$wh/db/s2", Seq((1L, "a")).toDF("id", "v"))
+      t.append(Seq((2L, "b")).toDF("id", "v")) // v1
+      val q = spark.readStream.option("startingVersion", 1)
+        .table("rst2.db.s2").writeStream
+        .format("memory").queryName("lake_rst2")
+        .option("checkpointLocation",
+          Files.createTempDirectory("lake-rst2-ckpt-").toString)
+        .start()
+      try {
+        q.processAllAvailable()
+        assert(spark.table("lake_rst2").as[(Long, String)].collect().toSet ===
+          Set((2L, "b"))) // v0's rows are before the starting version
+      } finally q.stop()
+    }
   }
 
   test("auto-compaction REORGs are invisible to the table stream") {
@@ -381,6 +381,32 @@ class LakeSourceV2Spec extends AnyFunSuite {
       assert(seen.sorted === Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")),
         "the stream keeps tailing appends after the REORG")
     } finally q.stop()
+  }
+
+  test("table and change-feed streams read files of two partition specs as batch does") {
+    // v0 unpartitioned files, v2 files under p=K dirs; p sits mid-schema
+    val path = Files.createTempDirectory("lake-src-pevo-").toString
+    def rows(lo: Long, hi: Long) =
+      spark.range(lo, hi).select($"id", ($"id" % 3).as("p"), ($"id" * 2).as("v"))
+    val t = LakeTable.create(spark, path, rows(0, 30),
+      properties = Map(graft.lake.Cdc.PROP -> "true"))
+    t.alterPartitionSpec(Seq("p")) // v1
+    t.append(rows(30, 60)) // v2
+    assert(t.snapshot.files.map(_.partitionValues.keySet).distinct.size === 2)
+    def all(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    def streamed(df: DataFrame, name: String): Seq[String] = {
+      val q = df.writeStream.format("memory").queryName(name)
+        .option("checkpointLocation",
+          Files.createTempDirectory("lake-src-pevo-ckpt-").toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination() finally q.stop()
+      all(spark.table(name))
+    }
+    assert(all(t.toDF) === all(rows(0, 60)))
+    assert(streamed(readLake(path), "lake_src_pevo") === all(t.toDF))
+    assert(streamed(readLake(path, "readChangeFeed" -> "true"), "lake_src_pevo_cdf") ===
+      all(t.tableChanges(0)))
   }
 
   test("a restart from a checkpoint refuses a recreated table generation") {
