@@ -6,6 +6,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -2754,7 +2755,11 @@ object LakeTable {
   /** Schema enforcement / evolution (§1.2): align `df` to the table
     * schema. Missing table columns → null; extra df columns → error
     * unless mergeSchema (then the schema evolves, new cols appended);
-    * type mismatches cast when Spark allows, else error.
+    * type mismatches cast when Spark allows, else error. A column whose
+    * type differs only in nullability is not cast (Spark refuses a cast
+    * that only tightens it, and a file scan reads every array element
+    * nullable); instead a row with a null inside it where the table
+    * declares its values non-null fails the write.
     */
   private[lake] def align(
       df: DataFrame,
@@ -2776,11 +2781,45 @@ object LakeTable {
     }
     val newSchema = StructType(tableSchema.fields ++ extra)
     val dfNames = df.schema.fieldNames.toSet
-    val aligned = df.select(newSchema.fields.map { f =>
-      if (dfNames.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
+    def sameButNulls(f: StructField) = dfNames.contains(f.name) &&
+      DataTypeUtils.equalsIgnoreNullability(df.schema(f.name).dataType, f.dataType)
+    val selected = df.select(newSchema.fields.map { f =>
+      if (sameButNulls(f)) col(f.name).as(f.name)
+      else if (dfNames.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }.toSeq: _*)
+    val aligned = tableSchema.fields.filter(sameButNulls).foldLeft(selected) { (d, f) =>
+      nullInside(f.dataType, df.schema(f.name).dataType).fold(d) { hasNull =>
+        d.where(when(hasNull(col(f.name)), raise_error(lit(
+          s"NULL inside column ${f.name}, whose table type declares those values non-null")))
+          .otherwise(lit(true)))
+      }
+    }
     (aligned, newSchema)
+  }
+
+  /** A test for a value of type `from` (equal to `to` but for
+    * nullability) that is true when a nested element, map value or struct
+    * field is null where `to` declares it non-null; None when `from` can
+    * hold no such null. */
+  private def nullInside(to: DataType, from: DataType): Option[Column => Column] = {
+    def or(ps: Option[Column => Column]*): Option[Column => Column] =
+      ps.flatten.reduceOption((a, b) => c => a(c) || b(c))
+    def slot(declared: Boolean, given: Boolean, t: DataType, f: DataType) =
+      or(if (given && !declared) Some((c: Column) => c.isNull) else None, nullInside(t, f))
+    (to, from) match {
+      case (ArrayType(t, tn), ArrayType(f, fn)) =>
+        slot(tn, fn, t, f).map(p => (c: Column) => exists(c, p))
+      case (MapType(tk, tv, tn), MapType(fk, fv, fn)) =>
+        or(nullInside(tk, fk).map(p => (c: Column) => exists(map_keys(c), p)),
+          slot(tn, fn, tv, fv).map(p => (c: Column) => exists(map_values(c), p)))
+      case (StructType(tfs), StructType(ffs)) =>
+        or(tfs.zip(ffs).map { case (t, f) =>
+          slot(t.nullable, f.nullable, t.dataType, f.dataType)
+            .map(p => (c: Column) => p(c.getField(t.name)))
+        }: _*).map(p => (c: Column) => c.isNotNull && p(c))
+      case _ => None
+    }
   }
 
   /** Write `df` as parquet files at their final (partitioned) places in

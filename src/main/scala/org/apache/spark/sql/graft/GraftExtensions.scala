@@ -29,6 +29,7 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     e.injectPostHocResolutionRule(session => new LakeDvReadRule(session))
     e.injectOptimizerRule(session => new LakeConstraintPruneRule(session))
     e.injectCheckRule(session => new BucketMismatchGuard(session))
+    e.injectColumnar(_ => new ParamLiteral.Columnar)
   }
 }
 

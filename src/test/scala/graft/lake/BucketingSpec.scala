@@ -18,12 +18,14 @@ class BucketingSpec extends AnyFunSuite {
 
   private lazy val warehouse: String = {
     val w = Files.createTempDirectory("bucket-wh-").toString
-    spark.conf.set("spark.sql.catalog.blake",
-      "org.apache.spark.sql.graft.LakeCatalog")
-    spark.conf.set("spark.sql.catalog.blake.warehouse", w)
     Files.createDirectories(java.nio.file.Paths.get(s"$w/db"))
     w
   }
+
+  // registered around every test through TestSpark.withCatalog, which
+  // unsets its keys afterwards, so no later suite sees the catalog
+  override def withFixture(test: NoArgTest) =
+    TestSpark.withCatalog("blake", warehouse)(super.withFixture(test))
 
   private def ordersDF = (1L to 200L).map(i =>
     (i, s"cust${i % 40}", i * 1.5)).toDF("order_id", "cust", "amount")

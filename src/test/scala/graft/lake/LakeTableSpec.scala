@@ -56,6 +56,51 @@ class LakeTableSpec extends AnyFunSuite {
     assert(t.toDF.where($"id" === 8 && $"amount".isNull).count() === 1)
   }
 
+  test("a lake read appends back into a table whose array elements are declared non-null") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("v", ArrayType(FloatType, containsNull = false))))
+    val rows = Seq(Row(1L, Seq(1.5f, -0.5f)), Row(2L, Seq.empty[Float]), Row(3L, null))
+    val t = LakeTable.create(spark, tmpDir(),
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
+    // a file scan reads the elements as nullable: ARRAY<FLOAT> → ARRAY<FLOAT NOT NULL>
+    assert(t.toDF.schema("v").dataType === ArrayType(FloatType, containsNull = true))
+    t.append(t.toDF)
+    assert(t.snapshot.schema("v").dataType === ArrayType(FloatType, containsNull = false))
+    def sorted(rs: Seq[Row]) = rs.map(r => (r.getLong(0), Option(r.getSeq[Float](1))))
+      .sortBy(_._1)
+    assert(sorted(t.toDF.collect().toSeq) === sorted(rows ++ rows))
+  }
+
+  test("a null where the table declares nested values non-null fails the write") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    def frame(schema: StructType, rows: Row*) =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    def withV(dt: DataType) = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("v", dt)))
+    def elem(nullable: Boolean) = StructType(Seq(StructField("x", FloatType, nullable)))
+    // declared type, a frame row with a null where it declares none, a legal row
+    val cases = Seq[(DataType, DataType, Row, Row)](
+      (ArrayType(FloatType, containsNull = false), ArrayType(FloatType),
+        Row(1L, Seq[java.lang.Float](1f, null)), Row(1L, Seq(1f))),
+      (MapType(StringType, FloatType, valueContainsNull = false), MapType(StringType, FloatType),
+        Row(1L, Map("a" -> null)), Row(1L, Map("a" -> 1f))),
+      (ArrayType(elem(false)), ArrayType(elem(true)),
+        Row(1L, Seq(Row(null))), Row(1L, Seq(null, Row(2f)))))
+    cases.foreach { case (declared, given, bad, good) =>
+      val t = LakeTable.create(spark, tmpDir(), frame(withV(declared), good))
+      val err = intercept[Exception](t.append(frame(withV(given), bad)))
+      def messages(e: Throwable): Seq[String] =
+        if (e == null) Nil else String.valueOf(e.getMessage) +: messages(e.getCause)
+      assert(messages(err).exists(_.contains("NULL inside column v")), s"$declared: $err")
+      assert(t.version === 0L, declared)
+      t.append(frame(withV(given), good))
+      assert(t.toDF.count() === 2L, declared)
+    }
+  }
+
   test("partitioned table: layout, pruning, partition values") {
     val path = tmpDir()
     val t = LakeTable.create(spark, path, sampleDF, partitionBy = Seq("state"))

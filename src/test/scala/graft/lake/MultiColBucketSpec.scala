@@ -30,8 +30,6 @@ class MultiColBucketSpec extends AnyFunSuite {
 
   private lazy val warehouse: String = {
     val w = Files.createTempDirectory("mcb-wh-").toString
-    spark.conf.set("spark.sql.catalog.mcb", "org.apache.spark.sql.graft.LakeCatalog")
-    spark.conf.set("spark.sql.catalog.mcb.warehouse", w)
     Files.createDirectories(java.nio.file.Paths.get(s"$w/db"))
     val a = (1L to 200L).map(i => (i % 10, i % 7, i * 1.0)).toDF("k1", "k2", "v")
     val b = (1L to 300L).map(i => (i % 10, i % 7, i * 2.0)).toDF("k1", "k2", "w")
@@ -39,6 +37,11 @@ class MultiColBucketSpec extends AnyFunSuite {
     LakeTable.create(spark, s"$w/db/b", b, bucketBy = Seq("k1", "k2"), numBuckets = 4)
     w
   }
+
+  // registered around every test through TestSpark.withCatalog, which
+  // unsets its keys afterwards, so no later suite sees the catalog
+  override def withFixture(test: NoArgTest) =
+    TestSpark.withCatalog("mcb", warehouse)(super.withFixture(test))
 
   private def withNoBroadcast[T](body: => T): T = {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

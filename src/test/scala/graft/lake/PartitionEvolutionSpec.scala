@@ -87,18 +87,17 @@ class PartitionEvolutionSpec extends AnyFunSuite {
 
   test("SQL surface: ALTER TABLE ... SET PARTITION SPEC (p) / NONE") {
     val w = Files.createTempDirectory("pevo-wh-").toString
-    spark.conf.set("spark.sql.catalog.pevolake",
-      "org.apache.spark.sql.graft.LakeCatalog")
-    spark.conf.set("spark.sql.catalog.pevolake.warehouse", w)
-    Files.createDirectories(java.nio.file.Paths.get(s"$w/db"))
-    val t = LakeTable.create(spark, s"$w/db/pevo_t", batch(0, 100))
-    spark.sql("ALTER TABLE pevolake.db.pevo_t SET PARTITION SPEC (p)")
-    assert(t.snapshot.metaData.partitionColumns === Seq("p"))
-    t.append(batch(100, 200))
-    assert(spark.sql("SELECT count(*) FROM pevolake.db.pevo_t WHERE p = 3")
-      .head().getLong(0) === 20)
-    spark.sql("ALTER TABLE pevolake.db.pevo_t SET PARTITION SPEC NONE")
-    assert(t.snapshot.metaData.partitionColumns === Seq.empty)
+    TestSpark.withCatalog("pevolake", w) {
+      Files.createDirectories(java.nio.file.Paths.get(s"$w/db"))
+      val t = LakeTable.create(spark, s"$w/db/pevo_t", batch(0, 100))
+      spark.sql("ALTER TABLE pevolake.db.pevo_t SET PARTITION SPEC (p)")
+      assert(t.snapshot.metaData.partitionColumns === Seq("p"))
+      t.append(batch(100, 200))
+      assert(spark.sql("SELECT count(*) FROM pevolake.db.pevo_t WHERE p = 3")
+        .head().getLong(0) === 20)
+      spark.sql("ALTER TABLE pevolake.db.pevo_t SET PARTITION SPEC NONE")
+      assert(t.snapshot.metaData.partitionColumns === Seq.empty)
+    }
   }
 
   test("reorganize rewrites only old-generation files into the current spec") {
@@ -148,22 +147,21 @@ class PartitionEvolutionSpec extends AnyFunSuite {
 
   test("SQL surface: OPTIMIZE ... REORGANIZE") {
     val w = Files.createTempDirectory("pevo-wh2-").toString
-    spark.conf.set("spark.sql.catalog.pevolake2",
-      "org.apache.spark.sql.graft.LakeCatalog")
-    spark.conf.set("spark.sql.catalog.pevolake2.warehouse", w)
-    Files.createDirectories(java.nio.file.Paths.get(s"$w/db"))
-    val t = LakeTable.create(spark, s"$w/db/pevo_r", batch(0, 100))
-    spark.sql("ALTER TABLE pevolake2.db.pevo_r SET PARTITION SPEC (p)")
-    t.append(batch(100, 200))
-    val n = spark.sql("OPTIMIZE pevolake2.db.pevo_r REORGANIZE")
-      .head().getLong(0)
-    assert(n === 100L)
-    assert(t.snapshot.files.forall(_.partitionValues.keySet == Set("p")),
-      s"mixed layouts after SQL REORGANIZE: " +
-        t.snapshot.files
-          .map(f => s"${f.path}=${f.partitionValues.keySet.mkString("+")}")
-          .mkString(", "))
-    assert(spark.sql("SELECT count(*) FROM pevolake2.db.pevo_r").head().getLong(0) === 200)
+    TestSpark.withCatalog("pevolake2", w) {
+      Files.createDirectories(java.nio.file.Paths.get(s"$w/db"))
+      val t = LakeTable.create(spark, s"$w/db/pevo_r", batch(0, 100))
+      spark.sql("ALTER TABLE pevolake2.db.pevo_r SET PARTITION SPEC (p)")
+      t.append(batch(100, 200))
+      val n = spark.sql("OPTIMIZE pevolake2.db.pevo_r REORGANIZE")
+        .head().getLong(0)
+      assert(n === 100L)
+      assert(t.snapshot.files.forall(_.partitionValues.keySet == Set("p")),
+        s"mixed layouts after SQL REORGANIZE: " +
+          t.snapshot.files
+            .map(f => s"${f.path}=${f.partitionValues.keySet.mkString("+")}")
+            .mkString(", "))
+      assert(spark.sql("SELECT count(*) FROM pevolake2.db.pevo_r").head().getLong(0) === 200)
+    }
   }
 
   test("validation: unknown and duplicate columns are rejected") {

@@ -34,11 +34,14 @@ class SpjTypeFuzzSpec extends AnyFunSuite {
 
   private lazy val warehouse: String = {
     val w = Files.createTempDirectory("spjf-wh-").toString
-    spark.conf.set("spark.sql.catalog.spjf", "org.apache.spark.sql.graft.LakeCatalog")
-    spark.conf.set("spark.sql.catalog.spjf.warehouse", w)
     Files.createDirectories(java.nio.file.Paths.get(s"$w/db"))
     w
   }
+
+  // registered around every test through TestSpark.withCatalog, which
+  // unsets its keys afterwards, so no later suite sees the catalog
+  override def withFixture(test: NoArgTest) =
+    TestSpark.withCatalog("spjf", warehouse)(super.withFixture(test))
 
   private def keyed[K](name: String, mk: Int => K)(implicit
       enc: org.apache.spark.sql.Encoder[(K, Double)]): Unit = {

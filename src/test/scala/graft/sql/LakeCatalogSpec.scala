@@ -21,9 +21,6 @@ class LakeCatalogSpec extends AnyFunSuite {
 
   private lazy val warehouse: String = {
     val w = Files.createTempDirectory("lake-wh-").toString
-    spark.conf.set("spark.sql.catalog.lake",
-      "org.apache.spark.sql.graft.LakeCatalog")
-    spark.conf.set("spark.sql.catalog.lake.warehouse", w)
     Files.createDirectories(java.nio.file.Paths.get(s"$w/bronze"))
     val t = LakeTable.create(spark, s"$w/bronze/orders",
       Seq((1L, "CA", 10.0), (2L, "NY", 20.0), (3L, "CA", 30.0))
@@ -32,6 +29,11 @@ class LakeCatalogSpec extends AnyFunSuite {
     t.append(Seq((4L, "TX", 40.0)).toDF("id", "state", "amount"))
     w
   }
+
+  // registered around every test through TestSpark.withCatalog, which
+  // unsets its keys afterwards, so no later suite sees the catalog
+  override def withFixture(test: NoArgTest) =
+    TestSpark.withCatalog("lake", warehouse)(super.withFixture(test))
 
   test("SELECT through the catalog") {
     warehouse
